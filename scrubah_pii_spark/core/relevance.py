@@ -8,8 +8,9 @@ From-scratch Python implementation of the scoring semantics in
   medical density          :216-229
   generation (recency)     :262-290
   score arithmetic/verdict :297-385
-This pure function is the F1>=0.99 oracle; the Spark-native column program in
-``functions/relevance_expr.py`` must agree with it exactly.
+This pure function is the F1>=0.99 oracle, and it is also the kernel the
+Spark paths run: the flagship's fused doc-features UDF and the standalone
+relevance UDF (``operators/scrub_op.py``) call it per document.
 """
 
 from __future__ import annotations

@@ -33,8 +33,7 @@ from .functions.hashing_expr import (
     normalize_for_hashing_expr,
 )
 from .functions.langid_expr import langid_columns
-from .functions.quality_expr import char_count, quality_columns, word_count
-from .functions.relevance_expr import relevance_columns
+from .functions.quality_expr import quality_columns
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -153,9 +152,9 @@ FROM sc
 
 def q_relevance_label(spark, sf_dir):
     # Fused Arrow kernel (operators/scrub_op.py:make_relevance_metrics_udf) —
-    # same pure function as the flagship/oracle; replaces the ~125-term
-    # contains-expression program (functions/relevance_expr.py), the measured
-    # anti-scaling path (plans/pipeline.py:10-16).
+    # same pure function as the flagship/oracle; replaces a ~125-term native
+    # contains-expression program, the measured anti-scaling path
+    # (plans/pipeline.py:10-16).
     from .operators.scrub_op import make_relevance_metrics_udf
 
     df = _spread(_docs(spark, sf_dir))
@@ -1713,7 +1712,7 @@ def q_pipeline_flagship(spark, sf_dir):
         F.col("text"),
         F.col("lang"),
     )
-    res = run_pipeline(df, with_perplexity=False)
+    res = run_pipeline(df)
     return res.output.select(
         "url", "scrubbed_text", "pii_count", "lang_pred",
         F.round("quality_score", 6).alias("quality_score"),

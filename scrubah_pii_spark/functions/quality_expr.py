@@ -43,24 +43,3 @@ def quality_columns(text: Column) -> dict:
         "quality_score": score,
     }
 
-
-def quality_pass(text: Column, min_quality: float = 0.3) -> Column:
-    return quality_columns(text)["quality_score"] >= min_quality
-
-
-def repetition_ratio_expr(text: Column, n: int = 3) -> Column:
-    """Duplicated word-trigram fraction via native array ops: split -> build
-    n-gram strings with transform over indices -> distinct ratio."""
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: F.length(w) > 0)
-    cnt = F.size(words)
-    grams = F.when(
-        cnt >= n,
-        F.transform(
-            F.sequence(F.lit(0), cnt - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        ),
-    ).otherwise(F.array())
-    return F.when(
-        F.size(grams) > 0,
-        1.0 - F.size(F.array_distinct(grams)).cast("double") / F.size(grams).cast("double"),
-    ).otherwise(F.lit(0.0))

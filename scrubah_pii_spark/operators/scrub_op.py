@@ -47,32 +47,6 @@ def scrub_udf(texts: pd.Series) -> pd.DataFrame:
     )
 
 
-def make_scrub_udf(scrub_mode: str = "worker_then_effect"):
-    """Mode-selected scrub UDF — the same switch label_stage's fused kernel
-    applies (App.tsx:123-151 production composition vs Effect-only rules).
-    The streaming path MUST use this with cfg.scrub.scrub_mode so both paths
-    scrub identically (round-5 streaming/batch equivalence test caught the
-    Effect-only default diverging from the batch default)."""
-    scrub_fn = (
-        scrub.scrub_text_production
-        if scrub_mode == "worker_then_effect"
-        else scrub.scrub_text
-    )
-
-    @F.pandas_udf(SCRUB_RESULT_TYPE)
-    def _scrub_udf(texts: pd.Series) -> pd.DataFrame:
-        outs = [scrub_fn(t if t is not None else "") for t in texts]
-        return pd.DataFrame(
-            {
-                "scrubbed_text": [o.text for o in outs],
-                "replacements": [o.replacements for o in outs],
-                "pii_count": [o.count for o in outs],
-            }
-        )
-
-    return _scrub_udf
-
-
 @F.pandas_udf(LongType())
 def simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(
@@ -84,11 +58,6 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
 @F.pandas_udf(DoubleType())
 def log_perplexity_udf(texts: pd.Series) -> pd.Series:
     return pd.Series([perplexity.log_perplexity(t or "") for t in texts])
-
-
-@F.pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([extract_text(h) for h in html])
 
 
 @F.pandas_udf(StringType())
@@ -199,40 +168,19 @@ def _doc_features_batch(texts, generations, keep_langs, min_quality,
     return out
 
 
-def make_doc_features_udf(
-    keep_langs=("en",),
-    min_quality: float = 0.3,
-    scrub_mode: str = "worker_then_effect",
-):
-    langs = tuple(keep_langs)
-
-    @F.pandas_udf(DOC_FEATURES_TYPE)
-    def doc_features_udf(texts: pd.Series, generations: pd.Series) -> pd.DataFrame:
-        data = _doc_features_batch(texts, generations, langs, min_quality, scrub_mode)
-        df = pd.DataFrame({k: v for k, v in data.items() if k != "simhash"})
-        # nullable Int64, NOT pd.DataFrame's inferred dtype: a python list
-        # mixing int and None infers float64, which silently truncates
-        # int64 simhashes past 2^53 — and only in batches that contain a
-        # gated (None) doc, so values depended on batch composition
-        df["simhash"] = pd.array(data["simhash"], dtype="Int64")
-        return df
-
-    return doc_features_udf
-
-
 def make_doc_features_extract_udf(
     keep_langs=("en",),
     min_quality: float = 0.3,
     scrub_mode: str = "worker_then_effect",
 ):
-    """Extraction-fused variant: (text, html, generation) -> features in ONE
-    ArrowEvalPython node. The separate extract_text_udf stage cost a second
-    Arrow round-trip whose JVM-side queue buffered every passthrough column
-    a second time — pure memory traffic, measured as part of the 4N-side
-    bandwidth tax (BENCH/BASELINE.md round-5). html arrives pre-masked NULL
-    for rows that already carry text, so its bytes never cross Arrow for
-    them; extract_text(None) == "" keeps null/null rows identical to the
-    two-stage path."""
+    """The fused per-doc UDF: (text, html, generation) -> features in ONE
+    ArrowEvalPython node, extraction included. A separate extract stage cost
+    a second Arrow round-trip whose JVM-side queue buffered every
+    passthrough column a second time — pure memory traffic, measured as part
+    of the 4N-side bandwidth tax (BENCH/BASELINE.md round-5). html arrives
+    pre-masked NULL for rows that already carry text, so its bytes never
+    cross Arrow for them; a row with neither text nor html is scored as the
+    empty document (extract_text(None) == "")."""
     langs = tuple(keep_langs)
 
     @F.pandas_udf(DOC_FEATURES_TYPE)
@@ -247,7 +195,10 @@ def make_doc_features_extract_udf(
             merged, generations, langs, min_quality, scrub_mode
         )
         df = pd.DataFrame({k: v for k, v in data.items() if k != "simhash"})
-        # Int64, same trap as doc_features_udf (NOTES_r4 #6)
+        # nullable Int64, NOT pd.DataFrame's inferred dtype: a python list
+        # mixing int and None infers float64, which silently truncates
+        # int64 simhashes past 2^53 — and only in batches that contain a
+        # gated (None) doc, so values depended on batch composition
         df["simhash"] = pd.array(data["simhash"], dtype="Int64")
         return df
 
@@ -270,7 +221,7 @@ QUALITY_METRICS_TYPE = StructType(
 def quality_metrics_udf(texts: pd.Series) -> pd.DataFrame:
     """Fused quality gate (compressionPipeline.effect.ts:102-135) as one
     Arrow pass over module-compiled regexes — the same pure kernel the
-    flagship's doc_features_udf runs, exposed standalone for the bench
+    flagship's fused doc-features UDF runs, exposed standalone for the bench
     queries. Replaces the contains-expression program, which measured
     anti-scaling past ~8 threads/JVM from string-allocation churn."""
     from ..core import quality as _quality

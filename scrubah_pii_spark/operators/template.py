@@ -251,7 +251,7 @@ def _ngram_corpus_raw(
     return (
         corpus.withColumn("position", pos_expr)
         .withColumn("template_type", _classify_type_udf()("sample", "position"))
-        .drop("_docs", "_avg_lines")
+        .drop("_avg_lines")
     )
 
 

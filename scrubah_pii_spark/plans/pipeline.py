@@ -29,11 +29,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
-from ..functions.relevance_expr import generation_from_ts
 from ..functions.hashing_expr import doc_type_expr
 from ..operators.dedup import dedup_verdicts_fused
 from ..operators.scrub_op import (
@@ -54,11 +53,17 @@ def _host(url_col):
     return F.regexp_extract(url_col, r"https?://([^/]+)/", 1)
 
 
+def generation_from_ts(warc_ts: Column, current_year: int) -> Column:
+    """Pipeline recency rule: years between crawl year and the (frozen)
+    current year. Replaces the reference's filename-date parsing — webpages
+    have warc_ts, not dated filenames (FIXTURES.md §1)."""
+    return F.greatest(F.lit(0), F.lit(current_year) - F.year(warc_ts))
+
+
 def label_stage(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
     use_crawl_lang: bool = False,
-    with_perplexity: bool = True,
 ) -> DataFrame:
     """Per-document half of the pipeline: extract -> fused scoring/scrub ->
     gates -> doc typing. Every column is a row-local function of the input
@@ -66,11 +71,16 @@ def label_stage(
     the same rows — that row-locality is what makes per-partition
     checkpoint-resume (plans.resume) byte-identical to a single run. The
     corpus-global half (dedup, leak check, sinks) lives in
-    finish_pipeline."""
+    finish_pipeline.
+
+    The recency generation that relevance scoring reads comes from an input
+    `generation` column when there is one (streaming pins it to 2);
+    otherwise it is derived from warc_ts (generation_from_ts). This is the
+    same column-presence rule as for `html` and `text`."""
     spark = df.sparkSession
 
     # -- extract (html -> text) is FUSED into the doc-features UDF (round 5):
-    # the previous standalone extract_text_udf stage was a second
+    # the previous standalone extract UDF stage was a second
     # ArrowEvalPython node whose JVM queue re-buffered every passthrough
     # column — pure memory traffic at 32 cores. The inputs are masked the
     # same way: rows that already carry text ship a NULL html across Arrow
@@ -124,9 +134,11 @@ def label_stage(
     # into native-expression stages + separate UDFs was 3-5x slower end to
     # end and anti-scaled past ~8 JVM threads (string-allocation churn); the
     # fused batch-Python stage scales near-linearly with cores.
-    df = df.withColumn(
-        "generation", generation_from_ts(F.col("warc_ts"), cfg.relevance.current_year)
-    )
+    if "generation" not in df.columns:
+        df = df.withColumn(
+            "generation",
+            generation_from_ts(F.col("warc_ts"), cfg.relevance.current_year),
+        )
     feats = make_doc_features_extract_udf(
         cfg.langid.keep_langs, cfg.quality.ocr_min_quality, cfg.scrub.scrub_mode
     )
@@ -166,10 +178,9 @@ def run_pipeline(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
     use_crawl_lang: bool = False,
-    with_perplexity: bool = True,
 ) -> PipelineResult:
     """df: (url, warc_ts, html, text?, lang?) — the input-hint table."""
-    df = label_stage(df, cfg, use_crawl_lang, with_perplexity)
+    df = label_stage(df, cfg, use_crawl_lang)
 
     # Stage barrier: persist the fully-labeled frame. Two reasons:
     #  (1) dedup, output, metrics and lineage all consume it — without the

@@ -46,7 +46,6 @@ def label_stage_resumable(
     batch_dates: int = 8,
     fail_after_batches: int | None = None,
     use_crawl_lang: bool = False,
-    with_perplexity: bool = True,
     validate_keys: bool = False,
 ) -> int:
     """Run label_stage over every crawl_date partition NOT yet in the
@@ -59,8 +58,8 @@ def label_stage_resumable(
     input rows sharing it would be collapsed too — pass validate_keys=True
     to fail fast on such input (one slim-key shuffle; off by default since
     at 100 TB the upstream WARC reader already guarantees it).
-    use_crawl_lang / with_perplexity forward to label_stage so a resumed run
-    labels with the SAME flags as the run it restarts."""
+    use_crawl_lang forwards to label_stage so a resumed run labels with the
+    SAME flag as the run it restarts."""
     spark = input_df.sparkSession
     if validate_keys:
         dup = (
@@ -89,9 +88,9 @@ def label_stage_resumable(
                 f"injected failure before batch {bi} ({len(batches) - bi} left)"
             )
         sub = part_in.filter(F.col("crawl_date").isin(batch)).drop("crawl_date")
-        labeled = label_stage(
-            sub, cfg, use_crawl_lang, with_perplexity
-        ).withColumn("crawl_date", F.to_date("warc_ts"))
+        labeled = label_stage(sub, cfg, use_crawl_lang).withColumn(
+            "crawl_date", F.to_date("warc_ts")
+        )
         labeled.write.mode("append").partitionBy("crawl_date").parquet(stage_path)
         # commit AFTER the data write: the manifest is the source of truth
         write_manifest(
@@ -133,17 +132,15 @@ def resume_pipeline(
     cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
     batch_dates: int = 8,
     use_crawl_lang: bool = False,
-    with_perplexity: bool = True,
 ) -> PipelineResult:
     """Complete (or restart) the flagship run: finish any unfinished label
     partitions, then run the corpus-global half over the checkpointed stage
     table. Idempotent — calling again after success is a no-op label pass
-    plus a deterministic re-finish. Labeling flags forward to label_stage so
-    a resumed run reproduces the run_pipeline(use_crawl_lang=...,
-    with_perplexity=...) it restarts."""
+    plus a deterministic re-finish. use_crawl_lang forwards to label_stage
+    so a resumed run reproduces the run_pipeline(use_crawl_lang=...) it
+    restarts."""
     label_stage_resumable(
-        input_df, warehouse, cfg, batch_dates,
-        use_crawl_lang=use_crawl_lang, with_perplexity=with_perplexity,
+        input_df, warehouse, cfg, batch_dates, use_crawl_lang=use_crawl_lang
     )
     labeled = read_stage(input_df.sparkSession, warehouse)
     return finish_pipeline(labeled, cfg)

@@ -1,17 +1,24 @@
-"""Structured Streaming variant of the quality-filter + scrub pipeline.
+"""Structured Streaming variant of the flagship pipeline.
 
 The reference has NO streaming (SURVEY §2.10) — its incremental behavior is
 document-at-a-time persistence. This module is the Spark-native incremental
 ingestion path for continuously-arriving crawl data:
 
   readStream (parquet dir) -> watermark on warc_ts -> dropDuplicates(url)
-  -> the same native gates + scrub UDF (stateless stages compose unchanged)
-  -> writeStream with checkpointLocation (exactly-once per micro-batch)
+  -> plans.pipeline.label_stage (the batch per-doc program: one fused Arrow
+     UDF for extract, langid, quality, scrub and relevance)
+  -> leak check + crawl_date -> writeStream with checkpointLocation
+     (exactly-once per micro-batch)
 
-Cross-document operators (near-dup LSH, template corpus) are deliberately NOT
-in the streaming path: they are corpus-level and run as periodic batch
-compaction over the landed output — the same manifest/anti-join resume
-machinery (sources/io.py) makes those jobs idempotent.
+label_stage is row-local, so a micro-batch labels its rows exactly as a
+batch run would; the only difference is recency, which streaming pins to
+generation 2 instead of deriving it from warc_ts.
+
+Cross-document operators (dedup verdicts, near-dup LSH, template corpus) are
+deliberately NOT in the streaming path: they are corpus-level and run as
+periodic batch compaction over the landed output — the same
+manifest/anti-join resume machinery (sources/io.py) makes those jobs
+idempotent.
 """
 
 from __future__ import annotations
@@ -20,10 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
-from ..functions.langid_expr import langid_columns
-from ..functions.quality_expr import quality_columns
-from ..functions.relevance_expr import add_relevance_columns
-from ..operators.scrub_op import extract_text_udf, leak_check_expr, make_scrub_udf
+from ..operators.scrub_op import leak_check_expr
+from ..plans.pipeline import label_stage
 
 WEBPAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -45,57 +50,16 @@ def streaming_transform(
     cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Stateless per-doc stages + watermarked url dedup. Returns a streaming
-    DataFrame ready for writeStream."""
-    df = stream.withWatermark("warc_ts", watermark).dropDuplicates(["url"])
-    df = df.withColumn(
-        "extracted_text",
-        F.when(F.col("text").isNotNull(), F.col("text")).otherwise(
-            extract_text_udf(F.col("html"))
-        ),
-    ).drop("html")
-    for name, col in langid_columns(F.col("extracted_text")).items():
-        df = df.withColumn(name, col)
-    df = df.withColumn("lang_keep", F.col("lang_pred").isin(*cfg.langid.keep_langs))
-    for name, col in quality_columns(F.col("extracted_text")).items():
-        df = df.withColumn(name, col)
-    df = df.withColumn(
-        "quality_keep", F.col("quality_score") >= cfg.quality.ocr_min_quality
-    ).withColumn("gates_pass", F.col("lang_keep") & F.col("quality_keep"))
-    # mode-selected scrub: MUST match the batch label_stage's
-    # cfg.scrub.scrub_mode (the round-5 equivalence test pins this — the
-    # previous Effect-only default silently diverged from the batch
-    # production worker->effect composition)
-    scrub = F.when(
-        F.col("gates_pass"),
-        make_scrub_udf(cfg.scrub.scrub_mode)(
-            F.when(F.col("gates_pass"), F.col("extracted_text"))
-        ),
-    )
+    """Watermarked url dedup, then the batch label_stage with every row
+    scored as recency generation 2, then the leak flag and the crawl_date
+    partition column. Returns a streaming DataFrame ready for
+    writeStream."""
     df = (
-        df.withColumn("_scrub", scrub)
-        .withColumn("scrubbed_text", F.col("_scrub.scrubbed_text"))
-        .withColumn("pii_count", F.col("_scrub.pii_count"))
-        .drop("_scrub")
+        stream.withWatermark("warc_ts", watermark)
+        .dropDuplicates(["url"])
         .withColumn("generation", F.lit(2))
     )
-    df = add_relevance_columns(
-        df.withColumn("_snn", F.coalesce("scrubbed_text", F.lit(""))), "_snn"
-    ).drop("_snn")
-    # gate-failed docs carry NULL relevance labels in the batch label_stage
-    # (the fused kernel never scores them); mask here so both paths agree
-    # (round-5 streaming/batch equivalence test)
-    for rc in (
-        "clinical_references", "is_garbage_doc", "placeholder_density",
-        "has_diagnoses", "has_procedures", "has_outcomes", "has_lab_data",
-        "has_medications", "medical_content_density", "relevance_score",
-    ):
-        df = df.withColumn(rc, F.when(F.col("gates_pass"), F.col(rc)))
-    df = df.withColumn(
-        "recommendation",
-        F.when(F.col("gates_pass"), F.col("recommendation")).otherwise("discard"),
-    )
-    return df.withColumn(
+    return label_stage(df, cfg).withColumn(
         "pii_leak", F.coalesce(leak_check_expr(F.col("scrubbed_text")), F.lit(False))
     ).withColumn("crawl_date", F.to_date("warc_ts"))
 

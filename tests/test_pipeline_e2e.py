@@ -358,26 +358,30 @@ class TestResumeContract:
     def test_resume_forwards_label_flags(
         self, spark, webpages, tmp_path_factory
     ):
-        """resume_pipeline(use_crawl_lang=..., with_perplexity=...) must
-        reproduce run_pipeline with the SAME flags — previously the resume
-        path silently labeled with defaults."""
+        """resume_pipeline(use_crawl_lang=...) must reproduce run_pipeline
+        with the SAME flag — previously the resume path silently labeled
+        with defaults."""
+        from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
         from scrubah_pii_spark.plans.resume import resume_pipeline
 
         wh = str(tmp_path_factory.mktemp("warehouse_flags"))
-        res = resume_pipeline(
-            webpages, wh, use_crawl_lang=True, with_perplexity=False
-        )
-        ref = run_pipeline(
-            webpages, use_crawl_lang=True, with_perplexity=False
-        )
+        res = resume_pipeline(webpages, wh, use_crawl_lang=True)
+        ref = run_pipeline(webpages, use_crawl_lang=True)
         a = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
              for r in res.output.collect()}
         b = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
              for r in ref.output.collect()}
         assert a == b
-        # the flags must actually reach label_stage: with_perplexity=False
-        # drops the perplexity column from the labeled frame
-        assert "perplexity" not in res.labeled.columns
+        # the flag must actually reach label_stage: the language gate reads
+        # the crawl's lang column, not the predicted one. The corpus must
+        # hold docs where the two disagree, or this proves nothing.
+        keep_langs = DEFAULT_PIPELINE_CONFIG.langid.keep_langs
+        rows = res.labeled.select("lang", "lang_pred", "lang_keep").collect()
+        assert all(r["lang_keep"] == (r["lang"] in keep_langs) for r in rows)
+        assert any(
+            (r["lang"] in keep_langs) != (r["lang_pred"] in keep_langs)
+            for r in rows
+        )
         ref.labeled.unpersist()
 
     def test_validate_keys_rejects_duplicate_pk(

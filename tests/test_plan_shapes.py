@@ -50,10 +50,47 @@ class TestLabelStage:
         from scrubah_pii_spark.plans.pipeline import label_stage
 
         c = plan_counts(
-            label_stage(webdocs, with_perplexity=False),
+            label_stage(webdocs),
             "Exchange", "ArrowEvalPython", "Window",
         )
         assert c == {"Exchange": 1, "ArrowEvalPython": 1, "Window": 0}, c
+
+
+class TestStreamingLabelStage:
+    def test_one_arrow_node_in_started_query(self, spark, tmp_path):
+        """The streaming micro-batch runs the batch label_stage, so its
+        executed plan holds the same ONE fused ArrowEvalPython. A second
+        node means streaming grew its own per-doc program again (the old
+        shape: a standalone extract UDF plus a standalone scrub UDF)."""
+        from scrubah_pii_spark.streaming.stream import (
+            read_webpage_stream,
+            streaming_transform,
+        )
+
+        inp = str(tmp_path / "in")
+        spark.createDataFrame(
+            [(f"http://h{i % 3}.com/{i}", f"text {i}") for i in range(8)],
+            "url string, text string",
+        ).select(
+            "url",
+            F.to_timestamp(F.lit("2025-06-01 00:00:00")).alias("warc_ts"),
+            F.lit(None).cast("binary").alias("html"),
+            "text",
+            F.lit("en").alias("lang"),
+        ).write.parquet(inp)
+        q = (
+            streaming_transform(read_webpage_stream(spark, inp))
+            .writeStream.format("memory").queryName("plan_shape_stream")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .outputMode("append").start()
+        )
+        try:
+            q.processAllAvailable()
+            plan = q._jsq.explainInternal(False)
+        finally:
+            q.stop()
+        assert "No physical plan" not in plan, plan
+        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
 
 
 class TestDedupFused:
@@ -253,10 +290,21 @@ class TestTemplateCorpusLazy:
 
     def _jobs_run(self, spark, fn):
         tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None) or [])
+
+        def jobs():
+            # ids, not a count: the status store evicts the oldest jobs past
+            # spark.ui.retainedJobs, so a count stops moving in a long session
+            return set(tracker.getJobIdsForGroup(None) or [])
+
+        before = jobs()
         fn()
-        after = len(tracker.getJobIdsForGroup(None) or [])
-        return after - before
+        ran = len(jobs() - before)
+        # self-check: the counter must see an action's job, or a zero above
+        # would pass vacuously
+        probe = jobs()
+        spark.range(1).collect()
+        assert jobs() - probe, "job counter sees no jobs"
+        return ran
 
     def test_ngram_corpus_construction_is_lazy(self, spark):
         from scrubah_pii_spark.operators.template import _ngram_corpus_raw
