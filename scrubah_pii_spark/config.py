@@ -97,14 +97,16 @@ class PipelineConfig:
     dedup: DedupConfig = field(default_factory=DedupConfig)
     langid: LangIdConfig = field(default_factory=LangIdConfig)
     # Spark-side knobs
-    shuffle_partitions: int = 32
     salt_buckets: int = 16          # salted repartition for skewed hosts
     url_buckets: int = 64           # output bucketing on url hash
-    # pre-UDF round-robin repartition: evens partition sizes when the input
-    # is skewed (Common-Crawl host skew). On an already-evenly-split input it
-    # is a pure cost — a full-corpus shuffle that is intra-process at 1
-    # executor but cross-JVM TCP at N executors (biases any single-host N vs
-    # 4N comparison). Disable when input splits are known-uniform.
+    # pre-UDF round-robin repartition into one equal slice per core
+    # (defaultParallelism): evens partition sizes when the input is skewed
+    # (Common-Crawl host skew); one slice per core, not per shuffle
+    # partition, because every Python task pays a fixed worker cost
+    # (plans.pipeline.label_stage). On an already-evenly-split input it is
+    # a pure cost — a full-corpus shuffle that is intra-process at 1
+    # executor but cross-JVM TCP at N executors (biases any single-host N
+    # vs 4N comparison). Disable when input splits are known-uniform.
     pre_repartition: bool = True
     # host-salted variant: repartition(n, host, salt) keeps each host's rows
     # on <= salt_buckets partitions — use when a downstream op is keyed BY

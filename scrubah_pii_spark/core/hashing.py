@@ -63,9 +63,22 @@ def simhash_bits(text: str) -> str:
 
 def simhash_int(text: str) -> int:
     """Same simhash packed into a signed 64-bit int (bit 0 = MSB of the
-    bitstring) for storage as Spark BIGINT and native xor/bit_count joins."""
-    bits = simhash_bits(text)
-    v = int(bits, 2)
+    bitstring) for storage as Spark BIGINT and native xor/bit_count joins.
+
+    Vote i reads bit i % 32 of the word hash, so both 32-bit halves carry
+    the same verdicts: count each hash bit's ones over the word vector in
+    numpy and set bitstring position k where ones beat the minus votes
+    (2 * ones > n), instead of simhash_bits' 64 Python votes per word."""
+    import numpy as np
+
+    words = [w for w in _WS_RE.split(normalize_for_hashing(text)) if len(w) > 2]
+    if not words:
+        return 0
+    h = np.array([js_string_hash32(w) & _INT32_MASK for w in words], dtype="<u4")
+    ones = np.unpackbits(h.view(np.uint8).reshape(-1, 4), axis=1,
+                         bitorder="little").sum(axis=0)
+    half = int.from_bytes(np.packbits(2 * ones > len(words)).tobytes(), "big")
+    v = (half << 32) | half
     return v - (1 << 64) if v >= (1 << 63) else v
 
 

@@ -6,8 +6,10 @@ From-scratch implementations of:
             + 0.3*[3<avgWordLen<15] + 0.2*[wordCount>10];  pass iff >= 0.3
   garbage-token patterns           /root/reference/schemas/ocrQuality.ts:173-195
   OCR quality metrics              /root/reference/services/ocrQualityGate.effect.ts:123-247
-These run as native Spark column expressions in production
-(``functions/quality_expr.py``); the pure versions here are the test oracle.
+The flagship runs these kernels inside its fused per-document Arrow UDF
+(``operators/scrub_op.make_doc_features_extract_udf``), so they are both the
+production path and the test oracle. ``functions/quality_expr.py`` keeps a
+native column-expression form of the score for q_quality_routing.
 """
 
 from __future__ import annotations
@@ -37,13 +39,17 @@ GARBAGE_PATTERNS = tuple(
     )
 )
 
+# One alternation of the self-anchored patterns: a single match call per
+# token gives the same verdict as trying each pattern in turn.
+_GARBAGE_RE = re.compile("|".join(f"(?:{p.pattern})" for p in GARBAGE_PATTERNS), re.ASCII)
+
 
 def is_garbage_token(token: str) -> bool:
     if not token:
         return True
     if len(token) == 1 and not token.isalnum():
         return True
-    return any(p.match(token) for p in GARBAGE_PATTERNS)
+    return _GARBAGE_RE.match(token) is not None
 
 
 @dataclass

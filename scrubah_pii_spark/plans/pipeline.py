@@ -15,8 +15,9 @@ Scale design notes (100 TB / 1000 executors):
     the same ones the correctness oracles use, so parity is by construction);
   * gates short-circuit INSIDE the batch: failed-quality/non-target-language
     docs skip the scrub cascade entirely;
-  * salted repartition on skewed hosts before the UDF evens executor load
-    (Common-Crawl host skew; FIXTURES gives a few hosts ~30% of rows);
+  * a round-robin repartition to one slice per core before the UDF evens
+    executor load (Common-Crawl host skew; FIXTURES gives a few hosts ~30%
+    of rows) without paying the per-Python-task tax more than once a core;
   * dedup shuffles on short keys (content_hash / simhash band bits);
     exact-dup removal runs before the banded near-dup stage, and near-dup
     uses bucket-representative windows (no pair joins — a corpus that is one
@@ -51,6 +52,16 @@ class PipelineResult:
 
 def _host(url_col):
     return F.regexp_extract(url_col, r"https?://([^/]+)/", 1)
+
+
+def _core_count(spark) -> int:
+    """Task slots of the session (defaultParallelism). Spark Connect has no
+    sparkContext (PySparkAttributeError); there the shuffle width stands in."""
+    try:
+        sc = spark.sparkContext
+    except AttributeError:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return sc.defaultParallelism
 
 
 def generation_from_ts(warc_ts: Column, current_year: int) -> Column:
@@ -103,9 +114,14 @@ def label_stage(
             "_html_in", F.lit(None).cast("binary")
         )
 
-    # -- even repartition before the heavy UDF stage. Round-robin gives
-    # perfectly EQUAL partition sizes, which matters because the fused
-    # per-doc stage is uniform-cost-per-doc: hash-partitioning on
+    # -- even repartition before the heavy UDF stage: one slice per core.
+    # Round-robin gives perfectly EQUAL partition sizes, which matters
+    # because the fused per-doc stage is uniform-cost-per-doc, so one slice
+    # per core keeps every core busy to the end. More slices than cores buy
+    # no balance and each one pays PySpark's per-task worker tax: every
+    # Python task runs importlib.invalidate_caches(), which re-reads
+    # pyspark.zip's directory once per zipimporter the worker holds
+    # (0.12-0.15 s CPU per task on a 4-vCPU host). Hash-partitioning on
     # (host, salt) left 2-3x size skew across partitions (few hot keys over
     # N buckets) and a measured straggler tail (CPU decaying 91%->16% while
     # the last tasks drained). Host-salted partitioning
@@ -113,7 +129,7 @@ def label_stage(
     # op is keyed BY host — none is here; dedup keys are content-based.
     df = df.withColumn("host", _host(F.col("url")))
     if cfg.pre_repartition:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        n_parts = _core_count(spark)
         if cfg.host_salted_repartition:
             # skew-safe host co-location: hot hosts spread over salt_buckets
             # partitions instead of one, cold hosts stay together

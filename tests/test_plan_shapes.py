@@ -55,6 +55,48 @@ class TestLabelStage:
         )
         assert c == {"Exchange": 1, "ArrowEvalPython": 1, "Window": 0}, c
 
+    def test_round_robin_one_slice_per_core(self, spark, webdocs):
+        """The pre-UDF round-robin has one slice per core
+        (defaultParallelism), not one per shuffle partition: every extra
+        Python task pays PySpark's fixed worker cost and buys no balance,
+        since round-robin slices are already equal."""
+        from scrubah_pii_spark.plans.pipeline import label_stage
+
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "16")
+        try:
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                label_stage(webdocs).explain(mode="formatted")
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        cores = spark.sparkContext.defaultParallelism
+        assert cores != 16
+        parts = re.findall(r"RoundRobinPartitioning\((\d+)\)", buf.getvalue())
+        assert parts and {int(n) for n in parts} == {cores}, parts
+
+    def test_core_count_connect_fallback(self):
+        """Under Spark Connect there is no sparkContext; the slice count
+        falls back to the shuffle width instead of failing."""
+        from pyspark.errors import PySparkAttributeError
+
+        from scrubah_pii_spark.plans.pipeline import _core_count
+
+        class NoContextSession:
+            @property
+            def sparkContext(self):
+                raise PySparkAttributeError(
+                    errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+                    messageParameters={"attr_name": "sparkContext"},
+                )
+
+            class conf:
+                @staticmethod
+                def get(key, default=None):
+                    return "8"
+
+        assert _core_count(NoContextSession()) == 8
+
 
 class TestStreamingLabelStage:
     def test_one_arrow_node_in_started_query(self, spark, tmp_path):

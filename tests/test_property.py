@@ -10,11 +10,17 @@ from scrubah_pii_spark.core.hashing import (
     content_hash,
     fnv1a64_hex,
     normalize_for_hashing,
+    simhash_bits,
     simhash_int,
 )
 from scrubah_pii_spark.core.langid import heuristic_langid
 from scrubah_pii_spark.core.perplexity import log_perplexity
-from scrubah_pii_spark.core.quality import repetition_ratio, simple_quality_score
+from scrubah_pii_spark.core.quality import (
+    GARBAGE_PATTERNS,
+    is_garbage_token,
+    repetition_ratio,
+    simple_quality_score,
+)
 from scrubah_pii_spark.core.relevance import relevance_score
 from scrubah_pii_spark.core.scrub import scrub_text
 from scrubah_pii_spark.core.scrub_worker import scrub_text_worker
@@ -93,3 +99,41 @@ def test_fnv_batch_kernel_bit_identical_to_scalar(batch):
     from scrubah_pii_spark.core.hashing import fnv1a64_hex_batch
 
     assert fnv1a64_hex_batch(batch) == [fnv1a64_hex(s) for s in batch]
+
+
+# Words of at most 2 characters cast no SimHash votes; astral-plane and
+# non-ASCII characters exercise js_string_hash32's code-point arithmetic.
+SHORT_WORDS = st.lists(st.text(min_size=0, max_size=2), max_size=20).map(" ".join)
+WIDE_TEXT = st.text(alphabet=st.characters(min_codepoint=0x80), max_size=200)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(st.just(""), SHORT_WORDS, WIDE_TEXT, TEXT))
+def test_simhash_int_packs_reference_bits(t):
+    """The numpy vote count equals the per-word Python vote loop, packed
+    as a signed 64-bit int."""
+    v = int(simhash_bits(t), 2)
+    assert simhash_int(t) == (v - (1 << 64) if v >= (1 << 63) else v)
+
+
+# Tokens near each pattern (symbol runs, OCR confusions, digit-letter soup)
+# as well as arbitrary text, so every alternative is hit.
+GARBAGE_ALPHABET = "%#@&*+=|\\/<>~`^_.-Il1rnmaz09 \n\u00e9\u20ac\U0001d518"
+TOKENS = st.one_of(
+    TEXT,
+    st.text(alphabet=GARBAGE_ALPHABET, max_size=12),
+    st.one_of(*(st.from_regex(p, fullmatch=True) for p in GARBAGE_PATTERNS)),
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(TOKENS)
+def test_garbage_token_single_regex_matches_pattern_list(t):
+    """One alternation match gives the verdict of trying the 11 anchored
+    patterns in turn (after the empty / single non-alphanumeric checks)."""
+    expected = (
+        not t
+        or (len(t) == 1 and not t.isalnum())
+        or any(p.match(t) for p in GARBAGE_PATTERNS)
+    )
+    assert is_garbage_token(t) == expected
