@@ -50,14 +50,6 @@ def _crc_chunk(ctype: bytes, body: bytes) -> bytes:
     )
 
 
-def _adam7_order(width: int, height: int):
-    """Yield (x, y) in Adam7 raster order."""
-    for x0, xs, y0, ys in _ADAM7:
-        for y in range(y0, height, ys):
-            for x in range(x0, width, xs):
-                yield x, y
-
-
 def encode_png(
     pixels: bytes,
     width: int,

@@ -1,8 +1,8 @@
 """Text-analysis kernels for training-data pipelines.
 
-Token counting (whitespace + BPE-ish regex), document fingerprinting (rolling
-hash), shingling for MinHash/Jaccard dedup. Pure functions; the Spark-native
-equivalents live in functions/ and operators/.
+Token counting (whitespace + BPE-ish regex), shingling for MinHash/Jaccard
+dedup. Pure functions; the Spark-native equivalents live in functions/ and
+operators/.
 """
 
 from __future__ import annotations
@@ -44,27 +44,3 @@ def word_set(text: str, min_len: int = 3) -> set:
     """Word set for the reference's Jaccard dedup: words with len > 3
     (compressionPipeline.effect.ts:195-198)."""
     return {w for w in _WS_RE.split(text.lower()) if len(w) > min_len}
-
-
-def rolling_fingerprint(text: str, window: int = 64) -> int:
-    """Rabin-Karp-style rolling-hash document fingerprint: min hash value over
-    all windows of `window` chars (a compact content signature)."""
-    if not text:
-        return 0
-    data = text.encode("utf-8", errors="replace")
-    if len(data) <= window:
-        h = 0
-        for byte in data:
-            h = (h * 257 + byte) & 0xFFFFFFFFFFFFFFF
-        return h
-    base, mod = 257, (1 << 61) - 1
-    power = pow(base, window - 1, mod)
-    h = 0
-    for byte in data[:window]:
-        h = (h * base + byte) % mod
-    best = h
-    for i in range(window, len(data)):
-        h = ((h - data[i - window] * power) * base + data[i]) % mod
-        if h < best:
-            best = h
-    return best

@@ -15,8 +15,6 @@ JS-parity harness + committed goldens + fuzz suites.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,13 +49,8 @@ def _spread(df: DataFrame) -> DataFrame:
     thousands of partitions and this is a no-op (the probe sees
     partitions >= cores and returns the frame untouched).
 
-    SCRUBAH_SPREAD=0 disables the repartition (read at call time) — the
-    measurement toggle behind tools/spread_ab.py, which A/Bs the scan shape
-    per query on one warm session (round-6 verdict item 3: the embedding
-    queries got _spread without the per-query A/B the kernel-heavy queries
-    received)."""
-    if os.environ.get("SCRUBAH_SPREAD") == "0":
-        return df
+    Which queries call it was settled per query by an interleaved A/B of
+    the scan shape (BENCH/spread_ab_r7.json)."""
     try:
         # the ONLY expected failure here is Spark Connect's missing
         # sparkContext/RDD bridge — probe it first so a genuine
@@ -757,13 +750,10 @@ def q_template_lines(spark, sf_dir):
     )
 
 
-def q_template_ngram_strip(spark, sf_dir):
-    """Full n-gram boilerplate-removal path (templateDetection.effect.ts:
-    143-312 corpus + overlap elimination, :317-430 strip): detect the chrome
-    framing every page of the derived multiline view and strip it, leaving
-    exactly the re-wrapped content. The oracle computes the expected stripped
-    output directly; reconstruction (the inverse) is property-tested in
-    tests/test_template_ngram.py."""
+def _framed_stripped(spark, sf_dir):
+    """The template pair's shared construction: the framed multiline view of
+    the documents, its n-gram template corpus, and the stripped rows (url,
+    text, stripped_text, chars_removed, template_refs)."""
     from .operators.template import (
         _doc_ngrams,
         ngram_template_corpus,
@@ -779,8 +769,17 @@ def q_template_ngram_strip(spark, sf_dir):
     # frame instead of re-running the window n-gram + hash stage twice
     fps = _doc_ngrams(df, "text", "url").persist()
     corpus = ngram_template_corpus(df, "text", "url", fingerprints=fps)
-    stripped = strip_ngram_templates(df, corpus, "text", "url", fingerprints=fps)
-    return stripped.select(
+    return strip_ngram_templates(df, corpus, "text", "url", fingerprints=fps)
+
+
+def q_template_ngram_strip(spark, sf_dir):
+    """Full n-gram boilerplate-removal path (templateDetection.effect.ts:
+    143-312 corpus + overlap elimination, :317-430 strip): detect the chrome
+    framing every page of the derived multiline view and strip it, leaving
+    exactly the re-wrapped content. The oracle computes the expected stripped
+    output directly; reconstruction (the inverse) is property-tested in
+    tests/test_template_ngram.py."""
+    return _framed_stripped(spark, sf_dir).select(
         F.col("url").cast("long").alias("doc_id"),
         "stripped_text",
         F.col("chars_removed").cast("long").alias("chars_removed"),
@@ -794,20 +793,7 @@ def q_compression_summary(spark, sf_dir):
     stage metrics; README claims 81% on repetitive content). Per-doc ratio
     = stripped/original chars; the average is summed in decimal so it is
     partition-order-independent (IEEE double sums are not)."""
-    from .operators.template import (
-        _doc_ngrams,
-        ngram_template_corpus,
-        strip_ngram_templates,
-    )
-    from .oracles_sql import framed_text_expr
-
-    df = _spread(_docs(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("url"),
-        framed_text_expr().alias("text"),
-    )
-    fps = _doc_ngrams(df, "text", "url").persist()
-    corpus = ngram_template_corpus(df, "text", "url", fingerprints=fps)
-    stripped = strip_ngram_templates(df, corpus, "text", "url", fingerprints=fps)
+    stripped = _framed_stripped(spark, sf_dir)
     ratio = F.length("stripped_text").cast("double") / F.length("text").cast("double")
     return stripped.agg(
         F.count("*").cast("long").alias("docs"),

@@ -201,21 +201,6 @@ def lsh_semantic_clusters(
     )
 
 
-def representative_score(
-    length_col, ts_col, quality_col, med_density_col, max_len: float = 10000.0,
-    current_year: int = 2026,
-):
-    """semanticDedup.ts:149-155 weights: 0.3 length + 0.2 recency +
-    0.3 quality + 0.2 min(medDensity/20, 1)."""
-    len_norm = F.least(F.lit(1.0), length_col.cast("double") / max_len)
-    years_old = F.greatest(
-        F.lit(0), F.lit(current_year) - F.year(ts_col.cast("timestamp"))
-    )
-    recency = F.greatest(F.lit(0.0), 1.0 - years_old.cast("double") / 10.0)
-    med = F.least(F.lit(1.0), med_density_col.cast("double") / 20.0)
-    return 0.3 * len_norm + 0.2 * recency + 0.3 * quality_col.cast("double") + 0.2 * med
-
-
 def select_representatives(
     docs: DataFrame, clusters: DataFrame, id_col: str, score_col: str = "rep_score"
 ) -> DataFrame:
@@ -227,15 +212,3 @@ def select_representatives(
     )  # singletons form their own cluster
     w = Window.partitionBy("cluster_id").orderBy(F.desc(score_col), F.asc(id_col))
     return joined.withColumn("is_representative", F.row_number().over(w) == 1)
-
-
-def cluster_stats(clustered: DataFrame) -> DataFrame:
-    """Dedup stats (semanticDedup.effect.ts:534-565): clusters, sizes,
-    reduction ratio."""
-    sizes = clustered.groupBy("cluster_id").agg(F.count("*").alias("size"))
-    return sizes.agg(
-        F.count("*").alias("n_clusters"),
-        F.sum("size").alias("n_docs"),
-        F.sum((F.col("size") > 1).cast("int")).alias("multi_doc_clusters"),
-        (1.0 - F.count("*") / F.sum("size")).alias("reduction_ratio"),
-    )

@@ -9,21 +9,22 @@ compressionPipeline.effect.ts:189-227 (Jaccard >= 0.85 word sets).
 Spark-first how (scale): the reference's O(n^2) vs-all-previous scans are
 replaced by
   * exact: window over content_hash (one shuffle on the hash key),
-  * near-dup: SimHash LSH banding (4 bands x 16 bits) -> candidates collide
-    in >=1 band -> hamming-verified with native xor/bit_count; the self-join
-    is per-(band, bits) bucket, never all-pairs,
+  * near-dup: SimHash LSH banding (4 bands x 16 bits); every member of a
+    (band, bits) bucket is hamming-verified with native xor/bit_count
+    against the bucket's earliest (ts, url) doc — a window, no pair join,
   * "first previous wins" -> min_by((ts, url)) over verified candidates,
   * MinHash-LSH over word shingles for Jaccard-style dedup at scale.
-At 100 TB: both joins shuffle on short keys (band bits / minhash band), AQE
-skew-join splits hot buckets (empty/boilerplate docs); exact-dup removal runs
-FIRST so identical content never feeds the banded join.
+At 100 TB: the band windows and the MinHash band join shuffle on short keys
+(band bits / minhash band), AQE skew-join splits hot buckets
+(empty/boilerplate docs); exact-dup removal runs FIRST so identical content
+never feeds the banded stage.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing_expr import (
@@ -55,123 +56,6 @@ def mark_exact_duplicates(
             "exact_dup_of", F.when(F.col("_rn") > 1, F.col("_first_url"))
         )
         .drop("_rn", "_first_url")
-    )
-
-
-def simhash_candidate_pairs(
-    df: DataFrame, simhash_col: str = "simhash",
-    url_col: str = "url", bands: int = 4,
-) -> DataFrame:
-    """LSH banding: docs sharing any (band_id, band_bits) bucket become
-    candidate pairs (url_a < url_b by (ts, url) order key). Output columns:
-    url_a, url_b, simhash_a, simhash_b (+ passthrough keys)."""
-    banded = df.select(
-        F.col(url_col).alias("_url"),
-        F.col(simhash_col).alias("_sh"),
-        F.col("_order_key"),
-        F.col("_doc_type"),
-        F.col("_ts"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    simhash_band_expr(F.col(simhash_col), b, bands).alias("bits"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("_url", "_sh", "_order_key", "_doc_type", "_ts", "bk.band", "bk.bits")
-
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col("a._order_key") < F.col("b._order_key")),
-        )
-        .select(
-            F.col("a._url").alias("url_a"),
-            F.col("b._url").alias("url_b"),
-            F.col("a._sh").alias("simhash_a"),
-            F.col("b._sh").alias("simhash_b"),
-            F.col("a._doc_type").alias("doc_type_a"),
-            F.col("b._doc_type").alias("doc_type_b"),
-            F.col("a._ts").alias("ts_a"),
-            F.col("b._ts").alias("ts_b"),
-            F.col("a._order_key").alias("order_a"),
-        )
-        .dropDuplicates(["url_a", "url_b"])  # collided in multiple bands
-    )
-    return pairs
-
-
-def analyze_near_duplicates(
-    df: DataFrame,
-    simhash_col: str = "simhash",
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    doc_type_col: str = "doc_type",
-    near_threshold: float = 0.95,
-    same_event_threshold: float = 0.70,
-    same_event_hours: float = 72.0,
-    bands: int = 4,
-) -> DataFrame:
-    """Returns per-url verdict columns: is_near_dup, near_dup_of, similarity,
-    difference_type in {near-duplicate, same-event, unique}. 'First previous
-    wins': the earliest (ts, url) verified candidate becomes near_dup_of.
-
-    Recall note (documented deviation from the reference's exact O(n^2)): LSH
-    with 4 bands x 16 bits guarantees a collision for hamming distance <= 3
-    (pigeonhole over 4 bands) — exactly the sim >= 0.95 tier (dist <= 3.2) —
-    while keeping buckets selective on mutually-similar corpora; the 0.70
-    same-event tier is probabilistic. An exact all-pairs variant for
-    oracle-checked small data lives in queries()."""
-    keyed = (
-        df.select(
-            F.col(url_col),
-            F.col(simhash_col),
-            F.col(ts_col).alias("_ts"),
-            F.col(doc_type_col).alias("_doc_type"),
-        )
-        .withColumn("_order_key", F.concat_ws("|", F.date_format("_ts", "yyyyMMddHHmmss"), F.col(url_col)))
-    )
-    pairs = simhash_candidate_pairs(keyed, simhash_col, url_col, bands)
-    sim = simhash_similarity_expr(F.col("simhash_a"), F.col("simhash_b"))
-    verdicts = pairs.withColumn("similarity", sim).withColumn(
-        "pair_type",
-        F.when(F.col("similarity") >= near_threshold, "near-duplicate").when(
-            (F.col("similarity") >= same_event_threshold)
-            & (F.col("doc_type_a") == F.col("doc_type_b"))
-            & (
-                F.abs(
-                    F.col("ts_a").cast("timestamp").cast("long")
-                    - F.col("ts_b").cast("timestamp").cast("long")
-                )
-                <= int(same_event_hours * 3600)
-            ),
-            "same-event",
-        ),
-    ).filter(F.col("pair_type").isNotNull())
-
-    # first previous wins: earliest verified candidate per later url
-    best = verdicts.groupBy("url_b").agg(
-        F.min_by(
-            F.struct("url_a", "similarity", "pair_type"), F.col("order_a")
-        ).alias("m")
-    ).select(
-        F.col("url_b").alias(url_col),
-        F.col("m.url_a").alias("near_dup_of"),
-        F.col("m.similarity").alias("similarity"),
-        F.col("m.pair_type").alias("difference_type"),
-    )
-
-    return (
-        df.join(best, url_col, "left")
-        .withColumn(
-            "difference_type", F.coalesce(F.col("difference_type"), F.lit("unique"))
-        )
-        .withColumn("is_near_dup", F.col("difference_type") == "near-duplicate")
     )
 
 
@@ -782,12 +666,6 @@ def _minhash_params(k: int, seed: int = 42):
         b = int.from_bytes(d[4:8], "big") % _P32
         out.append((a, b))
     return out
-
-
-def shingle_hash_expr(word: Column) -> Column:
-    """Deterministic 60-bit integer per shingle via md5 (reproducible in any
-    engine: first 15 hex chars of md5)."""
-    return F.conv(F.substring(F.md5(word), 1, 15), 16, 10).cast("long")
 
 
 def add_minhash_signature(

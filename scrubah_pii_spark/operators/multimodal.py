@@ -14,10 +14,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     StringType,
@@ -100,18 +98,3 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload") -> DataF
             yield out
 
     return df.mapInPandas(run, out_schema)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: explode target timestamps natively, leaving
-    the (stubbed) per-frame decode to extract_media_features downstream."""
-    return df.withColumn(
-        "frame_ts_ms",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ),
-    )

@@ -42,6 +42,14 @@ from ..operators.scrub_op import (
 )
 from ..sources.io import with_partition_cols
 
+# The eager label barrier fires only when the measurable file-backed input is
+# at least this large: at bench scale the extra count() action costs
+# 0.5-0.9 s while the double-compute it prevents is also tiny. Inputs whose
+# size cannot be determined (non-file sources, empty inputFiles) keep the
+# barrier — the scale-safe default, and what multi-million-doc runs on
+# cluster storage resolve to.
+BARRIER_MIN_INPUT_BYTES = 256 * 1024 * 1024
+
 
 @dataclass
 class PipelineResult:
@@ -124,24 +132,10 @@ def label_stage(
     # (0.12-0.15 s CPU per task on a 4-vCPU host). Hash-partitioning on
     # (host, salt) left 2-3x size skew across partitions (few hot keys over
     # N buckets) and a measured straggler tail (CPU decaying 91%->16% while
-    # the last tasks drained). Host-salted partitioning
-    # (repartition(N, host, salt)) remains the right tool when a downstream
-    # op is keyed BY host — none is here; dedup keys are content-based.
-    df = df.withColumn("host", _host(F.col("url")))
-    if cfg.pre_repartition:
-        n_parts = _core_count(spark)
-        if cfg.host_salted_repartition:
-            # skew-safe host co-location: hot hosts spread over salt_buckets
-            # partitions instead of one, cold hosts stay together
-            df = (
-                df.withColumn(
-                    "_salt", F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
-                )
-                .repartition(n_parts, "host", "_salt")
-                .drop("_salt")
-            )
-        else:
-            df = df.repartition(n_parts)
+    # the last tasks drained).
+    df = df.withColumn("host", _host(F.col("url"))).repartition(
+        _core_count(spark)
+    )
 
     # -- fused per-doc Python stage: ONE Arrow round-trip computes quality,
     # langid, perplexity, repetition, (gated) scrub + simhash-of-scrubbed AND
@@ -196,6 +190,9 @@ def run_pipeline(
     use_crawl_lang: bool = False,
 ) -> PipelineResult:
     """df: (url, warc_ts, html, text?, lang?) — the input-hint table."""
+    # sized on the input frame: once the labeled frame is persisted its
+    # optimized plan is the cached relation, which lists no input files
+    eager_barrier = _input_bytes(df) >= BARRIER_MIN_INPUT_BYTES
     df = label_stage(df, cfg, use_crawl_lang)
 
     # Stage barrier: persist the fully-labeled frame. Two reasons:
@@ -208,18 +205,14 @@ def run_pipeline(
     #      spills; plans.resume swaps it for a manifest-tracked parquet stage
     #      write, which is also the checkpoint-resume boundary).
     labeled = df.persist()
-    # Eager barrier (cfg.eager_label_barrier): populate the cache BEFORE the
-    # two independent consumer branches of finish_pipeline fan out. Without
-    # it, a single downstream action submits the verdict-build stage and the
-    # join-probe stage concurrently and both compute the label UDF
-    # (round-7 A/B at 2M x 4x8: 207.2 s lazy vs 149.0 s eager — the lazy
-    # "one action" run pays the label stage nearly twice). Round 8 adds the
-    # size gate (cfg.barrier_min_input_bytes): for small file-backed inputs
-    # the barrier's extra action costs more than the double-compute it
-    # prevents; unknown-size inputs keep the barrier.
-    if cfg.eager_label_barrier and (
-        _input_bytes(df) >= cfg.barrier_min_input_bytes
-    ):
+    # Eager barrier: populate the cache BEFORE the two independent consumer
+    # branches of finish_pipeline fan out. Without it, a single downstream
+    # action submits the verdict-build stage and the join-probe stage
+    # concurrently and both compute the label UDF (2M docs x 4x8 executors:
+    # 207.2 s lazy vs 149.0 s eager — the lazy "one action" run pays the
+    # label stage nearly twice). Small inputs skip it: see
+    # BARRIER_MIN_INPUT_BYTES.
+    if eager_barrier:
         labeled.count()
     return finish_pipeline(labeled, cfg)
 
@@ -286,7 +279,7 @@ def finish_pipeline(
         "pii_leak", leak_check_expr(F.col("scrubbed_text"))
     )
 
-    output = with_partition_cols(survivors, url_buckets=cfg.url_buckets).select(
+    output = with_partition_cols(survivors).select(
         "url", "warc_ts", "crawl_date", "url_bucket", "host",
         "scrubbed_text", "replacements", "pii_count",
         "lang_pred", "quality_score", "log_ppl", "repetition_ratio",
@@ -323,7 +316,7 @@ def shape_output(output: DataFrame, shaping) -> DataFrame:
     from ..operators.sampling import host_cap_topn, stratified_sample
 
     cols = output.columns  # joins reorder columns; restore at the end
-    if getattr(shaping, "host_cap_n", 0):
+    if shaping.host_cap_n:
         output = host_cap_topn(
             output,
             "host",
@@ -335,7 +328,7 @@ def shape_output(output: DataFrame, shaping) -> DataFrame:
             n=shaping.host_cap_n,
             id_col="url",
         ).drop("rank")
-    if getattr(shaping, "lang_cap", 0):
+    if shaping.lang_cap:
         sid = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(2**31))
         output = (
             stratified_sample(

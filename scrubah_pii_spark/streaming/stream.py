@@ -126,18 +126,3 @@ def stateful_host_dedup(
     return stream.groupBy(host_col).applyInPandasWithState(
         dedup_fn, out_type, state_type, "append", GroupStateTimeout.NoTimeout
     )
-
-
-def start_stream(
-    spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str,
-    cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
-):
-    out = streaming_transform(read_webpage_stream(spark, input_dir), cfg)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("crawl_date")
-        .outputMode("append")
-        .start()
-    )

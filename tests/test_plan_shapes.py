@@ -277,19 +277,6 @@ class TestSpreadHelper:
         # no-op branch: the SAME frame comes back, no extra exchange
         assert out is df
 
-    def test_env_toggle_disables(self, spark, monkeypatch):
-        """SCRUBAH_SPREAD=0 (tools/spread_ab.py's measurement arm) must
-        return the frame untouched even on a 1-partition scan, and must be
-        read at CALL time so one warm session can interleave both arms."""
-        from scrubah_pii_spark.entry_queries import _spread
-
-        df = spark.createDataFrame([(i,) for i in range(10)], "x long") \
-            .coalesce(1)
-        monkeypatch.setenv("SCRUBAH_SPREAD", "0")
-        assert _spread(df) is df
-        monkeypatch.delenv("SCRUBAH_SPREAD")
-        assert _spread(df) is not df
-
     def test_connect_safe_fallback(self, spark):
         """ADVICE r7: under Spark Connect there is no sparkContext/RDD
         bridge — the probe must degrade to the inputFiles heuristic (and to

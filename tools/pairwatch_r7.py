@@ -48,8 +48,7 @@ def leg(total_cores: int, n_docs: int, pin: str | None, note: str) -> dict:
            "1", str(n_docs), str(total_cores), "local"]
     if pin:
         cmd = ["taskset", "-c", pin] + cmd
-    env = dict(os.environ, SCRUBAH_ARROW_BATCH="256",
-               SCRUBAH_EAGER_BARRIER="1")
+    env = dict(os.environ, SCRUBAH_ARROW_BATCH="256")
     proc = subprocess.run(cmd, capture_output=True, text=True, timeout=7200,
                           env=env)
     lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]

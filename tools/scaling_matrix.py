@@ -17,26 +17,24 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(HERE, "BENCH", "scaling_matrix.jsonl")
 
 CONFIGS = [
-    # (tag, executors, cores_each, pre_repartition, cpuset)
-    ("rep4x8", 4, 8, "1", None),
-    ("norep4x8", 4, 8, "0", None),
-    ("rep1x8", 1, 8, "1", None),
+    # (tag, executors, cores_each, cpuset)
+    ("rep4x8", 4, 8, None),
+    ("rep1x8", 1, 8, None),
     # pinned N: the executor gets its PROPORTIONAL core share (1/4 host),
     # like one node of a 4-node cluster — an unpinned 1x8 run borrows the
     # whole host's idle cores/bandwidth for its JVM threads, which a real
     # cluster node cannot do, biasing T_N low and efficiency down.
-    ("pin1x8", 1, 8, "1", "0-7"),
+    ("pin1x8", 1, 8, "0-7"),
 ]
 
 
-def run(tag, execs, cores, pre_rep, cpuset=None, n_docs=650000):
-    env = dict(os.environ, SCRUBAH_PRE_REPARTITION=pre_rep)
+def run(tag, execs, cores, cpuset=None, n_docs=650000):
     cmd = [sys.executable, os.path.join(HERE, "tools", "scaling_run.py"),
            str(execs), str(n_docs), str(cores)]
     if cpuset:
         cmd = ["taskset", "-c", cpuset] + cmd
     proc = subprocess.run(
-        cmd, capture_output=True, text=True, timeout=1200, env=env,
+        cmd, capture_output=True, text=True, timeout=1200,
     )
     lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
     rec = json.loads(lines[-1]) if lines else {"error": proc.stderr[-300:]}
@@ -51,10 +49,10 @@ def main():
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
     for i in range(reps):
-        for tag, execs, cores, pre, cpuset in CONFIGS:
+        for tag, execs, cores, cpuset in CONFIGS:
             if only and tag not in only:
                 continue
-            run(tag, execs, cores, pre, cpuset)
+            run(tag, execs, cores, cpuset)
 
 
 if __name__ == "__main__":

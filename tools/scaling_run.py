@@ -154,23 +154,9 @@ def main():
     from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
     from scrubah_pii_spark.plans.pipeline import run_pipeline
 
-    # synthetic corpus is uniformly split (8 MB row groups): the round-robin
-    # repartition would only add a full-corpus shuffle that is free at 1
-    # executor (intra-process) but cross-JVM TCP at 4 — skewing the N-vs-4N
-    # comparison with a cost real clusters pay in NIC, not CPU
-    # measured (BENCH/scaling_matrix.jsonl): skipping the pre-UDF repartition
-    # SLOWS the 4-executor label stage 2-3x (scan-fused UDF tasks lose the
-    # even-sized-partition property); keep it on by default
-    pre_rep = os.environ.get("SCRUBAH_PRE_REPARTITION", "1") == "1"
-    # eager_label_barrier defaults False here: this runner controls
-    # materialization itself (SCRUBAH_ONE_ACTION arms the lazy vs barrier
-    # protocol below); the library default (True) would hide that A/B.
-    # SCRUBAH_EAGER_BARRIER=1 restores the shipped product path — one action
-    # with the label cache materialized before the dedup/survivor fan-out —
-    # which the r7 A/B measured ~38% faster than the lazy single action.
-    eager = os.environ.get("SCRUBAH_EAGER_BARRIER", "0") == "1"
-    cfg = dataclasses.replace(DEFAULT_PIPELINE_CONFIG, pre_repartition=pre_rep,
-                              eager_label_barrier=eager)
+    # the shipped product path: round-robin pre-UDF repartition, and the
+    # eager label barrier wherever run_pipeline's input-size gate fires it
+    cfg = DEFAULT_PIPELINE_CONFIG
 
     # optional corpus-shaping leg (round-6: the shaping ops had never run at
     # campaign scale): SCRUBAH_SHAPING_HOST_CAP / SCRUBAH_SHAPING_LANG_CAP
@@ -221,8 +207,6 @@ def main():
     print(json.dumps({
         "mode": mode,
         "one_action": one_action,
-        "eager_barrier": eager,
-        "pre_repartition": pre_rep,
         "shaping": {"host_cap_n": host_cap_n, "lang_cap": lang_cap},
         "executors": executors,
         "cores_per_executor": cores_each,

@@ -20,7 +20,6 @@ Appends one JSON line per run to BENCH/stage_decomp_r7.jsonl:
 
 from __future__ import annotations
 
-import dataclasses
 import glob
 import json
 import os
@@ -76,16 +75,13 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
     from scrubah_pii_spark.plans.pipeline import run_pipeline
 
-    cfg = dataclasses.replace(DEFAULT_PIPELINE_CONFIG, pre_repartition=True,
-                              eager_label_barrier=True)
     df = spark.read.parquet(corpus)
     df.limit(64).count()  # warm-up, same as scaling_run
 
     t0 = time.time()
-    res = run_pipeline(df, cfg=cfg)
+    res = run_pipeline(df)
     out_rows = res.output.count()
     wall = time.time() - t0
     docs = res.labeled.count()
