@@ -9,7 +9,7 @@ pandas/Arrow UDFs designed for 100 TB-scale Common-Crawl-style webtext.
 
 Layout:
   core/       pure-Python kernels (unit-testable; shipped into pandas UDFs)
-  functions/  native pyspark.sql.functions column programs (JVM-side hot path)
+  functions/  native hashing column programs (dedup plan keys)
   operators/  DataFrame-level operators (scrub, dedup, similarity, template)
   sources/    synthetic webpage generator + IO (partitioned parquet, manifest)
   plans/      end-to-end pipeline assembly (extract→langid→quality→scrub→dedup→write)

@@ -2,9 +2,10 @@
 
 North-rule stage (no reference analog — the reference is English-only medical
 text). Two tiers:
-  1. ``heuristic_langid`` — deterministic stopword scorer, expressible as
-     native Spark SQL (see functions/langid_expr.py) so the hot path stays
-     JVM-side and the DuckDB oracle can reproduce it exactly.
+  1. ``heuristic_langid`` — deterministic stopword scorer. The flagship's
+     fused doc-features UDF and q_langid (``operators/scrub_op.langid_udf``)
+     both run it; plain substring counts, so the DuckDB oracle reproduces it
+     exactly.
   2. fastText (lid.176.bin) behind a guarded import for real deployments; the
      model file ships via spark-submit --files and loads once per executor.
 """

@@ -8,8 +8,8 @@ From-scratch implementations of:
   OCR quality metrics              /root/reference/services/ocrQualityGate.effect.ts:123-247
 The flagship runs these kernels inside its fused per-document Arrow UDF
 (``operators/scrub_op.make_doc_features_extract_udf``), so they are both the
-production path and the test oracle. ``functions/quality_expr.py`` keeps a
-native column-expression form of the score for q_quality_routing.
+production path and the test oracle. q_quality_score and q_quality_routing
+run the same score through ``operators/scrub_op.quality_metrics_udf``.
 """
 
 from __future__ import annotations

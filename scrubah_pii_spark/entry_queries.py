@@ -30,8 +30,7 @@ from .functions.hashing_expr import (
     extract_dates_expr,
     normalize_for_hashing_expr,
 )
-from .functions.langid_expr import langid_columns
-from .functions.quality_expr import quality_columns
+from .oracles_sql import DOT, NRM, SQL_NORM
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,10 +87,9 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def q_quality_score(spark, sf_dir):
-    # Fused Arrow kernel (operators/scrub_op.py:quality_metrics_udf) — the
-    # same pure function the DuckDB oracle models; replaces the native
-    # expression program (functions/quality_expr.py), which anti-scaled past
-    # ~8 threads/JVM from string-allocation churn (plans/pipeline.py:10-16).
+    # Fused Arrow kernel (operators/scrub_op.py:quality_metrics_udf): the
+    # same pure function (core.quality) the flagship runs and the DuckDB
+    # oracle models.
     from .operators.scrub_op import quality_metrics_udf
 
     df = _spread(_docs(spark, sf_dir))
@@ -261,14 +259,11 @@ FROM s
 # --------------------------------------------------------------------------
 
 def q_langid(spark, sf_dir):
+    from .operators.scrub_op import langid_udf
+
     df = _spread(_docs(spark, sf_dir))
-    cols = langid_columns(F.col("text"))
-    return df.select(
-        "doc_id",
-        cols["lang_pred"].alias("lang_pred"),
-        cols["lang_score"].cast("long").alias("lang_score"),
-        cols["lang_margin"].cast("long").alias("lang_margin"),
-        (cols["lang_pred"] == F.col("lang")).alias("matches_crawl"),
+    return df.select("doc_id", "lang", langid_udf(F.col("text")).alias("l")).select(
+        "doc_id", "l.*", (F.col("l.lang_pred") == F.col("lang")).alias("matches_crawl")
     )
 
 
@@ -311,13 +306,6 @@ FROM b
 # fingerprints / dedup
 # --------------------------------------------------------------------------
 
-_SQL_NORM = (
-    "trim(regexp_replace(regexp_replace(regexp_replace(lower(text),"
-    " '\\s+', ' ', 'g'), '\\[.*?\\]', '', 'g'),"
-    " '\\d{1,2}/\\d{1,2}/\\d{2,4}', 'DATE', 'g'))"
-)
-
-
 def q_content_hash(spark, sf_dir):
     return _spread(_docs(spark, sf_dir)).select(
         "doc_id",
@@ -327,7 +315,7 @@ def q_content_hash(spark, sf_dir):
 
 
 SQL_CONTENT_HASH = f"""
-SELECT doc_id, {_SQL_NORM} AS normalized, sha256({_SQL_NORM}) AS content_hash
+SELECT doc_id, {SQL_NORM} AS normalized, sha256({SQL_NORM}) AS content_hash
 FROM documents
 """
 
@@ -344,7 +332,7 @@ def q_exact_dedup(spark, sf_dir):
 
 
 SQL_EXACT_DEDUP = f"""
-WITH h AS (SELECT doc_id, sha256({_SQL_NORM}) AS content_hash FROM documents)
+WITH h AS (SELECT doc_id, sha256({SQL_NORM}) AS content_hash FROM documents)
 SELECT doc_id, content_hash,
   row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) > 1 AS is_exact_dup,
   first_value(doc_id) OVER (PARTITION BY content_hash ORDER BY doc_id) AS first_doc_id
@@ -546,27 +534,13 @@ def q_ann_topk(spark, sf_dir):
     )
 
 
-# dot/norms with explicit double casts + sequential list_reduce fold —
-# bit-identical to Spark's aggregate() fold (list_cosine_similarity would
-# accumulate in float32 and diverge at the 6th decimal)
-_DOT = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(list_zip({a}, {b}), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
-_NRM = (
-    "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
-    "(acc, x) -> acc + x))"
-)
-
 SQL_ANN_TOPK = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-    round(CASE WHEN {_NRM.format(a='q.qe')} * {_NRM.format(a='e.embedding')} > 0
-          THEN {_DOT.format(a='q.qe', b='e.embedding')}
-               / ({_NRM.format(a='q.qe')} * {_NRM.format(a='e.embedding')})
+    round(CASE WHEN {NRM.format(a='q.qe')} * {NRM.format(a='e.embedding')} > 0
+          THEN {DOT.format(a='q.qe', b='e.embedding')}
+               / ({NRM.format(a='q.qe')} * {NRM.format(a='e.embedding')})
           ELSE CAST(0.0 AS DOUBLE) END, 6) AS cosine
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id != q.query_id
@@ -809,14 +783,15 @@ def q_quality_routing(spark, sf_dir):
     """Routing levels + flags (ocrQualityGate.effect.ts:219-247 thresholds)
     on top of the quality metrics."""
     from .operators.report import quality_routing
+    from .operators.scrub_op import quality_metrics_udf
 
-    df = _docs(spark, sf_dir)
-    q = quality_columns(F.col("text"))
-    base = df.select(
+    df = _spread(_docs(spark, sf_dir))
+    q = quality_metrics_udf(F.col("text"))
+    base = df.select("doc_id", q.alias("q")).select(
         "doc_id",
-        q["quality_score"].alias("quality_score"),
-        q["alpha_ratio"].alias("alpha_ratio"),
-        q["word_count"].alias("word_count"),
+        "q.quality_score",
+        "q.alpha_ratio",
+        "q.word_count",
         F.lit(0.0).alias("repetition_ratio"),
     )
     out = quality_routing(base)
@@ -1140,8 +1115,8 @@ def q_ivf_ann_topk(spark, sf_dir):
 
 def _cos_sql(a: str, b: str) -> str:
     return (
-        f"CASE WHEN {_NRM.format(a=a)} * {_NRM.format(a=b)} > 0 "
-        f"THEN {_DOT.format(a=a, b=b)} / ({_NRM.format(a=a)} * {_NRM.format(a=b)}) "
+        f"CASE WHEN {NRM.format(a=a)} * {NRM.format(a=b)} > 0 "
+        f"THEN {DOT.format(a=a, b=b)} / ({NRM.format(a=a)} * {NRM.format(a=b)}) "
         f"ELSE CAST(0.0 AS DOUBLE) END"
     )
 

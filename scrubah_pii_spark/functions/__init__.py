@@ -1,2 +1,3 @@
-"""Native pyspark.sql column programs — the JVM-side (whole-stage codegen) hot
-path. Anything expressible here must NOT be a Python UDF."""
+"""Native pyspark.sql column programs for content hashing, which dedup uses as
+plan keys. Per-document quality, langid and relevance have one implementation
+each: the pure ``core/`` kernels, run inside Arrow UDFs."""

@@ -223,29 +223,6 @@ def exact_jaccard_pairs_prefix(
         F.size(F.first("ws")).alias("sz"),
     ).persist()
 
-    if expand_groups:
-        m = groups.filter(F.col("sz") > 0).select(F.explode("members").alias("id_x"), "fp")
-        within = (
-            m.alias("a")
-            .join(m.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id_x") < F.col("b.id_x")))
-            .select(
-                F.col("a.id_x").alias("id_a"),
-                F.col("b.id_x").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-    else:
-        # group edges: representative -> member, no self-join, m-1 rows/group
-        within = (
-            groups.filter((F.col("sz") > 0) & (F.size("members") > 1))
-            .select(
-                F.array_min("members").alias("id_a"),
-                F.explode("members").alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .withColumn("jaccard", F.lit(1.0))
-        )
-
     # --- ADAPTIVE VERIFICATION PATH (round 8) -----------------------------
     # Prefix filtering collapses on dense small-vocabulary corpora: when the
     # corpus' distinct >min_word_len-char vocabulary is tiny, every set is
@@ -259,7 +236,7 @@ def exact_jaccard_pairs_prefix(
     # identical output, no candidate machinery. The vocabulary probe is one
     # tiny distinct+limit job over the persisted groups; corpora with a
     # real vocabulary (webtext at 100 TB: millions of words) fail the gate
-    # and keep the general AllPairs prefix path below.
+    # and keep the general AllPairs prefix path.
     vocab_rows = (
         groups.select(F.explode("ws").alias("word")).distinct().limit(65).collect()
     )
@@ -267,27 +244,68 @@ def exact_jaccard_pairs_prefix(
         verified = _jaccard_bitmask_verified(
             groups, sorted(r["word"] for r in vocab_rows), threshold
         )
-        if expand_groups:
-            cross = (
-                verified.select(
-                    F.explode("members_a").alias("id_x"), "members_b", "jaccard"
-                )
-                .select("id_x", F.explode("members_b").alias("id_y"), "jaccard")
-                .select(
-                    F.least("id_x", "id_y").alias("id_a"),
-                    F.greatest("id_x", "id_y").alias("id_b"),
-                    "jaccard",
-                )
+    else:
+        verified = _jaccard_prefix_verified(groups, threshold)
+    within = _within_group_pairs(groups.filter(F.col("sz") > 0), expand_groups)
+    return within.unionByName(_cross_group_pairs(verified, expand_groups))
+
+
+def _within_group_pairs(groups: DataFrame, expand_groups: bool) -> DataFrame:
+    """(id_a, id_b, jaccard=1.0) pairs inside each identical-set group of
+    `groups` (fp, members): every member pair when expand_groups, else one
+    representative(min id)->member edge per other member, m-1 rows/group
+    and no self-join."""
+    if expand_groups:
+        m = groups.select(F.explode("members").alias("id_x"), "fp")
+        return (
+            m.alias("a")
+            .join(m.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id_x") < F.col("b.id_x")))
+            .select(
+                F.col("a.id_x").alias("id_a"),
+                F.col("b.id_x").alias("id_b"),
+                F.lit(1.0).alias("jaccard"),
             )
-        else:
-            ra, rb = F.array_min("members_a"), F.array_min("members_b")
-            cross = verified.select(
-                F.least(ra, rb).alias("id_a"),
-                F.greatest(ra, rb).alias("id_b"),
+        )
+    return (
+        groups.filter(F.size("members") > 1)
+        .select(
+            F.array_min("members").alias("id_a"),
+            F.explode("members").alias("id_b"),
+        )
+        .filter(F.col("id_a") != F.col("id_b"))
+        .withColumn("jaccard", F.lit(1.0))
+    )
+
+
+def _cross_group_pairs(verified: DataFrame, expand_groups: bool) -> DataFrame:
+    """(id_a, id_b, jaccard) pairs between groups from verified group pairs
+    (members_a, members_b, jaccard): every member-by-member pair when
+    expand_groups, else one representative->representative edge per group
+    pair. Distinct sets can't reach jaccard 1.0, so the 1.0 edges of the
+    bounded form are exactly the within-group edges (expansion stays
+    unambiguous)."""
+    if expand_groups:
+        return (
+            verified.select(F.explode("members_a").alias("id_x"), "members_b", "jaccard")
+            .select("id_x", F.explode("members_b").alias("id_y"), "jaccard")
+            .select(
+                F.least("id_x", "id_y").alias("id_a"),
+                F.greatest("id_x", "id_y").alias("id_b"),
                 "jaccard",
             )
-        return within.unionByName(cross)
+        )
+    ra, rb = F.array_min("members_a"), F.array_min("members_b")
+    return verified.select(
+        F.least(ra, rb).alias("id_a"),
+        F.greatest(ra, rb).alias("id_b"),
+        "jaccard",
+    )
 
+
+def _jaccard_prefix_verified(groups: DataFrame, threshold: float) -> DataFrame:
+    """General AllPairs prefix-filter verify over DISTINCT word sets (see
+    exact_jaccard_pairs_prefix). Returns distinct-set pairs with jaccard >=
+    threshold plus their members_a / members_b."""
     # global word document-frequency over DISTINCT sets -> rarest-first order
     words = groups.select("fp", "sz", F.explode("ws").alias("word"))
     wdf = words.groupBy("word").agg(F.count("*").alias("wdf"))
@@ -328,7 +346,7 @@ def exact_jaccard_pairs_prefix(
         F.col("fp").alias("fp_b"), F.col("ws").alias("ws_b"),
         F.col("sz").alias("sz_b"), F.col("members").alias("members_b"),
     )
-    verified = (
+    return (
         cand.join(ga, "fp_a").join(gb, "fp_b")
         .withColumn("inter", F.size(F.array_intersect("ws_a", "ws_b")))
         .withColumn(
@@ -338,27 +356,6 @@ def exact_jaccard_pairs_prefix(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    if expand_groups:
-        cross = (
-            verified.select(F.explode("members_a").alias("id_x"), "members_b", "jaccard")
-            .select("id_x", F.explode("members_b").alias("id_y"), "jaccard")
-            .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
-                "jaccard",
-            )
-        )
-    else:
-        # one representative->representative edge per distinct-set pair;
-        # distinct sets can't reach jaccard 1.0, so 1.0 edges below are
-        # exactly the within-group edges (expansion stays unambiguous)
-        ra, rb = F.array_min("members_a"), F.array_min("members_b")
-        cross = verified.select(
-            F.least(ra, rb).alias("id_a"),
-            F.greatest(ra, rb).alias("id_b"),
-            "jaccard",
-        )
-    return within.unionByName(cross)
 
 
 def _jaccard_bitmask_verified(
@@ -744,17 +741,6 @@ def minhash_dedup_pairs(
         F.collect_list("_url").alias("members"), F.first("minhash").alias("minhash")
     ).persist()
 
-    m = groups.select(F.explode("members").alias("id_x"), "fp")
-    within = (
-        m.alias("a")
-        .join(m.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id_x") < F.col("b.id_x")))
-        .select(
-            F.col("a.id_x").alias("url_a"),
-            F.col("b.id_x").alias("url_b"),
-            F.lit(1.0).alias("est_jaccard"),
-        )
-    )
-
     banded = groups.select(
         "fp",
         "minhash",
@@ -794,21 +780,19 @@ def minhash_dedup_pairs(
             F.col("a.minhash").alias("_mh_a"), F.col("b.minhash").alias("_mh_b"),
         )
         .dropDuplicates(["fp_a", "fp_b"])
-        .select("fp_a", "fp_b", est.alias("est_jaccard"))
+        .select("fp_a", "fp_b", est.alias("jaccard"))
     )
     ga = groups.select(F.col("fp").alias("fp_a"), F.col("members").alias("members_a"))
     gb = groups.select(F.col("fp").alias("fp_b"), F.col("members").alias("members_b"))
-    cross = (
-        cross_groups.join(ga, "fp_a").join(gb, "fp_b")
-        .select(F.explode("members_a").alias("id_x"), "members_b", "est_jaccard")
-        .select("id_x", F.explode("members_b").alias("id_y"), "est_jaccard")
-        .select(
-            F.least("id_x", "id_y").alias("url_a"),
-            F.greatest("id_x", "id_y").alias("url_b"),
-            "est_jaccard",
-        )
+    verified = cross_groups.join(ga, "fp_a").join(gb, "fp_b")
+    pairs = _within_group_pairs(groups, expand_groups=True).unionByName(
+        _cross_group_pairs(verified, expand_groups=True)
     )
-    return within.unionByName(cross)
+    return pairs.select(
+        F.col("id_a").alias("url_a"),
+        F.col("id_b").alias("url_b"),
+        F.col("jaccard").alias("est_jaccard"),
+    )
 
 
 def exact_jaccard_pairs(

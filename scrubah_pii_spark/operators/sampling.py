@@ -73,7 +73,9 @@ def dup_span_strip(
 ) -> DataFrame:
     """Strip every word covered by an n-gram that appears in >= min_df
     distinct documents. Returns id_col plus cleaned_text / n_words_kept /
-    n_words_dropped. Word = split on single space (corpus contract).
+    n_words_dropped; cleaned_text is NULL when every word is dropped, as in
+    the DuckDB oracle, whose array_to_string([]) is NULL. Word = split on
+    single space (corpus contract).
     NULL text is treated as '' — without the coalesce, split(NULL) gives a
     NULL array whose size is -1 under legacy sizeOfNull, and
     sequence(0, -2) silently produces the DESCENDING [0,-1,-2]."""
@@ -122,9 +124,11 @@ def dup_span_strip(
     kept = F.array_except(F.sequence(F.lit(0), F.size("ws") - 1), covered)
     out = joined.select(
         id_col,
-        F.array_join(
-            F.transform(kept, lambda p: F.element_at("ws", p + 1)),
-            " ",
+        F.when(
+            F.size(kept) > 0,
+            F.array_join(
+                F.transform(kept, lambda p: F.element_at("ws", p + 1)), " "
+            ),
         ).alias("cleaned_text"),
         F.size(kept).alias("n_words_kept"),
         (F.size("ws") - F.size(kept)).alias("n_words_dropped"),

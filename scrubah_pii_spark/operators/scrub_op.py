@@ -239,6 +239,25 @@ def quality_metrics_udf(texts: pd.Series) -> pd.DataFrame:
     )
 
 
+LANGID_TYPE = StructType(
+    [
+        StructField("lang_pred", StringType()),
+        StructField("lang_score", LongType()),
+        StructField("lang_margin", LongType()),
+    ]
+)
+
+
+@F.pandas_udf(LANGID_TYPE)
+def langid_udf(texts: pd.Series) -> pd.DataFrame:
+    """Heuristic langid as one Arrow pass — the same pure kernel the
+    flagship's fused doc-features UDF runs, exposed standalone for q_langid."""
+    from ..core import langid as _langid
+
+    rows = [_langid.heuristic_langid(t if t is not None else "") for t in texts]
+    return pd.DataFrame(rows, columns=LANGID_TYPE.fieldNames())
+
+
 RELEVANCE_METRICS_TYPE = StructType(
     [
         StructField("clinical_references", IntegerType()),

@@ -99,6 +99,7 @@ class TestJaccardPairs:
         from scrubah_pii_spark.operators.dedup import (
             exact_jaccard_pairs,
             exact_jaccard_pairs_prefix,
+            expand_jaccard_group_edges,
         )
 
         vocab = [f"word{i:03d}" for i in range(120)]
@@ -119,6 +120,14 @@ class TestJaccardPairs:
                 ).collect()
             }
             assert pref == naive, f"threshold {t}: {len(pref)} vs {len(naive)}"
+            edges = exact_jaccard_pairs_prefix(
+                df, "text", "doc_id", threshold=t, expand_groups=False
+            )
+            expanded = {
+                (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+                for r in expand_jaccard_group_edges(edges).collect()
+            }
+            assert expanded == naive, f"threshold {t}: group edges diverged"
 
     def test_small_vocab_bitmask_path_identical(self, spark):
         """<=64-word vocabulary routes through the blocked-bitmask verify;
@@ -127,6 +136,7 @@ class TestJaccardPairs:
         from scrubah_pii_spark.operators.dedup import (
             exact_jaccard_pairs,
             exact_jaccard_pairs_prefix,
+            expand_jaccard_group_edges,
         )
 
         vocab = [f"term{i}" for i in range(12)]
@@ -146,6 +156,14 @@ class TestJaccardPairs:
                 ).collect()
             }
             assert bm == naive, f"threshold {t}: {len(bm)} vs {len(naive)}"
+            edges = exact_jaccard_pairs_prefix(
+                df, "text", "doc_id", threshold=t, expand_groups=False
+            )
+            expanded = {
+                (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+                for r in expand_jaccard_group_edges(edges).collect()
+            }
+            assert expanded == naive, f"threshold {t}: group edges diverged"
 
     def test_group_edges_expand_to_pairs(self, spark, webpages):
         """Bounded group-edge output (expand_groups=False) loses nothing:

@@ -99,7 +99,7 @@ class TestDupSpanStrip:
         out = self._strip(spark, docs)
         assert out[1]["cleaned_text"] == "a f"
         assert out[1]["n_words_kept"] == 2
-        assert out[2]["cleaned_text"] == ""
+        assert out[2]["cleaned_text"] is None  # every word dropped -> NULL
         assert out[2]["n_words_kept"] == 0
 
     def test_short_docs_guarded(self, spark):
@@ -109,13 +109,35 @@ class TestDupSpanStrip:
         out = self._strip(spark, docs)
         assert out[1]["cleaned_text"] == "one two"
         assert out[2]["cleaned_text"] == "solo"
-        assert out[3]["cleaned_text"] == ""  # "a b c" df=2 -> stripped
+        assert out[3]["cleaned_text"] is None  # "a b c" df=2 -> stripped
 
     def test_min_df_threshold_exclusive_below(self, spark):
         docs = [(1, "p q r s"), (2, "p q r t")]
         # min_df=3: "p q r" appears in only 2 docs -> kept
         out = self._strip(spark, docs, min_df=3)
         assert out[1]["cleaned_text"] == "p q r s"
+
+    def test_fully_stripped_doc_matches_oracle(self, spark):
+        """A doc whose every word is dropped: Spark and the DuckDB oracle
+        must both give NULL cleaned_text (Spark's array_join used to write
+        '' where DuckDB's array_to_string([]) is NULL)."""
+        import duckdb
+        import pandas as pd
+
+        from scrubah_pii_spark.oracles_sql import sql_dup_span_strip
+
+        docs = [(i, "x y z") for i in range(5)]
+        docs += [(5, "x y z w v"), (6, "a b c d")]
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        got = sorted(
+            tuple(r) for r in dup_span_strip(df, n=3, min_df=5).collect()
+        )
+        con = duckdb.connect()
+        con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
+        want = sorted(con.execute(sql_dup_span_strip(n=3, min_df=5)).fetchall())
+        con.close()
+        assert got == want
+        assert got[0] == (0, None, 0, 3)
 
 
 class TestChunkDedup:
@@ -323,7 +345,7 @@ class TestDupSpanStripLinear:
         t0 = time.monotonic()
         out = {r["doc_id"]: r for r in dup_span_strip(df, n=3, min_df=5).collect()}
         wall = time.monotonic() - t0
-        assert out[1]["cleaned_text"] == ""
+        assert out[1]["cleaned_text"] is None
         assert out[1]["n_words_dropped"] == 50_000
         assert wall < 60, f"coverage mask no longer linear: {wall:.1f}s"
 
