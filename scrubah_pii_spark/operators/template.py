@@ -39,7 +39,11 @@ def line_frequency_templates(
     driver count() (guide §1.4/§5.2): one action fewer per consumer, and the
     corpus scan overlaps the line stages inside the same job. `int(n * frac)`
     == floor(n * frac) for the non-negative product, so the in-plan threshold
-    is the same integer the collected one was."""
+    is the same integer the collected one was.
+
+    Because the doc count rides the returned lazy plan, every action on the
+    result re-scans df; a consumer that runs several actions on it should
+    persist it first."""
     scalars = df.agg(F.count("*").alias("_docs"))
     threshold = F.greatest(
         F.lit(min_docs).cast("long"),
@@ -159,7 +163,11 @@ def ngram_template_corpus(
     of docs), so it runs on the collected corpus like the reference does.
     Deviation (documented): the reference keeps the FIRST-seen doc's original
     lines as template content; we keep the min-by-url doc's (deterministic
-    under any partitioning)."""
+    under any partitioning).
+
+    The doc-count scalar rides the returned lazy plan (a broadcast 1-row
+    aggregate), so every action on the result re-scans df; a consumer that
+    runs several actions on it should persist it first."""
     corpus = _ngram_corpus_raw(
         df, text_col, url_col, min_size, max_size, threshold_frac, min_docs,
         fingerprints,

@@ -327,13 +327,7 @@ class TestTemplateCorpusLazy:
 
         before = jobs()
         fn()
-        ran = len(jobs() - before)
-        # self-check: the counter must see an action's job, or a zero above
-        # would pass vacuously
-        probe = jobs()
-        spark.range(1).collect()
-        assert jobs() - probe, "job counter sees no jobs"
-        return ran
+        return len(jobs() - before)
 
     def test_ngram_corpus_construction_is_lazy(self, spark):
         from scrubah_pii_spark.operators.template import _ngram_corpus_raw
@@ -351,9 +345,11 @@ class TestTemplateCorpusLazy:
             )
 
         assert self._jobs_run(spark, construct) == 0
-        # and the in-plan scalars produce the same corpus the collected
-        # scalars did: every doc shares hdr/footer -> doc_count == 6
-        rows = built["corpus"].collect()
+        # self-check: the counter sees the action's jobs, so the zero above
+        # is not vacuous. And the in-plan scalars produce the same corpus the
+        # collected scalars did: every doc shares hdr/footer -> doc_count == 6
+        rows = []
+        assert self._jobs_run(spark, lambda: rows.extend(built["corpus"].collect())) > 0
         assert rows and all(r["doc_count"] == 6 for r in rows)
         assert all(r["template_type"] for r in rows)
 
@@ -373,7 +369,9 @@ class TestTemplateCorpusLazy:
             built["t"] = line_frequency_templates(df, "text", "url")
 
         assert self._jobs_run(spark, construct) == 0
-        rows = built["t"].collect()
+        # self-check: the counter sees the action's jobs
+        rows = []
+        assert self._jobs_run(spark, lambda: rows.extend(built["t"].collect())) > 0
         assert [(r["trimmed"], r["doc_count"]) for r in rows] == [
             ("the same boilerplate line", 4)
         ]

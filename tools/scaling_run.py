@@ -46,6 +46,7 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    from scrubah_pii_spark.session import CODEGEN_CACHE_ENTRIES
     from tools.make_pyfiles_zip import build_zip
 
     corpus = f"/tmp/scaling_corpus_{n_docs}.parquet"
@@ -107,6 +108,7 @@ def main():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # round-5 lever: smaller Arrow batches shrink each python worker's
         # resident working set (batch in + features out held concurrently),
         # cutting peak memory-bandwidth demand when 32 workers share a host
