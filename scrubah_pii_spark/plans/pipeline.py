@@ -17,7 +17,8 @@ Scale design notes (100 TB / 1000 executors):
     docs skip the scrub cascade entirely;
   * a round-robin repartition to one slice per core before the UDF evens
     executor load (Common-Crawl host skew; FIXTURES gives a few hosts ~30%
-    of rows) without paying the per-Python-task tax more than once a core;
+    of rows); each Python task has a fixed cost, which the engine's worker
+    daemon (scrubah_pii_spark.pyworker) cuts from ~0.24 s to ~0.04 s;
   * dedup shuffles on short keys (content_hash / simhash band bits);
     exact-dup removal runs before the banded near-dup stage, and near-dup
     uses bucket-representative windows (no pair joins — a corpus that is one
@@ -126,10 +127,13 @@ def label_stage(
     # Round-robin gives perfectly EQUAL partition sizes, which matters
     # because the fused per-doc stage is uniform-cost-per-doc, so one slice
     # per core keeps every core busy to the end. More slices than cores buy
-    # no balance and each one pays PySpark's per-task worker tax: every
-    # Python task runs importlib.invalidate_caches(), which re-reads
-    # pyspark.zip's directory once per zipimporter the worker holds
-    # (0.12-0.15 s CPU per task on a 4-vCPU host). Hash-partitioning on
+    # no balance and each one pays PySpark's per-task worker cost. In stock
+    # PySpark that is 0.22-0.26 s of CPU per task on a 4-vCPU host: every
+    # Python task runs importlib.invalidate_caches(), which re-reads the
+    # directory of pyspark.zip (~11 ms, once per zipimporter the worker
+    # holds, 11-12 of them) and of the spark-core jar on the worker path
+    # (33-47 ms, twice). The engine's daemon (pyworker) holds those archives
+    # out, which leaves ~0.04 s per task. Hash-partitioning on
     # (host, salt) left 2-3x size skew across partitions (few hot keys over
     # N buckets) and a measured straggler tail (CPU decaying 91%->16% while
     # the last tasks drained).

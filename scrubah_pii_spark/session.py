@@ -10,6 +10,10 @@ Scale posture (100 TB / 1000 executors) is set here once:
     (CODEGEN_CACHE_ENTRIES), so a warm query reuses its compiled classes
     instead of recompiling them; the conf is static, so it is set here,
     where the session is created
+  - the engine's Python worker daemon (PYTHON_DAEMON_MODULE, see pyworker),
+    which stops every Python task from re-reading Spark's own archives
+    (~0.22 s of worker CPU per task on a 4-vCPU host). Executors must be able
+    to import the engine when the daemon starts, or no Python worker starts
 """
 
 from __future__ import annotations
@@ -24,6 +28,10 @@ from pyspark.sql import SparkSession
 # segments and evicts per segment at about a quarter of it, so a cap near
 # the working set still evicts live classes: ~3x the working set does not.
 CODEGEN_CACHE_ENTRIES = 2000
+
+# spark.python.daemon.module: pyspark.daemon minus the per-task
+# importlib.invalidate_caches() re-read of pyspark.zip and the spark-core jar.
+PYTHON_DAEMON_MODULE = "scrubah_pii_spark.pyworker"
 
 
 def build_session(
@@ -46,6 +54,7 @@ def build_session(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

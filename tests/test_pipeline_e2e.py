@@ -149,12 +149,12 @@ class TestDedupAndLeaks:
         """dedup_verdicts_fused (3 exchanges) must produce exactly the same
         survivor set + verdict columns as the legacy mark -> bucketed-analyze
         -> join composition it replaced."""
-        from scrubah_pii_spark.functions.hashing_expr import content_hash_expr
-        from scrubah_pii_spark.operators.dedup import (
+        from dedup_reference import (
             analyze_near_duplicates_bucketed,
-            dedup_verdicts_fused,
             mark_exact_duplicates,
         )
+        from scrubah_pii_spark.functions.hashing_expr import content_hash_expr
+        from scrubah_pii_spark.operators.dedup import dedup_verdicts_fused
 
         slim = result.labeled.filter(
             F.col("recommendation") != "discard"

@@ -46,7 +46,7 @@ def main():
 
     from pyspark.sql import SparkSession
 
-    from scrubah_pii_spark.session import CODEGEN_CACHE_ENTRIES
+    from scrubah_pii_spark.session import CODEGEN_CACHE_ENTRIES, PYTHON_DAEMON_MODULE
     from tools.make_pyfiles_zip import build_zip
 
     corpus = f"/tmp/scaling_corpus_{n_docs}.parquet"
@@ -109,6 +109,8 @@ def main():
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # the executors import the daemon from the zip on PYTHONPATH above
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         # round-5 lever: smaller Arrow batches shrink each python worker's
         # resident working set (batch in + features out held concurrently),
         # cutting peak memory-bandwidth demand when 32 workers share a host
