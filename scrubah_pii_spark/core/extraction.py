@@ -1,16 +1,17 @@
-"""Whitelist structured extraction: labs, vitals, medications, diagnoses,
-imaging — regex banks + reference-range status + enum parsers.
+"""Whitelist structured extraction: labs, vitals, diagnoses, imaging —
+regex banks + reference-range status + the modality parser.
 
 From-scratch port of the semantics in
 /root/reference/schemas/structuredExtraction.ts:
   LAB_PATTERNS            :313-353
-  MEDICATION_PATTERNS     :358-372
   VITAL_PATTERNS          :377-386
   DIAGNOSIS_PATTERNS      :391-400 (ICD-10 [A-Z]\\d{2}(\\.\\d{1,4})?)
   REFERENCE_RANGES        :420-441
   getLabStatus            :447-469 (critical = 0.5x low / 2x high)
-  parseFrequency          :474-495 (BID checked BEFORE daily — order matters)
-  parseRoute / parseModality :500-520
+  parseModality           :500-520
+
+Medications (MEDICATION_PATTERNS :358-372, parseFrequency, parseRoute) are
+extracted by core/whitelist.py, not here.
 
 Pure functions; the Spark operator wraps them in a vectorized UDF producing
 ARRAY<STRUCT> columns, and the count-level queries are mirrored in SQL.
@@ -68,11 +69,6 @@ MODALITY_RE = re.compile(r"\b(X-?ray|CT|MRI|Ultrasound|US|PET|Mammogram|Fluoro)"
 ABNORMAL_RE = re.compile(
     r"\b(abnormal|mass|lesion|fracture|effusion|consolidation|opacity|enlarged|nodule|tumor)\b", I
 )
-MED_DOSE_RE = re.compile(r"(\d+\.?\d*)\s*(mg|mcg|g|mL|units?|tablets?|caps?)", I)
-MED_ROUTE_RE = re.compile(r"\b(PO|IV|IM|SC|SubQ|SL|PR|topical|inhaled|oral|intravenous)\b", I)
-MED_FREQ_RE = re.compile(
-    r"\b(once|daily|BID|TID|QID|Q(\d+)H|QHS|PRN|every\s*\d+\s*hours?|twice\s*daily|weekly)\b", I
-)
 
 REFERENCE_RANGES = {
     "WBC": (3.5, 11.0, "x10E3/uL"),
@@ -112,44 +108,6 @@ def get_lab_status(value: float, test_name: str) -> str:
     if value > high:
         return "HIGH"
     return "NORMAL"
-
-
-def parse_frequency(text: str) -> str:
-    lower = text.lower()
-    if re.search(r"once|x1|single", lower):
-        return "ONCE"
-    if re.search(r"bid|twice\s*daily", lower):  # BID before daily!
-        return "BID"
-    if re.search(r"daily|qd|every\s*day", lower):
-        return "DAILY"
-    if re.search(r"tid|three", lower):
-        return "TID"
-    if re.search(r"qid|four", lower):
-        return "QID"
-    for q in ("q4h", "q6h", "q8h", "q12h"):
-        if q in lower:
-            return q.upper()
-    if re.search(r"qhs|bedtime", lower):
-        return "QHS"
-    if re.search(r"prn|as\s*needed", lower):
-        return "PRN"
-    if "weekly" in lower:
-        return "WEEKLY"
-    return "UNKNOWN"
-
-
-def parse_route(text: str) -> str:
-    lower = text.lower()
-    rules = [
-        ("PO", r"\bpo\b|oral"), ("IV", r"\biv\b|intravenous"),
-        ("IM", r"\bim\b|intramuscular"), ("SC", r"\bsc\b|\bsubq?\b|subcutaneous"),
-        ("SL", r"\bsl\b|sublingual"), ("PR", r"\bpr\b|rectal"),
-        ("TOP", r"\btop\b|topical"), ("INH", r"\binh\b|inhaled"),
-    ]
-    for name, pat in rules:
-        if re.search(pat, lower):
-            return name
-    return "UNKNOWN"
 
 
 def parse_modality(text: str) -> str:
@@ -211,23 +169,3 @@ def extract_record(text: str) -> ExtractedRecord:
     abnormal = sorted({m.group(1).lower() for m in ABNORMAL_RE.finditer(text)})
     return ExtractedRecord(labs, vitals, icd, modalities, abnormal)
 
-
-def truncate_text(text: str, max_len: int) -> str:
-    """narrativeGeneration.ts:419-422: maxLen-3 + '...'."""
-    if len(text) <= max_len:
-        return text
-    return text[: max_len - 3] + "..."
-
-
-def simple_hash32(s: str) -> str:
-    """32-bit rolling hash of the whitelist extraction pipeline
-    (services/whitelist/services/extractionPipeline.effect.ts:25-33):
-    JS ((hash << 5) - hash + charCode) with int32 wrap; output is
-    abs(hash) as 8-char zero-padded hex."""
-    h = 0
-    for ch in s:
-        h = (h << 5) - h + ord(ch)
-        h &= 0xFFFFFFFF
-        if h >= 0x80000000:
-            h -= 0x100000000
-    return format(abs(h), "x").rjust(8, "0")

@@ -6,10 +6,12 @@ From-scratch ports with bit parity to the reference:
   generateSimHash       :74-98  (JS 32-bit rolling hash, 64-bit vote vector)
   calculateSimilarity   :106-113 (1 - hamming/64)
   fnv1aHash 64-bit      /root/reference/schemas/templateDetection.ts:259-273
-  normalizeForFingerprint :277-299
-  extractNGrams         :306-335
-  detectDocumentType    /root/reference/services/contentHasher.effect.ts:151-171
-  extractDates          :124-140
+  classifyTemplateType  :188-249
+
+The references these kernels and the in-plan template n-grams are tested
+against (simhash_bits, the loop form of the numpy SimHash;
+normalizeForFingerprint :277-299 and extractNGrams :306-335) live in
+tests/engine_reference.py.
 """
 
 from __future__ import annotations
@@ -50,17 +52,6 @@ def js_string_hash32(word: str) -> int:
     return h
 
 
-def simhash_bits(text: str) -> str:
-    """64-char '0'/'1' string, bit i voted by ((hash >> (i % 32)) & 1)."""
-    words = [w for w in _WS_RE.split(normalize_for_hashing(text)) if len(w) > 2]
-    votes = [0] * 64
-    for w in words:
-        h = js_string_hash32(w)  # signed int32; >> sign-extends like JS
-        for i in range(64):
-            votes[i] += 1 if (h >> (i % 32)) & 1 else -1
-    return "".join("1" if v > 0 else "0" for v in votes)
-
-
 def simhash_int(text: str) -> int:
     """Same simhash packed into a signed 64-bit int (bit 0 = MSB of the
     bitstring) for storage as Spark BIGINT and native xor/bit_count joins.
@@ -68,7 +59,8 @@ def simhash_int(text: str) -> int:
     Vote i reads bit i % 32 of the word hash, so both 32-bit halves carry
     the same verdicts: count each hash bit's ones over the word vector in
     numpy and set bitstring position k where ones beat the minus votes
-    (2 * ones > n), instead of simhash_bits' 64 Python votes per word."""
+    (2 * ones > n), instead of 64 Python votes per word (the loop form,
+    simhash_bits, is the test reference in tests/engine_reference.py)."""
     import numpy as np
 
     words = [w for w in _WS_RE.split(normalize_for_hashing(text)) if len(w) > 2]
@@ -178,80 +170,6 @@ def fnv1a64_hex_batch(strings, max_vectorized_len: int = 4096) -> list:
     return out
 
 
-_NUM_RE = re.compile(r"\d+")
-
-
-def normalize_for_fingerprint(
-    text: str,
-    normalize_whitespace: bool = True,
-    lowercase: bool = True,
-    strip_numbers: bool = False,
-) -> str:
-    t = text
-    if normalize_whitespace:
-        t = _WS_RE.sub(" ", t).strip()
-    if lowercase:
-        t = t.lower()
-    if strip_numbers:
-        t = _NUM_RE.sub("#", t)
-    return t
-
-
-def extract_ngrams(lines: list, min_size: int = 2, max_size: int = 5) -> list:
-    """[(hash, ngram_size, line_start)] over consecutive line windows; windows
-    whose normalized content has <10 non-whitespace chars are skipped."""
-    out = []
-    norm = [normalize_for_fingerprint(l) for l in lines]
-    for size in range(min_size, max_size + 1):
-        for i in range(0, len(lines) - size + 1):
-            content = "\n".join(norm[i : i + size])
-            if len(_WS_RE.sub("", content)) < 10:
-                continue
-            out.append((fnv1a64_hex(content), size, i))
-    return out
-
-
-# --- date extraction + doc-type detection --------------------------------------
-_DATE_PATTERNS = (
-    re.compile(r"\d{1,2}[-/]\d{1,2}[-/]\d{2,4}", re.ASCII),
-    re.compile(r"\d{4}[-/]\d{1,2}[-/]\d{1,2}", re.ASCII),
-    re.compile(
-        r"\b(Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)\s+\d{1,2},?\s+\d{4}",
-        re.ASCII | re.IGNORECASE,
-    ),
-)
-
-
-def extract_dates(text: str) -> list:
-    seen, out = set(), []
-    for pat in _DATE_PATTERNS:
-        for m in pat.finditer(text):
-            v = m.group(0)
-            if v not in seen:
-                seen.add(v)
-                out.append(v)
-    return out
-
-
-_DOC_TYPE_RULES = (
-    ("lab_report", re.compile(r"lab|labrpt|cbc|cmp|bmp|wbc|hemoglobin", re.I)),
-    ("imaging", re.compile(r"ct|mri|x-?ray|ultrasound|imaging|radiology|mammogram", re.I)),
-    ("pathology", re.compile(r"pathology|biopsy|specimen|histology", re.I)),
-    ("progress_note", re.compile(r"progress note|soap|assessment|plan|provider", re.I)),
-    ("medication", re.compile(r"medication|prescription|refill|pharmacy", re.I)),
-    ("discharge", re.compile(r"discharge|summary|follow-?up instructions", re.I)),
-    ("correspondence", re.compile(r"letter|correspondence|referral", re.I)),
-)
-
-
-def detect_document_type(filename: str, text: str) -> str:
-    lower = (filename + " " + text[:500]).lower()
-    for name, pat in _DOC_TYPE_RULES:
-        if pat.search(lower):
-            return name
-    return "unknown"
-
-
 # --- template classification (templateDetection.ts:188-249) ---------------------
 _I = re.IGNORECASE
 HEADER_PATTERNS = tuple(re.compile(p, _I) for p in (
@@ -306,16 +224,3 @@ def classify_template_type(content: str, position: str) -> str:
     if _DEMOGRAPHICS_RE.search(sample):
         return "DEMOGRAPHICS"
     return "BOILERPLATE"
-
-
-def template_position(avg_line_offset: float, avg_doc_lines: float) -> str:
-    """START/END/MIDDLE by avg line offset vs 20%/80% of avg doc length
-    (templateDetection.effect.ts position rule)."""
-    if avg_doc_lines <= 0:
-        return "MIDDLE"
-    frac = avg_line_offset / avg_doc_lines
-    if frac <= 0.2:
-        return "START"
-    if frac >= 0.8:
-        return "END"
-    return "MIDDLE"

@@ -124,12 +124,6 @@ def encode_ppm(pixels: bytes, width: int, height: int, maxval: int = 255) -> byt
     return f"P6\n{width} {height}\n{maxval}\n".encode("ascii") + pixels
 
 
-def encode_pgm(pixels: bytes, width: int, height: int, maxval: int = 255) -> bytes:
-    if len(pixels) != width * height:
-        raise ValueError("pixel buffer size mismatch")
-    return f"P5\n{width} {height}\n{maxval}\n".encode("ascii") + pixels
-
-
 def _parse_pnm_header(payload: bytes) -> tuple[str, int, int, int, int]:
     """Return (magic, width, height, maxval, data_offset). Handles netpbm
     whitespace/comment rules: tokens separated by whitespace, '#' comments

@@ -4,13 +4,12 @@ narrativeGeneration.effect.ts:5-11).
 
 From-scratch ports of /root/reference/schemas/narrativeGeneration.ts:
   formatDiagnosesSummary    :140-180
-  formatMedicationsSummary  :185-226
   formatLabsSummary         :231-281
   formatVitalsSummary       :286-310
   defaultNarrativeConfig    :56-72
-Verbosity tiers MINIMAL / BRIEF / STANDARD / DETAILED; BRIEF med list caps at
-5 entries (+ "... and N more"). Used by the narrative UDF over extraction
-columns; each formatter is pure.
+Verbosity tiers MINIMAL / BRIEF / STANDARD / DETAILED. Used by the narrative
+UDF over extraction columns, which carry no medications, so
+formatMedicationsSummary (:185-226) is not ported; each formatter is pure.
 """
 
 from __future__ import annotations
@@ -53,29 +52,6 @@ def format_diagnoses_summary(diagnoses: list, cfg: NarrativeConfig = DEFAULT_NAR
             for d in secondary:
                 icd = f" ({d['icdCode']})" if d.get("icdCode") else ""
                 lines.append(f"{prefix}{d['description']}{icd}")
-    return "\n".join(lines)
-
-
-def format_medications_summary(medications: list, cfg: NarrativeConfig = DEFAULT_NARRATIVE_CONFIG) -> str:
-    """medications: [{name, dose?, route, frequency, status?}]"""
-    if not medications:
-        return ""
-    active = [m for m in medications if m.get("status") != "DISCONTINUED"]
-    if cfg.verbosity == "MINIMAL":
-        return f"{len(active)} active medications"
-    prefix = "• " if cfg.use_bullet_points else "- "
-    lines = []
-    for med in active:
-        parts = [med["name"]]
-        if med.get("dose"):
-            parts.append(med["dose"])
-        if med.get("route") and med["route"] != "UNKNOWN" and cfg.use_abbreviations:
-            parts.append(med["route"])
-        if med.get("frequency") and med["frequency"] != "UNKNOWN":
-            parts.append(med["frequency"])
-        lines.append(prefix + " ".join(parts))
-    if cfg.verbosity == "BRIEF" and len(lines) > 5:
-        return "\n".join(lines[:5]) + f"\n... and {len(lines) - 5} more"
     return "\n".join(lines)
 
 

@@ -13,7 +13,8 @@ types, both sequential and Adam7-interlaced rasters. The interlace trick:
 features are per-channel SUMS and every pixel appears in exactly one Adam7
 pass, so each pass sub-image is unfiltered and summed independently — no
 positional reassembly needed. The encoder writes colour types 0/2 (depth 8,
-optional Adam7) plus palette images, as the synthesis/test helper.
+optional Adam7) for synthesis; the palette writer the decoder tests use is
+encode_png_palette in tests/engine_reference.py.
 
 Feature definition (media_codecs contract): per-channel
 [sum(channel)/(maxval*n_px)] over the decoded raster, maxval = 2^depth - 1
@@ -89,44 +90,6 @@ def encode_png(
         PNG_SIG
         + _crc_chunk(b"IHDR", ihdr)
         + _crc_chunk(b"IDAT", zlib.compress(raw, 6))
-        + _crc_chunk(b"IEND", b"")
-    )
-
-
-def encode_png_palette(
-    indices: bytes, width: int, height: int, palette: bytes, depth: int = 8
-) -> bytes:
-    """Palette (colour type 3) writer: indices = w*h palette indices,
-    palette = packed RGB bytes, depth in {1,2,4,8} (indices are bit-packed
-    per scanline for depth < 8)."""
-    if depth not in (1, 2, 4, 8):
-        raise ValueError("palette depth must be 1, 2, 4 or 8")
-    n_colors = len(palette) // 3
-    if len(palette) != n_colors * 3 or not (1 <= n_colors <= 256):
-        raise ValueError("palette must be 3*n bytes, 1 <= n <= 256")
-    if len(indices) != width * height:
-        raise ValueError("index buffer size mismatch")
-    if max(indices) >= min(n_colors, 1 << depth):
-        raise ValueError("index out of range for palette/depth")
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, 3, 0, 0, 0)
-    raw = bytearray()
-    per_byte = 8 // depth
-    for y in range(height):
-        raw.append(0)
-        row = indices[y * width : (y + 1) * width]
-        if depth == 8:
-            raw += row
-        else:
-            for i in range(0, width, per_byte):
-                b = 0
-                for j, v in enumerate(row[i : i + per_byte]):
-                    b |= v << (8 - depth * (j + 1))
-                raw.append(b)
-    return (
-        PNG_SIG
-        + _crc_chunk(b"IHDR", ihdr)
-        + _crc_chunk(b"PLTE", palette)
-        + _crc_chunk(b"IDAT", zlib.compress(bytes(raw), 6))
         + _crc_chunk(b"IEND", b"")
     )
 

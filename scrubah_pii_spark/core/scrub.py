@@ -344,16 +344,3 @@ def scrub_text_audited(text: str, enable_context_detection: bool = True):
     )
     return outcome, audit
 
-
-# --- leak-check predicate (schemas/phi.ts:75-83) -------------------------------
-_LEAK_PATTERNS = (
-    re.compile(r"\b\d{3}[-.]?\d{3}[-.]?\d{4}\b", A),                      # phone
-    re.compile(r"\b\d{3}-\d{2}-\d{4}\b", A),                              # SSN
-    re.compile(r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b", A),  # email
-    re.compile(r"\b\d{5}(?:-\d{4})?\b", A),                               # zip
-)
-
-
-def might_contain_pii(text: str) -> bool:
-    """Heuristic leak detector run as a validation stage before any sink."""
-    return any(p.search(text) for p in _LEAK_PATTERNS)

@@ -430,8 +430,9 @@ def q_jaccard_group_edges(spark, sf_dir):
     """Production (bounded-output) form of jaccard dedup: identical-set
     groups emit representative->member 1.0 edges (m-1 rows, not m(m-1)/2)
     and distinct-set pairs emit one rep<->rep edge. The full pair list of
-    jaccard_pairs is recoverable via expand_jaccard_group_edges
-    (pytest-proven); output is linear in distinct sets + corpus size."""
+    jaccard_pairs is recoverable via expand_jaccard_group_edges in
+    tests/dedup_reference.py (pytest-proven); output is linear in distinct
+    sets + corpus size."""
     from .operators.dedup import exact_jaccard_pairs_prefix
 
     df = _spread(_docs(spark, sf_dir))
@@ -1506,8 +1507,8 @@ def q_yaml_sink(spark, sf_dir):
 def q_timeline_report(spark, sf_dir):
     """Master-timeline markdown (timelineOrganizer.effect.ts:345-452) per
     user over events — the reference's flagship corpus output. The per-user
-    report string is built by the SAME operators.report.timeline_markdown
-    function the batch report job uses, inside an Arrow-grouped UDF."""
+    report string is built by operators.report.timeline_markdown inside an
+    Arrow-grouped UDF."""
     import pandas as pd
     from pyspark.sql.types import StringType
 

@@ -1,86 +1,18 @@
-"""Document clustering: connected components over similarity pairs +
-representative selection.
+"""Document clustering: connected components over LSH-bucketed cosine pairs.
 
 Reference semantics: semanticDedup.effect.ts:278-417 (Union-Find over pairs
->= 0.85) and :422-497 (representative score = 0.3*lenNorm + 0.2*recency +
-0.3*quality + 0.2*min(medDensity/20, 1), argmax per cluster).
+>= 0.85). Representative selection (:422-497) is not ported.
 
-Spark-first how: Union-Find is sequential; the distributed equivalent is
-alternating large-star/small-star iterations (Kiveris et al., "Connected
-Components in MapReduce and Beyond") expressed as DataFrame joins — converges
-in O(log n) rounds; each round is one shuffle on the node key. Representative
-selection is a window argmax per cluster_id.
+Spark-first how: pairs require equal hyperplane signatures, so components
+never span buckets and Union-Find runs per bucket after one shuffle
+(lsh_semantic_clusters). The generic iterative star-contraction
+(connected_components in tests/engine_reference.py) is the reference it is
+checked against.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-
-def connected_components(
-    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 20
-) -> DataFrame:
-    """(node, cluster_id) with cluster_id = min node id in the component.
-    Input: undirected edge list. Star-contraction via min-neighbor
-    propagation until fixpoint."""
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    for round_i in range(max_iter):
-        # (1) propagate the min component label across edges
-        nbr = (
-            edges.join(labels.withColumnRenamed("node", "u"), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # (2) pointer jumping: comp(node) <- comp(comp(node)) — path
-        # compression makes convergence O(log diameter) instead of O(diameter)
-        parent = labels.select(
-            F.col("node").alias("comp"), F.col("comp").alias("grand")
-        )
-        new_labels = (
-            labels.join(nbr, "node", "left")
-            .join(parent, "comp", "left")
-            .withColumn(
-                "new_comp",
-                F.least(
-                    F.col("comp"),
-                    F.coalesce(F.col("nbr_comp"), F.col("comp")),
-                    F.coalesce(F.col("grand"), F.col("comp")),
-                ),
-            )
-            .select("node", F.col("new_comp").alias("comp"))
-        )
-        # truncate lineage every 2nd round (checkpoint itself costs a job;
-        # 2 rounds of joins keep the plan small enough for Catalyst)
-        if round_i % 2 == 1 or round_i == max_iter - 1:
-            labels_new = new_labels.localCheckpoint(eager=True)
-        else:
-            labels_new = new_labels
-        # convergence check every other round: the check itself costs a join
-        # + action, and pointer-jumping rarely converges in round 1
-        if round_i % 2 == 1 or round_i == max_iter - 1:
-            changed = (
-                labels_new.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .limit(1)
-                .count()
-            )
-            labels = labels_new
-            if changed == 0:
-                break
-        else:
-            labels = labels_new
-    return labels.select(F.col("node"), F.col("comp").alias("cluster_id"))
+from pyspark.sql import DataFrame
 
 
 def lsh_semantic_clusters(
@@ -102,8 +34,9 @@ def lsh_semantic_clusters(
 
     Parity: signatures and cosines use the same sequential double fold as
     the Spark expression / DuckDB oracle (bit-identical thresholds). Output
-    matches connected_components() over cosine_pairs(exact=False) exactly:
-    only nodes with >= 1 edge appear; cluster_id = min node id."""
+    matches connected_components() over cosine_pairs(exact=False), both in
+    tests/engine_reference.py, exactly: only nodes with >= 1 edge appear;
+    cluster_id = min node id."""
     from .similarity import _planes
 
     planes = [[float(x) for x in p] for p in _planes(dim, n_planes, seed)]
@@ -199,16 +132,3 @@ def lsh_semantic_clusters(
     return with_sig.repartition(n_parts, "_sig").groupBy("_sig").applyInPandas(
         cluster_bucket, schema="node bigint, cluster_id bigint"
     )
-
-
-def select_representatives(
-    docs: DataFrame, clusters: DataFrame, id_col: str, score_col: str = "rep_score"
-) -> DataFrame:
-    """Join docs to cluster ids; argmax score per cluster via row_number."""
-    joined = docs.join(
-        clusters.withColumnRenamed("node", id_col), id_col, "left"
-    ).withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col))
-    )  # singletons form their own cluster
-    w = Window.partitionBy("cluster_id").orderBy(F.desc(score_col), F.asc(id_col))
-    return joined.withColumn("is_representative", F.row_number().over(w) == 1)

@@ -9,7 +9,8 @@ compressionPipeline.effect.ts:189-227 (Jaccard >= 0.85 word sets).
 Spark-first how (scale): the reference's O(n^2) vs-all-previous scans are
 replaced by
   * exact: window over content_hash (one shuffle on the hash key),
-  * near-dup: SimHash LSH banding (4 bands x 16 bits); every member of a
+  * near-dup: SimHash LSH banding (2 bands x 16 bits of the low half, which
+    simhash_int mirrors into the high half); every member of a
     (band, bits) bucket is hamming-verified with native xor/bit_count
     against the bucket's earliest (ts, url) doc — a window, no pair join,
   * "first previous wins" -> min_by((ts, url)) over verified candidates,
@@ -40,10 +41,11 @@ def exact_jaccard_pairs_prefix(
 ) -> DataFrame:
     """Production-scale exact Jaccard pairs >= threshold via PREFIX FILTERING
     (the AllPairs/PPJoin family — Bayardo et al., WWW'07; public technique):
-    results are IDENTICAL to exact_jaccard_pairs (pytest-proven), but the
-    word join explodes only each distinct set's PREFIX — its rarest
-    p = |s| - floor(t*|s|) + 1 words under the global (document-frequency,
-    word) order — instead of every word.
+    results are IDENTICAL to the naive exact_jaccard_pairs reference in
+    tests/dedup_reference.py (pytest-proven), but the word join explodes
+    only each distinct set's PREFIX — its rarest p = |s| - floor(t*|s|) + 1
+    words under the global (document-frequency, word) order — instead of
+    every word.
 
     Why this de-quadratics the hot keys: a pair with J >= t must share at
     least one prefix token (if a's prefix misses b entirely, the
@@ -56,7 +58,7 @@ def exact_jaccard_pairs_prefix(
     ceil(t*|s|) to stay safe under IEEE rounding of t*|s| — one extra prefix
     token, never a recall loss.)
 
-    Like exact_jaccard_pairs, identical word sets collapse to one
+    Like that reference, identical word sets collapse to one
     representative group before any join (set-identity dedup — a superset of
     exact text dedup after normalization), so duplicate-heavy corpora cost
     O(distinct sets), and within-group pairs emit at jaccard 1.0 directly.
@@ -69,8 +71,9 @@ def exact_jaccard_pairs_prefix(
     identical-set group emit (representative=min(id), member, 1.0) edges —
     m-1 rows instead of m(m-1)/2 — and one (rep_a, rep_b, jaccard) edge per
     qualifying DISTINCT-set pair. The full pair list is recoverable with
-    expand_jaccard_group_edges (pytest proves expansion == pairs), so no
-    information is lost; output is linear in distinct sets + group sizes."""
+    expand_jaccard_group_edges in tests/dedup_reference.py (pytest proves
+    expansion == pairs), so no information is lost; output is linear in
+    distinct sets + group sizes."""
     wordsets = df.select(
         F.col(id_col).alias("_id"),
         F.array_sort(
@@ -338,50 +341,6 @@ def _jaccard_bitmask_verified(
     return pairs.join(ga, "fp_a").join(gb, "fp_b")
 
 
-def expand_jaccard_group_edges(edges: DataFrame) -> DataFrame:
-    """Inverse of exact_jaccard_pairs_prefix(expand_groups=False): rebuild
-    the full member-pair list from bounded group edges. 1.0 edges are
-    rep->member identical-set membership (distinct word sets cannot reach
-    jaccard 1.0); <1.0 edges connect group representatives, and every member
-    of one group has the same jaccard to every member of the other because
-    their word sets are identical. Used by pytest to prove
-    expansion(group_edges) == exact_jaccard_pairs_prefix(expand_groups=True);
-    production dedup consumes the bounded edges directly and never expands."""
-    ones = edges.filter(F.col("jaccard") == 1.0)
-    mem = (
-        ones.select(F.col("id_a").alias("rep"), F.col("id_b").alias("member"))
-        .unionByName(ones.select(F.col("id_a").alias("rep"), F.col("id_a").alias("member")))
-        .distinct()
-    )
-    within = (
-        mem.alias("a")
-        .join(mem.alias("b"), "rep")
-        .filter(F.col("a.member") < F.col("b.member"))
-        .select(
-            F.col("a.member").alias("id_a"),
-            F.col("b.member").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # cross edges: map each endpoint rep to its full member set (singleton
-    # groups have no 1.0 edges -> coalesce to the rep itself)
-    ma = mem.select(F.col("rep").alias("id_a"), F.col("member").alias("_ma"))
-    mb = mem.select(F.col("rep").alias("id_b"), F.col("member").alias("_mb"))
-    cross = (
-        edges.filter(F.col("jaccard") < 1.0)
-        .join(ma, "id_a", "left")
-        .withColumn("_ma", F.coalesce("_ma", F.col("id_a")))
-        .join(mb, "id_b", "left")
-        .withColumn("_mb", F.coalesce("_mb", F.col("id_b")))
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return within.unionByName(cross)
-
-
 def dedup_verdicts_fused(
     slim: DataFrame,
     url_col: str = "url",
@@ -392,7 +351,6 @@ def dedup_verdicts_fused(
     near_threshold: float = 0.95,
     same_event_threshold: float = 0.70,
     same_event_hours: float = 72.0,
-    bands: int = 4,
 ) -> DataFrame:
     """Exact-dup removal + bucket-representative near-dup verdicts in ONE
     fused chain over a slim (url, ts, doc_type, simhash, content_hash)
@@ -417,7 +375,12 @@ def dedup_verdicts_fused(
     missed this round; dist<=3 pairs still collide with the rep's bucket in
     >=1 band, so the >=0.95 tier keeps high recall. The unfused composition
     it replaced lives in tests/dedup_reference.py, which the e2e tests
-    compare it to."""
+    compare it to.
+
+    The input simhash must have identical 32-bit halves, as
+    core.hashing.simhash_int writes it: only the low half's two 16-bit bands
+    are exploded, because the high half's bands would hold the same bits and
+    repeat the same buckets, representatives and verdicts."""
     order_key = F.concat_ws(
         "|",
         F.date_format(F.col(ts_col).cast("timestamp"), "yyyyMMddHHmmss"),
@@ -445,9 +408,9 @@ def dedup_verdicts_fused(
             F.array(*[
                 F.struct(
                     F.lit(b).alias("_band"),
-                    simhash_band_expr(F.col(simhash_col), b, bands).alias("_bits"),
+                    simhash_band_expr(F.col(simhash_col), b, 4).alias("_bits"),
                 )
-                for b in range(bands)
+                for b in (0, 1)  # 16-bit bands 0 and 1: the low half
             ])
         ).alias("_bk"),
     ).select(
@@ -481,7 +444,7 @@ def dedup_verdicts_fused(
         )
     )
 
-    # exchange 3: fold the <= `bands` rows per doc into one verdict.
+    # exchange 3: fold the <= 2 band rows per doc into one verdict.
     # min_by order: matched rows use the rep's order key; unmatched rows get
     # the '~' sentinel (0x7E — sorts after every yyyyMMdd...|url key), so
     # first-previous-wins among matches and 'unique' only when nothing matched.
@@ -603,7 +566,8 @@ def minhash_dedup_pairs(
     signatures (est 1.0) pair within the group directly, and the banded
     self-join runs over DISTINCT signatures only. A boilerplate-heavy corpus
     where thousands of docs share one signature costs O(group sizes) instead
-    of O(docs^2) band-bucket blowup (same trick as exact_jaccard_pairs)."""
+    of O(docs^2) band-bucket blowup (same trick as
+    exact_jaccard_pairs_prefix)."""
     rows = k // bands
     sigs = df.select(
         F.col(url_col).alias("_url"), F.col("minhash")
@@ -664,83 +628,3 @@ def minhash_dedup_pairs(
         F.col("id_b").alias("url_b"),
         F.col("jaccard").alias("est_jaccard"),
     )
-
-
-def exact_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str,
-    threshold: float = 0.85, min_word_len: int = 3,
-) -> DataFrame:
-    """Exact word-set Jaccard pairs >= threshold (the reference's dedup rule,
-    words len > 3).
-
-    Scale design: docs are first grouped by their DISTINCT word set (sorted
-    fingerprint) — the word-level self-join then runs over distinct sets, not
-    documents, so corpora with shared vocabulary (boilerplate/templated webtext
-    is exactly that) cost O(distinct_sets^2) candidates instead of O(docs^2).
-    Identical-set doc groups pair at jaccard=1.0 directly; cross-set pairs are
-    expanded back to doc pairs at the end. Results identical to the naive
-    all-pairs definition."""
-    wordsets = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), r"\s+"),
-                    lambda w: F.length(w) > min_word_len,
-                )
-            )
-        ).alias("ws"),
-    ).withColumn("fp", F.md5(F.concat_ws("\x1f", "ws")))
-
-    groups = wordsets.groupBy("fp").agg(
-        F.collect_list("_id").alias("members"),
-        F.first("ws").alias("ws"),
-        F.size(F.first("ws")).alias("sz"),
-    ).persist()
-
-    # within-group pairs: identical non-empty sets => jaccard 1.0
-    m = groups.filter(F.col("sz") > 0).select(F.explode("members").alias("id_x"), "fp")
-    within = (
-        m.alias("a")
-        .join(m.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id_x") < F.col("b.id_x")))
-        .select(
-            F.col("a.id_x").alias("id_a"),
-            F.col("b.id_x").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-
-    # cross-group pairs via word join over DISTINCT sets
-    words = groups.select("fp", "sz", F.explode("ws").alias("word"))
-    inter = (
-        words.alias("a")
-        .join(words.alias("b"),
-              (F.col("a.word") == F.col("b.word")) & (F.col("a.fp") < F.col("b.fp")))
-        .groupBy(F.col("a.fp").alias("fp_a"), F.col("b.fp").alias("fp_b"))
-        .agg(F.count("*").alias("inter"),
-             F.first(F.col("a.sz")).alias("sz_a"),
-             F.first(F.col("b.sz")).alias("sz_b"))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    ga = groups.select(F.col("fp").alias("fp_a"), F.col("members").alias("members_a"))
-    gb = groups.select(F.col("fp").alias("fp_b"), F.col("members").alias("members_b"))
-    cross = (
-        inter.join(ga, "fp_a").join(gb, "fp_b")
-        .select(
-            F.explode("members_a").alias("id_x"), F.col("members_b"), "jaccard"
-        )
-        .select(
-            F.col("id_x"), F.explode("members_b").alias("id_y"), "jaccard"
-        )
-        .select(
-            F.least("id_x", "id_y").alias("id_a"),
-            F.greatest("id_x", "id_y").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return within.unionByName(cross)

@@ -12,13 +12,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
-from ..core.textstats import _WS_RE
+_WS_RE = re.compile(r"\s+")
 
 _ST_MODEL = None
 

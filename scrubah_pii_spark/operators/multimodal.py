@@ -23,15 +23,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_META_TYPE = StructType(
-    [
-        StructField("media_type", StringType()),   # image | audio | video
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", IntegerType()),
-        StructField("codec", StringType()),
-    ]
-)
 
 MEDIA_FEATURES_TYPE = StructType(
     [

@@ -1,42 +1,14 @@
-"""Timeline / report jobs (the reference's corpus-level outputs).
+"""Timeline / report helpers (the reference's corpus-level outputs).
 
-Reference semantics: timelineOrganizer.effect.ts — chronological sort +
-document numbering (:227-241), summary aggregate (:310-340), markdown report
-(:345-452). The report is inherently small (one document per corpus slice);
-aggregation is distributed, serialization happens once on the driver over the
-aggregated rows (never over raw docs)."""
+Reference semantics: timelineOrganizer.effect.ts markdown report (:345-452),
+which q_timeline_report builds per user inside an Arrow-grouped UDF after a
+distributed aggregation (its numbering and summary are computed in that
+query); ocrQualityGate.effect.ts routing levels."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def chronological_numbering(df: DataFrame, ts_col: str = "warc_ts",
-                            id_col: str = "url", reverse: bool = False) -> DataFrame:
-    """Global sort + document_number = idx+1. Global window => single
-    partition; appropriate for report-sized frames only (use zipWithIndex-
-    style bucketed numbering for full-corpus outputs)."""
-    order = [F.desc(ts_col), F.desc(id_col)] if reverse else [F.asc(ts_col), F.asc(id_col)]
-    w = Window.orderBy(*order)
-    return df.withColumn("document_number", F.row_number().over(w))
-
-
-def timeline_summary(df: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
-    """Totals, dup counts, date range, counts per docType
-    (timelineOrganizer.effect.ts:310-340)."""
-    base = df.agg(
-        F.count("*").alias("total_documents"),
-        F.sum(F.col("difference_type").isin("near-duplicate").cast("int")).alias("duplicates"),
-        F.min(ts_col).alias("date_start"),
-        F.max(ts_col).alias("date_end"),
-    )
-    by_type = df.groupBy("doc_type").agg(F.count("*").alias("n"))
-    return base.crossJoin(
-        by_type.agg(
-            F.map_from_entries(F.collect_list(F.struct("doc_type", "n"))).alias("by_doc_type")
-        )
-    )
 
 
 def timeline_markdown(summary_row, docs_rows, max_lines_per_doc: int = 50) -> str:
@@ -60,22 +32,6 @@ def timeline_markdown(summary_row, docs_rows, max_lines_per_doc: int = 50) -> st
         lines.extend(body)
         lines.append("")
     return "\n".join(lines)
-
-
-def validate_urls(df: DataFrame, url_col: str = "url",
-                  allowed_schemes=("http", "https"),
-                  blocked_extensions=(".exe", ".zip", ".jpg", ".png", ".gif",
-                                      ".mp4", ".pdf", ".css", ".js")) -> DataFrame:
-    """validateFile analog for webtext (fileValidation.ts:73-143 semantics:
-    normalization + allowlist filter) — scheme allowlist + binary-extension
-    blocklist + length cap, all native expressions."""
-    scheme = F.regexp_extract(F.col(url_col), r"^([a-z][a-z0-9+.-]*):", 1)
-    path = F.lower(F.regexp_extract(F.col(url_col), r"^[^?#]*", 0))
-    ext_ok = ~path.rlike("(" + "|".join(e.replace(".", r"\.") for e in blocked_extensions) + ")$")
-    return df.withColumn(
-        "url_valid",
-        scheme.isin(*allowed_schemes) & ext_ok & (F.length(url_col) <= 2048),
-    )
 
 
 def quality_routing(df: DataFrame, score_col: str = "quality_score") -> DataFrame:

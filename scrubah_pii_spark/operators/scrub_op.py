@@ -311,7 +311,8 @@ def make_relevance_metrics_udf(generation: int = 2):
 
 def leak_check_expr(scrubbed: Column) -> Column:
     """mightContainPII (schemas/phi.ts:75-83) as a native rlike gate — runs
-    before every sink; the pipeline asserts count == 0."""
+    before every sink; the pipeline asserts count == 0. Its pure-Python twin,
+    might_contain_pii, is the test reference in tests/engine_reference.py."""
     return (
         scrubbed.rlike(r"\b\d{3}[-.]?\d{3}[-.]?\d{4}\b")
         | scrubbed.rlike(r"\b\d{3}-\d{2}-\d{4}\b")

@@ -3,13 +3,14 @@
 Reference semantics: semanticDedup.effect.ts:231-273 — full O(n^2) cosine,
 DUPLICATE >= 0.95 / SIMILAR >= 0.85 / RELATED >= 0.5. That is impossible at
 10^12 docs, so:
-  * brute_force_topk — exact baseline: broadcast the (small) query set,
-    native zip_with/aggregate dot products, rank per query. Correct at any
-    corpus size as long as the QUERY side is small (it is broadcast).
   * lsh_bucketed_topk — scale path: random-hyperplane signatures bucket the
     corpus; candidates only within the query's bucket(s). Planes are
     deterministic (seeded); signature computed natively (no Python per row).
-  * cosine_pairs — all-pairs >= threshold within LSH buckets (semantic dedup).
+  * ivf_topk — centroid cells, exact ranking inside the probed cells.
+  * lsh_cosine_pairs_fast — all-pairs >= threshold within LSH buckets
+    (semantic dedup), numpy kernels per bucket block.
+The exact baselines these are checked against (brute_force_topk, the
+expression-fold cosine_pairs) live in tests/engine_reference.py.
 """
 
 from __future__ import annotations
@@ -39,27 +40,6 @@ def _norm(a: Column) -> Column:
 def cosine_expr(a: Column, b: Column) -> Column:
     d = _norm(a) * _norm(b)
     return F.when(d > 0, _dot(a, b) / d).otherwise(F.lit(0.0))
-
-
-def brute_force_topk(
-    corpus: DataFrame, queries: DataFrame, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbours per query (queries broadcast)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec"))
-    joined = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.withColumn("cosine", cosine_expr(F.col("_qvec"), F.col("_cvec")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
 
 
 def _planes(dim: int, n_planes: int, seed: int = 42) -> list:
@@ -486,38 +466,4 @@ def lsh_cosine_pairs_fast(
         .applyInPandas(
             pair_block, schema="id_a long, id_b long, cosine double, tier string"
         )
-    )
-
-
-def cosine_pairs(
-    corpus: DataFrame, threshold: float = 0.85,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    n_planes: int = 6, seed: int = 42, exact: bool = False,
-    dim: int | None = None,
-) -> DataFrame:
-    """All pairs with cosine >= threshold. exact=True does the full self-join
-    (test/oracle scale only); default buckets by hyperplane signature first.
-    Pass `dim` explicitly to avoid a driver-side .first() probe job.
-    Tier labels per the reference: duplicate >=0.95, similar >=0.85,
-    related >=0.5."""
-    c = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    if not exact:
-        if dim is None:
-            dim = len(corpus.select(vec_col).first()[0])
-        planes = _planes(dim, n_planes, seed)
-        c = c.withColumn("_sig", hyperplane_signature(F.col("_v"), planes))
-        join_cond = (F.col("a._sig") == F.col("b._sig")) & (F.col("a._id") < F.col("b._id"))
-    else:
-        join_cond = F.col("a._id") < F.col("b._id")
-    a, b = c.alias("a"), c.alias("b")
-    pairs = a.join(b, join_cond).select(
-        F.col("a._id").alias("id_a"),
-        F.col("b._id").alias("id_b"),
-        cosine_expr(F.col("a._v"), F.col("b._v")).alias("cosine"),
-    )
-    return pairs.filter(F.col("cosine") >= threshold).withColumn(
-        "tier",
-        F.when(F.col("cosine") >= 0.95, "duplicate")
-        .when(F.col("cosine") >= 0.85, "similar")
-        .otherwise("related"),
     )

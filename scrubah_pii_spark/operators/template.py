@@ -3,7 +3,8 @@
 Two tiers, mirroring the reference:
   1. line-frequency templates (production cheap path):
      compressionPipeline.effect.ts:141-183 — trimmed lines >= 20 chars counted
-     once per doc; template iff present in >= max(2, floor(50% * docs)); strip.
+     once per doc; template iff present in >= max(2, floor(50% * docs)).
+     Detection only: no query strips these lines.
   2. FNV-1a n-gram corpus (full path): templateDetection.effect.ts:143-312 —
      2..5-line n-gram windows, normalized, FNV-1a-64 hashed; template iff
      distinct-doc count >= max(min_docs, 30% * docs).
@@ -16,7 +17,7 @@ fraction of docs), so the join side is always broadcastable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .scrub_op import fnv1a64_udf
@@ -58,36 +59,6 @@ def line_frequency_templates(
         .crossJoin(F.broadcast(scalars))
         .filter(F.col("doc_count") >= threshold)
         .drop("_docs")
-    )
-
-
-def strip_template_lines(
-    df: DataFrame, templates: DataFrame, text_col: str, url_col: str = "url",
-    out_col: str = "stripped_text",
-) -> DataFrame:
-    """Remove template lines from each doc; adds out_col + chars_removed.
-    templates is broadcast (tiny by construction)."""
-    lines = _lines(df, text_col, url_col)
-    kept = (
-        lines.join(
-            F.broadcast(templates.select(F.col("trimmed").alias("_tpl"))),
-            lines["trimmed"] == F.col("_tpl"),
-            "left_anti",
-        )
-        .groupBy("_url")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "line"))).alias("_ordered"))
-        .select(
-            "_url",
-            F.concat_ws(
-                "\n", F.transform("_ordered", lambda s: s.getField("line"))
-            ).alias(out_col),
-        )
-    )
-    return (
-        df.join(kept, df[url_col] == kept["_url"], "left")
-        .drop("_url")
-        .withColumn(out_col, F.coalesce(F.col(out_col), F.lit("")))
-        .withColumn("chars_removed", F.length(text_col) - F.length(out_col))
     )
 
 
@@ -247,9 +218,9 @@ def _ngram_corpus_raw(
             "content", "sample", "avg_line_offset", "_avg_lines",
         )
     )
-    # classify_corpus's position rule with the avg-lines scalar read from the
-    # plan instead of the driver: `float(avg or 0.0) <= 0 -> MIDDLE` becomes
-    # coalesce(avg, 0.0) <= 0; the offset/avg double division is unchanged.
+    # position rule (templateDetection.effect.ts): START/END/MIDDLE by avg
+    # line offset vs 20%/80% of avg doc length, with the avg-lines scalar
+    # read from the plan; a NULL or non-positive avg reads MIDDLE.
     pos_expr = (
         F.when(F.coalesce(F.col("_avg_lines"), F.lit(0.0)) <= 0.0, F.lit("MIDDLE"))
         .when(F.col("avg_line_offset") / F.col("_avg_lines") <= 0.2, F.lit("START"))
@@ -311,7 +282,8 @@ def strip_ngram_templates(
     lines come from ALL matches while refs keep only the overlap-deduped
     subset, so when overlap dedup replaces a kept ref with a later
     larger-end match, the replaced ref's leading lines are stripped yet
-    appear in no kept ref — reconstruct_ngram_documents cannot restore them
+    appear in no kept ref — reconstruct_ngram_documents (the inverse, in
+    tests/engine_reference.py) cannot restore them
     (tests/test_template_ngram.py::test_overlap_replacement_known_lossy
     documents the case). Round-trip identity holds whenever kept refs cover
     all stripped lines — the common no-overlap-replacement case.
@@ -432,46 +404,9 @@ def strip_ngram_templates(
     return out
 
 
-def reconstruct_ngram_documents(
-    stripped: DataFrame, corpus: DataFrame, url_col: str = "url",
-    out_col: str = "reconstructed",
-) -> DataFrame:
-    """Inverse of strip_ngram_templates (templateDetection.effect.ts:450-488):
-    re-insert each referenced template's ORIGINAL lines at line_start and
-    merge with unique_lines by line number. Pure DataFrame ops: explode refs,
-    broadcast-join the corpus, union, sort_array-rebuild per doc."""
-    refs = stripped.select(
-        F.col(url_col).alias("_u"), F.explode("template_refs").alias("r")
-    )
-    tpl = corpus.select("template_id", F.col("content").alias("_tcontent"))
-    tlines = (
-        refs.join(F.broadcast(tpl), refs["r.template_id"] == tpl["template_id"])
-        .select("_u", F.col("r.line_start").alias("_ls"), F.split("_tcontent", "\n").alias("_tl"))
-        .select("_u", "_ls", F.posexplode("_tl").alias("_i", "line"))
-        .select("_u", (F.col("_ls") + F.col("_i")).alias("pos"), "line")
-    )
-    ulines = stripped.select(
-        F.col(url_col).alias("_u"), F.explode("unique_lines").alias("ul")
-    ).select("_u", F.col("ul.pos").alias("pos"), F.col("ul.line").alias("line"))
-    rebuilt = (
-        tlines.unionByName(ulines)
-        .groupBy("_u")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "line"))).alias("_ordered"))
-        .select(
-            F.col("_u").alias(url_col),
-            F.concat_ws(
-                "\n", F.transform("_ordered", lambda s: s.getField("line"))
-            ).alias(out_col),
-        )
-    )
-    return stripped.join(rebuilt, url_col, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(""))
-    )
-
-
 def _classify_type_udf():
     """Arrow UDF for the template-type classifier (templateDetection.ts:
-    188-249) — shared by classify_corpus and the in-plan corpus build."""
+    188-249) used by the in-plan corpus build."""
     import pandas as pd
     from pyspark.sql.types import StringType
 
@@ -485,22 +420,3 @@ def _classify_type_udf():
         ])
 
     return classify_udf
-
-
-def classify_corpus(corpus: DataFrame, avg_doc_lines: float) -> DataFrame:
-    """Adds position (START/END/MIDDLE by 20%/80% offset rule) and
-    template_type (HEADER/FOOTER/SIGNATURE/LEGAL/... classifier,
-    templateDetection.ts:188-249) to the (small) corpus frame."""
-    if avg_doc_lines <= 0:
-        pos_expr = F.lit("MIDDLE")
-    else:
-        pos_expr = (
-            F.when(F.col("avg_line_offset") / avg_doc_lines <= 0.2, "START")
-            .when(F.col("avg_line_offset") / avg_doc_lines >= 0.8, "END")
-            .otherwise("MIDDLE")
-        )
-
-    out = corpus.withColumn("position", pos_expr)
-    return out.withColumn(
-        "template_type", _classify_type_udf()("sample", "position")
-    )

@@ -1,5 +1,5 @@
 """The flagship pipeline: extract -> langid -> quality -> scrub -> relevance
--> dedup -> leak-check -> write (+ lineage & metrics).
+-> dedup -> leak-check -> write (+ metrics).
 
 One declarative DataFrame program. Catalyst prunes `html` right after
 extraction; ALL per-document scoring (quality, langid, perplexity,
@@ -23,8 +23,8 @@ Scale design notes (100 TB / 1000 executors):
     exact-dup removal runs before the banded near-dup stage, and near-dup
     uses bucket-representative windows (no pair joins — a corpus that is one
     giant near-dup cluster costs the same as a unique corpus);
-  * output partitioned by crawl_date + bucketed url hash; per-partition
-    lineage + metrics tables feed the completed-partition manifest (resume).
+  * output partitioned by crawl_date + bucketed url hash; the stage table's
+    completed crawl_date partitions feed the resume manifest (plans.resume).
 """
 
 from __future__ import annotations
@@ -183,7 +183,7 @@ def label_stage(
     )
 
     # Drop the raw text-copy inputs: everything downstream (dedup, output,
-    # metrics, lineage) reads scrubbed_text only, and keeping extra text
+    # metrics) reads scrubbed_text only, and keeping extra text
     # copies per row multiplies cache and shuffle volume.
     return df.drop("_text_in", "_html_in", "text")
 
@@ -200,7 +200,7 @@ def run_pipeline(
     df = label_stage(df, cfg, use_crawl_lang)
 
     # Stage barrier: persist the fully-labeled frame. Two reasons:
-    #  (1) dedup, output, metrics and lineage all consume it — without the
+    #  (1) dedup, output and metrics all consume it — without the
     #      barrier Spark recomputes extract+scrub+score once per sink;
     #  (2) it stops Catalyst from substituting the (large) per-stage
     #      expression trees through the dedup joins/windows during filter
@@ -344,25 +344,3 @@ def shape_output(output: DataFrame, shaping) -> DataFrame:
             .drop("_sid")
         )
     return output.select(cols)
-
-
-def lineage_table(labeled: DataFrame) -> DataFrame:
-    """Per-document-per-pattern audit rows (AuditCollector semantics,
-    auditCollector.ts:19-149): explode the replacement map, classify the
-    pattern namespace from the placeholder."""
-    return (
-        labeled.filter(F.col("replacements").isNotNull())
-        .select(
-            "url",
-            F.explode_outer("replacements").alias("original", "placeholder"),
-        )
-        .withColumn(
-            "pattern_type",
-            F.regexp_extract("placeholder", r"\[([A-Z_]+?)[-_]\d+\]", 1),
-        )
-        .groupBy("url", "pattern_type")
-        .agg(
-            F.count("*").alias("match_count"),
-            F.sum(F.length("original")).alias("chars_removed"),
-        )
-    )

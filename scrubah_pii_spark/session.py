@@ -13,7 +13,11 @@ Scale posture (100 TB / 1000 executors) is set here once:
   - the engine's Python worker daemon (PYTHON_DAEMON_MODULE, see pyworker),
     which stops every Python task from re-reading Spark's own archives
     (~0.22 s of worker CPU per task on a 4-vCPU host). Executors must be able
-    to import the engine when the daemon starts, or no Python worker starts
+    to import the engine when the daemon starts, or no Python worker starts,
+    so spark.executorEnv.PYTHONPATH names the engine's root (the directory
+    that holds the package): workers on this machine import it from any
+    working directory. A caller's extra_conf value for it wins; a cluster
+    whose executors cannot see that path ships the engine itself (README).
 """
 
 from __future__ import annotations
@@ -55,6 +59,10 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -2,9 +2,16 @@
 exact-dup window (mark_exact_duplicates) and bucket-representative near-dup
 analysis (analyze_near_duplicates_bucketed). The engine runs the fused
 operators.dedup.dedup_verdicts_fused; tests/test_pipeline_e2e.py checks that
-it gives the same verdicts as mark -> filter -> analyze here."""
+it gives the same verdicts as mark -> filter -> analyze here.
+
+Also the Jaccard references: exact_jaccard_pairs (the all-words join the
+engine's exact_jaccard_pairs_prefix must equal), expand_jaccard_group_edges
+(rebuilds the full pair list from the engine's bounded group edges) and the
+pure-Python jaccard / word_set they are both checked against."""
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -14,6 +21,8 @@ from scrubah_pii_spark.functions.hashing_expr import (
     simhash_band_expr,
     simhash_similarity_expr,
 )
+
+_WS_RE = re.compile(r"\s+")
 
 
 def mark_exact_duplicates(
@@ -147,3 +156,140 @@ def analyze_near_duplicates_bucketed(
         )
         .withColumn("is_near_dup", F.col("difference_type") == "near-duplicate")
     )
+
+
+def expand_jaccard_group_edges(edges: DataFrame) -> DataFrame:
+    """Inverse of exact_jaccard_pairs_prefix(expand_groups=False): rebuild
+    the full member-pair list from bounded group edges. 1.0 edges are
+    rep->member identical-set membership (distinct word sets cannot reach
+    jaccard 1.0); <1.0 edges connect group representatives, and every member
+    of one group has the same jaccard to every member of the other because
+    their word sets are identical. Used by pytest to prove
+    expansion(group_edges) == exact_jaccard_pairs_prefix(expand_groups=True);
+    production dedup consumes the bounded edges directly and never expands."""
+    ones = edges.filter(F.col("jaccard") == 1.0)
+    mem = (
+        ones.select(F.col("id_a").alias("rep"), F.col("id_b").alias("member"))
+        .unionByName(ones.select(F.col("id_a").alias("rep"), F.col("id_a").alias("member")))
+        .distinct()
+    )
+    within = (
+        mem.alias("a")
+        .join(mem.alias("b"), "rep")
+        .filter(F.col("a.member") < F.col("b.member"))
+        .select(
+            F.col("a.member").alias("id_a"),
+            F.col("b.member").alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+    )
+    # cross edges: map each endpoint rep to its full member set (singleton
+    # groups have no 1.0 edges -> coalesce to the rep itself)
+    ma = mem.select(F.col("rep").alias("id_a"), F.col("member").alias("_ma"))
+    mb = mem.select(F.col("rep").alias("id_b"), F.col("member").alias("_mb"))
+    cross = (
+        edges.filter(F.col("jaccard") < 1.0)
+        .join(ma, "id_a", "left")
+        .withColumn("_ma", F.coalesce("_ma", F.col("id_a")))
+        .join(mb, "id_b", "left")
+        .withColumn("_mb", F.coalesce("_mb", F.col("id_b")))
+        .select(
+            F.least("_ma", "_mb").alias("id_a"),
+            F.greatest("_ma", "_mb").alias("id_b"),
+            "jaccard",
+        )
+    )
+    return within.unionByName(cross)
+
+
+def exact_jaccard_pairs(
+    df: DataFrame, text_col: str, id_col: str,
+    threshold: float = 0.85, min_word_len: int = 3,
+) -> DataFrame:
+    """Exact word-set Jaccard pairs >= threshold (the reference's dedup rule,
+    words len > 3).
+
+    Scale design: docs are first grouped by their DISTINCT word set (sorted
+    fingerprint) — the word-level self-join then runs over distinct sets, not
+    documents, so corpora with shared vocabulary (boilerplate/templated webtext
+    is exactly that) cost O(distinct_sets^2) candidates instead of O(docs^2).
+    Identical-set doc groups pair at jaccard=1.0 directly; cross-set pairs are
+    expanded back to doc pairs at the end. Results identical to the naive
+    all-pairs definition."""
+    wordsets = df.select(
+        F.col(id_col).alias("_id"),
+        F.array_sort(
+            F.array_distinct(
+                F.filter(
+                    F.split(F.lower(F.col(text_col)), r"\s+"),
+                    lambda w: F.length(w) > min_word_len,
+                )
+            )
+        ).alias("ws"),
+    ).withColumn("fp", F.md5(F.concat_ws("\x1f", "ws")))
+
+    groups = wordsets.groupBy("fp").agg(
+        F.collect_list("_id").alias("members"),
+        F.first("ws").alias("ws"),
+        F.size(F.first("ws")).alias("sz"),
+    ).persist()
+
+    # within-group pairs: identical non-empty sets => jaccard 1.0
+    m = groups.filter(F.col("sz") > 0).select(F.explode("members").alias("id_x"), "fp")
+    within = (
+        m.alias("a")
+        .join(m.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id_x") < F.col("b.id_x")))
+        .select(
+            F.col("a.id_x").alias("id_a"),
+            F.col("b.id_x").alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+    )
+
+    # cross-group pairs via word join over DISTINCT sets
+    words = groups.select("fp", "sz", F.explode("ws").alias("word"))
+    inter = (
+        words.alias("a")
+        .join(words.alias("b"),
+              (F.col("a.word") == F.col("b.word")) & (F.col("a.fp") < F.col("b.fp")))
+        .groupBy(F.col("a.fp").alias("fp_a"), F.col("b.fp").alias("fp_b"))
+        .agg(F.count("*").alias("inter"),
+             F.first(F.col("a.sz")).alias("sz_a"),
+             F.first(F.col("b.sz")).alias("sz_b"))
+        .withColumn(
+            "jaccard",
+            F.col("inter").cast("double")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+    ga = groups.select(F.col("fp").alias("fp_a"), F.col("members").alias("members_a"))
+    gb = groups.select(F.col("fp").alias("fp_b"), F.col("members").alias("members_b"))
+    cross = (
+        inter.join(ga, "fp_a").join(gb, "fp_b")
+        .select(
+            F.explode("members_a").alias("id_x"), F.col("members_b"), "jaccard"
+        )
+        .select(
+            F.col("id_x"), F.explode("members_b").alias("id_y"), "jaccard"
+        )
+        .select(
+            F.least("id_x", "id_y").alias("id_a"),
+            F.greatest("id_x", "id_y").alias("id_b"),
+            "jaccard",
+        )
+    )
+    return within.unionByName(cross)
+
+
+def jaccard(a: set, b: set) -> float:
+    if not a and not b:
+        return 0.0
+    union = len(a | b)
+    return len(a & b) / union if union else 0.0
+
+
+def word_set(text: str, min_len: int = 3) -> set:
+    """Word set for the reference's Jaccard dedup: words with len > 3
+    (compressionPipeline.effect.ts:195-198)."""
+    return {w for w in _WS_RE.split(text.lower()) if len(w) > min_len}

@@ -5,10 +5,7 @@ test/structuredExtraction.test.ts semantics."""
 from scrubah_pii_spark.core.extraction import (
     extract_record,
     get_lab_status,
-    parse_frequency,
     parse_modality,
-    parse_route,
-    truncate_text,
 )
 
 
@@ -29,21 +26,6 @@ class TestLabStatus:
 
 
 class TestParsers:
-    def test_bid_before_daily(self):
-        # "twice daily" must hit BID, not DAILY (ordering quirk preserved)
-        assert parse_frequency("twice daily") == "BID"
-        assert parse_frequency("BID") == "BID"
-        assert parse_frequency("daily") == "DAILY"
-        assert parse_frequency("Q8H") == "Q8H"
-        assert parse_frequency("prn") == "PRN"
-        assert parse_frequency("???") == "UNKNOWN"
-
-    def test_routes(self):
-        assert parse_route("PO") == "PO"
-        assert parse_route("intravenous") == "IV"
-        assert parse_route("topical") == "TOP"
-        assert parse_route("???") == "UNKNOWN"
-
     def test_modality(self):
         assert parse_modality("X-ray of chest") == "XRAY"
         assert parse_modality("MRI brain") == "MRI"
@@ -83,25 +65,6 @@ class TestExtractRecord:
     def test_empty(self):
         r = extract_record("")
         assert r.labs == [] and r.vitals == []
-
-
-class TestTruncate:
-    def test_truncate(self):
-        assert truncate_text("abcdefgh", 6) == "abc..."
-        assert truncate_text("abc", 6) == "abc"
-
-
-class TestSimpleHash32:
-    def test_js_parity_vectors(self):
-        # values cross-checked against the JS implementation via node
-        from scrubah_pii_spark.core.extraction import simple_hash32
-
-        assert simple_hash32("") == "00000000"
-        assert simple_hash32("abc") == "00017862"
-        assert simple_hash32("hello world") == "6aefe2c4"
-        assert simple_hash32(
-            "The patient was admitted with pneumonia today"
-        ) == "51946e22"
 
 
 class TestBpDiastolic:

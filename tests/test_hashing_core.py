@@ -1,17 +1,17 @@
 """Fingerprint kernels: FNV-1a-64, SimHash (JS int32 parity), normalization,
-n-grams, doc-type. Expectations ported from
+n-grams. Expectations ported from
 /root/reference/test/templateDetection.test.ts and contentHasher semantics."""
 
+from engine_reference import (
+    extract_ngrams,
+    normalize_for_fingerprint,
+    simhash_bits,
+)
 from scrubah_pii_spark.core.hashing import (
     content_hash,
-    detect_document_type,
-    extract_dates,
-    extract_ngrams,
     fnv1a64_hex,
     js_string_hash32,
-    normalize_for_fingerprint,
     normalize_for_hashing,
-    simhash_bits,
     simhash_int,
     simhash_similarity,
 )
@@ -140,20 +140,6 @@ class TestNormalizeForHashing:
 
     def test_hash_invariant_to_case_and_ws(self):
         assert content_hash("Hello   World") == content_hash("hello world")
-
-
-class TestDatesAndDocType:
-    def test_extract_dates_dedup(self):
-        dates = extract_dates("seen 01/02/2024 and again 01/02/2024 then Mar 5, 2024")
-        assert dates.count("01/02/2024") == 1
-        assert any("Mar 5, 2024" in d for d in dates)
-
-    def test_doc_type_cascade(self):
-        assert detect_document_type("cbc_results.pdf", "") == "lab_report"
-        assert detect_document_type("", "MRI of the brain") == "imaging"
-        assert detect_document_type("", "biopsy specimen received") == "pathology"
-        assert detect_document_type("note.pdf", "SOAP assessment") == "progress_note"
-        assert detect_document_type("", "just text") == "unknown"
 
 
 class TestFnvBatchRobustness:

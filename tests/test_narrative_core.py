@@ -6,7 +6,6 @@ from scrubah_pii_spark.core.narrative import (
     NarrativeConfig,
     format_diagnoses_summary,
     format_labs_summary,
-    format_medications_summary,
     format_vitals_summary,
     narrative_for_extraction,
 )
@@ -15,11 +14,6 @@ DX = [
     {"description": "Type 2 diabetes", "type": "PRIMARY", "icdCode": "E11.9"},
     {"description": "Hypertension", "type": "SECONDARY", "icdCode": "I10"},
     {"description": "Hyperlipidemia", "type": "SECONDARY"},
-]
-MEDS = [
-    {"name": "metformin", "dose": "500 mg", "route": "PO", "frequency": "BID"},
-    {"name": "lisinopril", "dose": "10 mg", "route": "PO", "frequency": "DAILY"},
-    {"name": "oldmed", "route": "PO", "frequency": "DAILY", "status": "DISCONTINUED"},
 ]
 LABS = [
     {"testName": "WBC", "value": 15.0, "unit": "K/uL", "status": "HIGH"},
@@ -53,22 +47,6 @@ class TestDiagnoses:
 
     def test_empty(self):
         assert format_diagnoses_summary([]) == ""
-
-
-class TestMedications:
-    def test_discontinued_filtered(self):
-        out = format_medications_summary(MEDS)
-        assert "oldmed" not in out
-        assert "• metformin 500 mg PO BID" in out
-
-    def test_minimal(self):
-        assert format_medications_summary(MEDS, NarrativeConfig(verbosity="MINIMAL")) == "2 active medications"
-
-    def test_brief_caps_five(self):
-        many = [{"name": f"med{i}", "route": "PO", "frequency": "DAILY"} for i in range(8)]
-        out = format_medications_summary(many, NarrativeConfig(verbosity="BRIEF"))
-        assert out.endswith("... and 3 more")
-        assert out.count("\n") == 5
 
 
 class TestLabs:

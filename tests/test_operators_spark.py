@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scrubah_pii_spark.core.hashing import simhash_int
-from scrubah_pii_spark.core.textstats import jaccard, word_set
+from dedup_reference import jaccard, word_set
 
 
 @pytest.fixture(scope="module")
@@ -38,7 +38,7 @@ class TestExactDedup:
 
 class TestJaccardPairs:
     def test_matches_pure_python(self, spark, docs_df):
-        from scrubah_pii_spark.operators.dedup import exact_jaccard_pairs
+        from dedup_reference import exact_jaccard_pairs
 
         pairs = {
             (r["id_a"], r["id_b"]): r["jaccard"]
@@ -70,10 +70,8 @@ class TestJaccardPairs:
     def test_prefix_variant_identical_on_corpus(self, spark, webpages):
         """AllPairs prefix filtering == naive definition on the 200-doc
         synthetic corpus at the reference threshold and a loose one."""
-        from scrubah_pii_spark.operators.dedup import (
-            exact_jaccard_pairs,
-            exact_jaccard_pairs_prefix,
-        )
+        from dedup_reference import exact_jaccard_pairs
+        from scrubah_pii_spark.operators.dedup import exact_jaccard_pairs_prefix
 
         for t in (0.85, 0.5):
             naive = {
@@ -96,11 +94,11 @@ class TestJaccardPairs:
         to the naive definition. (The small-vocab fixtures above now route
         through the bitmask branch, so without this corpus the prefix path
         would lose its equivalence coverage.)"""
-        from scrubah_pii_spark.operators.dedup import (
+        from dedup_reference import (
             exact_jaccard_pairs,
-            exact_jaccard_pairs_prefix,
             expand_jaccard_group_edges,
         )
+        from scrubah_pii_spark.operators.dedup import exact_jaccard_pairs_prefix
 
         vocab = [f"word{i:03d}" for i in range(120)]
         docs = [
@@ -133,11 +131,11 @@ class TestJaccardPairs:
         """<=64-word vocabulary routes through the blocked-bitmask verify;
         duplicates, subsets, an all-short-words (empty-set) doc and exact
         threshold-boundary pairs must all match the naive definition."""
-        from scrubah_pii_spark.operators.dedup import (
+        from dedup_reference import (
             exact_jaccard_pairs,
-            exact_jaccard_pairs_prefix,
             expand_jaccard_group_edges,
         )
+        from scrubah_pii_spark.operators.dedup import exact_jaccard_pairs_prefix
 
         vocab = [f"term{i}" for i in range(12)]
         docs = [(k, " ".join(vocab[j] for j in range(12) if (k >> j) & 1))
@@ -169,10 +167,8 @@ class TestJaccardPairs:
         """Bounded group-edge output (expand_groups=False) loses nothing:
         expand_jaccard_group_edges(edges) == the full pair list, on a corpus
         with duplicate-heavy identical-set groups, at two thresholds."""
-        from scrubah_pii_spark.operators.dedup import (
-            exact_jaccard_pairs_prefix,
-            expand_jaccard_group_edges,
-        )
+        from dedup_reference import expand_jaccard_group_edges
+        from scrubah_pii_spark.operators.dedup import exact_jaccard_pairs_prefix
 
         # stack extra identical-set copies on top of the 200-doc corpus so
         # group expansion is actually exercised (m=5 group -> 10 pairs)
@@ -231,10 +227,9 @@ class TestMinHash:
 
 class TestTemplateOps:
     def test_line_frequency_strip(self, spark):
-        from scrubah_pii_spark.operators.template import (
-            line_frequency_templates,
-            strip_template_lines,
-        )
+        """The detection half of the line-frequency tier: only the shared
+        header line is a template (no engine query strips the lines)."""
+        from scrubah_pii_spark.operators.template import line_frequency_templates
 
         header = "SAINT EXAMPLE MEDICAL CENTER RECORDS DEPT"
         df = spark.createDataFrame(
@@ -243,17 +238,9 @@ class TestTemplateOps:
         )
         tpl = line_frequency_templates(df, "text", "url")
         assert [r["trimmed"] for r in tpl.collect()] == [header]
-        out = strip_template_lines(df, tpl, "text", "url")
-        for r in out.collect():
-            assert header not in r["stripped_text"]
-            assert "body text" in r["stripped_text"]
-            assert r["chars_removed"] > 0
 
     def test_ngram_corpus_fnv_parity(self, spark):
-        from scrubah_pii_spark.core.hashing import (
-            extract_ngrams,
-            normalize_for_fingerprint,
-        )
+        from engine_reference import extract_ngrams, normalize_for_fingerprint
         from scrubah_pii_spark.operators.template import ngram_template_corpus
 
         block = "shared template line one\nshared template line two"
@@ -272,7 +259,7 @@ class TestTemplateOps:
 
 class TestSimilarity:
     def test_brute_force_topk(self, spark):
-        from scrubah_pii_spark.operators.similarity import brute_force_topk
+        from engine_reference import brute_force_topk
 
         vecs = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
         vecs.append((4, [1.0, 0.1, 0.0, 0.0]))  # close to vec 0
@@ -310,7 +297,7 @@ class TestSimilarity:
         assert [r["neighbor_id"] for r in ranked] == [1, 2, 3, 4]
 
         # n_probe=2 covers both cells -> identical to brute force here
-        from scrubah_pii_spark.operators.similarity import brute_force_topk
+        from engine_reference import brute_force_topk
 
         out2 = {
             (r["query_id"], r["rank"]): r["neighbor_id"]
@@ -338,7 +325,7 @@ class TestSimilarity:
 
 class TestClustering:
     def test_connected_components(self, spark):
-        from scrubah_pii_spark.operators.clustering import connected_components
+        from engine_reference import connected_components
 
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (5, 6)], "id_a int, id_b int"
@@ -347,22 +334,6 @@ class TestClustering:
         assert labels[1] == labels[2] == labels[3] == 1
         assert labels[5] == labels[6] == 5
 
-    def test_representatives(self, spark):
-        from scrubah_pii_spark.operators.clustering import (
-            connected_components,
-            select_representatives,
-        )
-
-        pairs = spark.createDataFrame([(1, 2)], "id_a int, id_b int")
-        clusters = connected_components(pairs)
-        docs = spark.createDataFrame(
-            [(1, 0.9), (2, 0.5), (3, 0.1)], "doc_id int, rep_score double"
-        )
-        out = {r["doc_id"]: r for r in
-               select_representatives(docs, clusters, "doc_id").collect()}
-        assert out[1]["is_representative"] and not out[2]["is_representative"]
-        assert out[3]["is_representative"]  # singleton is its own rep
-
     def test_lsh_clusters_match_generic_cc(self, spark):
         """The bucket-local union-find (one shuffle, no iteration) must give
         exactly the same (node, cluster_id) labels as the generic star-
@@ -370,11 +341,8 @@ class TestClustering:
         fold, same min-node-id labels."""
         import numpy as np
 
-        from scrubah_pii_spark.operators.clustering import (
-            connected_components,
-            lsh_semantic_clusters,
-        )
-        from scrubah_pii_spark.operators.similarity import cosine_pairs
+        from engine_reference import connected_components, cosine_pairs
+        from scrubah_pii_spark.operators.clustering import lsh_semantic_clusters
 
         rng = np.random.default_rng(7)
         base = rng.standard_normal((5, 16))
@@ -403,10 +371,8 @@ class TestClustering:
         expression-fold cosine_pairs(exact=False)."""
         import numpy as np
 
-        from scrubah_pii_spark.operators.similarity import (
-            cosine_pairs,
-            lsh_cosine_pairs_fast,
-        )
+        from engine_reference import cosine_pairs
+        from scrubah_pii_spark.operators.similarity import lsh_cosine_pairs_fast
         from pyspark.sql import functions as F
 
         rng = np.random.default_rng(11)
@@ -439,10 +405,8 @@ class TestClustering:
         expression path exactly."""
         import numpy as np
 
-        from scrubah_pii_spark.operators.similarity import (
-            cosine_pairs,
-            lsh_cosine_pairs_fast,
-        )
+        from engine_reference import cosine_pairs
+        from scrubah_pii_spark.operators.similarity import lsh_cosine_pairs_fast
         from pyspark.sql import functions as F
 
         rng = np.random.default_rng(7)

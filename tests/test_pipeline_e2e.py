@@ -9,7 +9,7 @@ from scrubah_pii_spark.core.langid import heuristic_langid
 from scrubah_pii_spark.core.quality import simple_quality_score
 from scrubah_pii_spark.core.relevance import relevance_score
 from scrubah_pii_spark.core.scrub import scrub_text, scrub_text_production
-from scrubah_pii_spark.plans.pipeline import lineage_table, run_pipeline
+from scrubah_pii_spark.plans.pipeline import run_pipeline
 
 CURRENT_YEAR = 2026
 
@@ -141,8 +141,15 @@ class TestDedupAndLeaks:
         assert total == len(synth_rows)
 
     def test_lineage_pattern_types(self, result):
-        lin = lineage_table(result.labeled)
-        types = {r["pattern_type"] for r in lin.select("pattern_type").distinct().collect()}
+        """The placeholders in each row's replacements map name PII types."""
+        placeholders = result.labeled.select(
+            F.explode(F.map_values("replacements")).alias("placeholder")
+        )
+        pattern_type = F.regexp_extract(
+            "placeholder", r"\[([A-Z_]+?)[-_]\d+\]", 1
+        )
+        types = {r[0] for r in
+                 placeholders.select(pattern_type).distinct().collect()}
         assert types & {"EMAIL", "PHONE", "SSN", "NAME", "DATE"}
 
     def test_fused_verdicts_match_legacy_path(self, result):

@@ -5,12 +5,12 @@ where an exception means task retry storms at 10^12-doc scale."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from engine_reference import simhash_bits
 from scrubah_pii_spark.core.extract import clean_final_output, extract_text
 from scrubah_pii_spark.core.hashing import (
     content_hash,
     fnv1a64_hex,
     normalize_for_hashing,
-    simhash_bits,
     simhash_int,
 )
 from scrubah_pii_spark.core.langid import heuristic_langid

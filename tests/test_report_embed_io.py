@@ -46,60 +46,26 @@ class TestChunkEmbed:
 
 
 class TestReportOps:
-    @pytest.fixture(scope="class")
-    def out_df(self, spark):
-        rows = [
-            ("u1", dt.datetime(2024, 1, 1), "lab_report", "unique", None, "WBC results fine"),
-            ("u2", dt.datetime(2024, 1, 3), "lab_report", "near-duplicate", "u1", "WBC results fine too"),
-            ("u3", dt.datetime(2024, 2, 1), "discharge", "unique", None, "discharged home"),
+    def test_markdown_report(self):
+        from scrubah_pii_spark.operators.report import timeline_markdown
+
+        summary = {"total_documents": 3, "duplicates": 1,
+                   "date_start": "2024-01-01", "date_end": "2024-02-01"}
+        docs = [
+            {"document_number": 1, "url": "u1", "doc_type": "lab_report",
+             "warc_ts": "2024-01-01", "difference_type": "unique",
+             "near_dup_of": None, "scrubbed_text": "WBC results fine"},
+            {"document_number": 2, "url": "u2", "doc_type": "lab_report",
+             "warc_ts": "2024-01-03", "difference_type": "near-duplicate",
+             "near_dup_of": "u1", "scrubbed_text": "WBC results fine too"},
+            {"document_number": 3, "url": "u3", "doc_type": "discharge",
+             "warc_ts": "2024-02-01", "difference_type": "unique",
+             "near_dup_of": None, "scrubbed_text": "discharged home"},
         ]
-        return spark.createDataFrame(
-            rows,
-            "url string, warc_ts timestamp, doc_type string, "
-            "difference_type string, near_dup_of string, scrubbed_text string",
-        )
-
-    def test_numbering(self, out_df):
-        from scrubah_pii_spark.operators.report import chronological_numbering
-
-        rows = {r["url"]: r["document_number"]
-                for r in chronological_numbering(out_df).collect()}
-        assert rows == {"u1": 1, "u2": 2, "u3": 3}
-
-    def test_summary(self, out_df):
-        from scrubah_pii_spark.operators.report import timeline_summary
-
-        s = timeline_summary(out_df).collect()[0]
-        assert s["total_documents"] == 3
-        assert s["duplicates"] == 1
-        assert s["by_doc_type"]["lab_report"] == 2
-
-    def test_markdown_report(self, out_df):
-        from scrubah_pii_spark.operators.report import (
-            chronological_numbering,
-            timeline_markdown,
-            timeline_summary,
-        )
-
-        s = timeline_summary(out_df).collect()[0]
-        docs = [r.asDict() for r in chronological_numbering(out_df).collect()]
-        md = timeline_markdown(s, docs)
+        md = timeline_markdown(summary, docs)
         assert md.startswith("# Master Timeline")
         assert "## Document 1: u1" in md
         assert "near-duplicate of u1" in md
-
-    def test_validate_urls(self, spark):
-        from scrubah_pii_spark.operators.report import validate_urls
-
-        df = spark.createDataFrame(
-            [("https://ok.example/page",), ("ftp://bad.example/x",),
-             ("https://ok.example/image.jpg",)],
-            "url string",
-        )
-        rows = {r["url"]: r["url_valid"] for r in validate_urls(df).collect()}
-        assert rows["https://ok.example/page"]
-        assert not rows["ftp://bad.example/x"]
-        assert not rows["https://ok.example/image.jpg"]
 
     def test_quality_routing(self, spark):
         from scrubah_pii_spark.operators.report import quality_routing

@@ -9,9 +9,9 @@ import re
 
 import pytest
 
+from engine_reference import might_contain_pii
 from scrubah_pii_spark.core.scrub import (
     PII_PATTERNS,
-    might_contain_pii,
     scrub_text,
 )
 

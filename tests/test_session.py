@@ -14,6 +14,7 @@ archives or modules shipped after the session started must still import."""
 
 import importlib
 import os
+import subprocess
 import sys
 import time
 import uuid
@@ -95,6 +96,32 @@ def test_files_shipped_after_start_still_import(spark, tmp_path):
     udf = F.pandas_udf(shipped, "long")
     rows = spark.range(0, 4, numPartitions=4).select(udf("id").alias("v")).collect()
     assert {r["v"] for r in rows} == {18}
+
+
+# Run from a directory outside the checkout with PYTHONPATH unset: only the
+# driver finds the engine (on its sys.path), so the workers, whose daemon
+# imports the engine first, must get it from the session's conf.
+_FOREIGN_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from scrubah_pii_spark.session import build_session
+spark = build_session(master="local[1]", shuffle_partitions=1,
+                      extra_conf={{"spark.driver.memory": "1g"}})
+plus_one = F.pandas_udf(lambda s: s + 1, "long")
+print(sorted(r[0] for r in spark.range(3).select(plus_one("id")).collect()))
+spark.stop()
+"""
+
+
+def test_workers_import_engine_from_any_cwd(tmp_path):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT.format(repo=REPO)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == "[1, 2, 3]"
 
 
 def test_pyworker_import_patches_nothing():

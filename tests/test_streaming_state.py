@@ -1,72 +1,9 @@
-"""Custom stateful streaming operator (applyInPandasWithState): per-host
-cross-micro-batch exact dedup. Verifies state survives between micro-batches
-— the semantics watermarked dropDuplicates cannot give."""
+"""The Structured Streaming path labels a corpus exactly as the batch
+label_stage does."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-from scrubah_pii_spark.streaming.stream import stateful_host_dedup
-
-
-@pytest.fixture()
-def stream_dirs(tmp_path):
-    inp = tmp_path / "in"
-    inp.mkdir()
-    return str(inp), str(tmp_path / "ckpt")
-
-
-def _write_batch(spark, inp, rows, name):
-    df = spark.createDataFrame(
-        rows, "url string, host string, content_hash string"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(inp, name))
-
-
-class TestStatefulHostDedup:
-    def test_cross_batch_duplicates_flagged(self, spark, stream_dirs):
-        inp, ckpt = stream_dirs
-        _write_batch(spark, inp, [
-            ("u1", "a.com", "h1"), ("u2", "a.com", "h2"), ("u3", "b.com", "h1"),
-        ], "b0")
-
-        stream = (
-            spark.readStream
-            .schema("url string, host string, content_hash string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inp + "/*")
-        )
-        out = stateful_host_dedup(stream)
-        q = (
-            out.writeStream.format("memory").queryName("dedup_state")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        )
-        try:
-            q.processAllAvailable()
-            first = {
-                r["url"]: r["is_cross_batch_dup"]
-                for r in spark.sql("SELECT * FROM dedup_state").collect()
-            }
-            # h1 on a.com and h1 on b.com are DIFFERENT state groups
-            assert first == {"u1": False, "u2": False, "u3": False}
-
-            # batch 2: re-crawl u1's content on the same host + a new doc
-            _write_batch(spark, inp, [
-                ("u4", "a.com", "h1"), ("u5", "a.com", "h9"),
-            ], "b1")
-            q.processAllAvailable()
-            rows = {
-                r["url"]: r["is_cross_batch_dup"]
-                for r in spark.sql("SELECT * FROM dedup_state").collect()
-            }
-            assert rows["u4"] is True    # seen in micro-batch 1 state
-            assert rows["u5"] is False
-        finally:
-            q.stop()
 
 
 class TestStreamingBatchEquivalence:

@@ -1,7 +1,7 @@
 """Template classification tests — expectations ported from
 /root/reference/test/templateDetection.test.ts:330-375."""
 
-from scrubah_pii_spark.core.hashing import classify_template_type, template_position
+from scrubah_pii_spark.core.hashing import classify_template_type
 
 
 class TestClassifyTemplateType:
@@ -32,12 +32,3 @@ class TestClassifyTemplateType:
         assert classify_template_type("metformin 500 mg tablet", "MIDDLE") == "MEDICATION_LIST"
         assert classify_template_type("insurance and phone on file", "MIDDLE") == "DEMOGRAPHICS"
 
-
-class TestTemplatePosition:
-    def test_boundaries(self):
-        assert template_position(0, 100) == "START"
-        assert template_position(20, 100) == "START"
-        assert template_position(21, 100) == "MIDDLE"
-        assert template_position(80, 100) == "END"
-        assert template_position(50, 100) == "MIDDLE"
-        assert template_position(5, 0) == "MIDDLE"

@@ -8,9 +8,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from engine_reference import reconstruct_ngram_documents
 from scrubah_pii_spark.operators.template import (
     ngram_template_corpus,
-    reconstruct_ngram_documents,
     remove_overlapping_templates,
     strip_ngram_templates,
 )

@@ -21,7 +21,6 @@ which is what makes the committed golden an oracle rather than a pin.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
