@@ -96,14 +96,14 @@ def fnv1a64_hex(s: str) -> str:
 _FNV_INV_PRIME = pow(_FNV_PRIME, -1, 1 << 64)  # p is odd -> invertible mod 2^64
 
 
-def fnv1a64_hex_batch(strings, max_vectorized_len: int = 4096) -> list:
+def fnv1a64_hex_batch(strings) -> list:
     """Vectorized FNV-1a-64 across a batch: pad code points into an (n, L)
     uint64 matrix, iterate character POSITIONS (not strings) updating the
     whole hash vector per step — O(max_len) numpy ops instead of
     O(total_chars) Python ops. Bit-identical to fnv1a64_hex (uint64 wraps).
 
     Robustness (the function is general-purpose, not just n-gram-sized):
-    strings longer than max_vectorized_len fall back to the scalar path, so
+    strings longer than 4096 chars fall back to the scalar path, so
     one long outlier can't inflate the whole batch's (n x max_len) matrix;
     lone-surrogate strings (utf-32 encode fails where ord() succeeds) also
     take the scalar path."""
@@ -116,7 +116,7 @@ def fnv1a64_hex_batch(strings, max_vectorized_len: int = 4096) -> list:
     out: list = [None] * n
     vec_idx, vec_strs, lens_l = [], [], []
     for i, s in enumerate(strs):
-        if len(s) > max_vectorized_len:
+        if len(s) > 4096:
             out[i] = fnv1a64_hex(s)
             continue
         vec_idx.append(i)

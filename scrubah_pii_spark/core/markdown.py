@@ -20,21 +20,20 @@ def format_to_markdown(
     scrubbed_text: str,
     pii_count: int,
     processed_date_iso: str,
-    processing_seconds: str = "0.00",
-    confidence: int = 100,
 ) -> str:
     """Deterministic variant: processed_date is a parameter (the reference
     stamps new Date(); our pipeline passes a fixed/run timestamp so outputs
-    are reproducible)."""
+    are reproducible), the confidence score is 100 and processing_seconds
+    reads "0.00" in place of the reference's stopwatch."""
     metadata = {
         "source_file": source_file,
         "file_size_bytes": file_size_bytes,
         "file_type": file_type,
         "processed_date": processed_date_iso,
         "pii_scrubbed_count": pii_count,
-        "pii_confidence_score": confidence,
+        "pii_confidence_score": 100,
         "processing_engine": PROCESSING_ENGINE,
-        "processing_seconds": processing_seconds,
+        "processing_seconds": "0.00",
         "hipaa_compliant": True,
     }
     yaml_block = "\n".join(

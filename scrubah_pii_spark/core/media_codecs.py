@@ -117,11 +117,12 @@ def decode_wav(payload: bytes) -> dict:
 # --- netpbm (PPM P6 / PGM P5) ------------------------------------------------
 
 
-def encode_ppm(pixels: bytes, width: int, height: int, maxval: int = 255) -> bytes:
-    """Minimal binary PPM (P6) writer: pixels = w*h*3 raw RGB bytes."""
+def encode_ppm(pixels: bytes, width: int, height: int) -> bytes:
+    """Minimal binary PPM (P6) writer: pixels = w*h*3 raw RGB bytes,
+    maxval 255."""
     if len(pixels) != width * height * 3:
         raise ValueError("pixel buffer size mismatch")
-    return f"P6\n{width} {height}\n{maxval}\n".encode("ascii") + pixels
+    return f"P6\n{width} {height}\n255\n".encode("ascii") + pixels
 
 
 def _parse_pnm_header(payload: bytes) -> tuple[str, int, int, int, int]:

@@ -118,9 +118,10 @@ def format_vitals_summary(vitals: list, cfg: NarrativeConfig = DEFAULT_NARRATIVE
     return ", ".join(parts)
 
 
-def narrative_for_extraction(labs, vitals, icd10_codes, cfg: NarrativeConfig = DEFAULT_NARRATIVE_CONFIG) -> str:
-    """Compose a document narrative from the structured-extraction columns
-    (labs: [(test, value, unit, status)], vitals: [(vital, value)])."""
+def narrative_for_extraction(labs, vitals, icd10_codes) -> str:
+    """Compose a document narrative (default NarrativeConfig) from the
+    structured-extraction columns (labs: [(test, value, unit, status)],
+    vitals: [(vital, value)])."""
     vital_map = {
         "BP": None, "HR": "HEART_RATE", "RR": "RESPIRATORY_RATE",
         "TEMP": "TEMPERATURE", "SPO2": "SPO2",
@@ -142,13 +143,13 @@ def narrative_for_extraction(labs, vitals, icd10_codes, cfg: NarrativeConfig = D
         for i, code in enumerate(icd10_codes or [])
     ]
     sections = []
-    dx = format_diagnoses_summary(d_structs, cfg)
+    dx = format_diagnoses_summary(d_structs)
     if dx:
         sections.append("DIAGNOSES:\n" + dx)
-    lb = format_labs_summary(l_structs, cfg)
+    lb = format_labs_summary(l_structs)
     if lb:
         sections.append("LABS:\n" + lb)
-    vt = format_vitals_summary(v_structs, cfg)
+    vt = format_vitals_summary(v_structs)
     if vt:
         sections.append("VITALS:\n" + vt)
     return "\n\n".join(sections)

@@ -98,9 +98,10 @@ def simple_quality_score(text: str, min_quality: float = 0.3) -> QualityMetrics:
     )
 
 
-def repetition_ratio(text: str, ngram: int = 3) -> float:
-    """Fraction of duplicated word n-grams — the 'repetition' heuristic of the
+def repetition_ratio(text: str) -> float:
+    """Fraction of duplicated word 3-grams — the 'repetition' heuristic of the
     north rule (no direct reference analog; standard webtext quality rule)."""
+    ngram = 3
     words = [w for w in _WS_SPLIT.split(text.lower()) if w]
     if len(words) < ngram:
         return 0.0

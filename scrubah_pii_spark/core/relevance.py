@@ -161,18 +161,19 @@ def generation_from_filename(filename: str, current_year: int) -> int:
 
 
 def relevance_score(
-    scrubbed_text: str, filename: str = "", current_year: int = 2026,
-    generation: int | None = None,
+    scrubbed_text: str, filename: str = "", generation: int | None = None,
 ) -> RelevanceScore:
     """Exact port of the scoring arithmetic. ``generation`` may be supplied
-    directly (our pipeline derives it from warc_ts instead of a filename)."""
+    directly (our pipeline derives it from warc_ts instead of a filename);
+    otherwise it comes from the filename's date, as of 2026 (the year
+    RelevanceConfig.current_year also fixes)."""
     refs = reference_count(scrubbed_text)
     garbage = is_garbage(scrubbed_text, filename)
     ph_density = placeholder_density(scrubbed_text)
     med_density = medical_density(scrubbed_text, refs)
     flags = clinical_flags(scrubbed_text)
     gen = generation if generation is not None else generation_from_filename(
-        filename, current_year
+        filename, 2026
     )
 
     score = 50.0

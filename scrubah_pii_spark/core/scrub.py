@@ -321,16 +321,17 @@ def scrub_text_production(text: str) -> ScrubOutcome:
     return ScrubOutcome(text=e.text, replacements=merged, counters=e.counters)
 
 
-def scrub_text_audited(text: str, enable_context_detection: bool = True):
-    """scrub_text + per-pattern audit entries (AuditCollector.log semantics,
-    auditCollector.ts:38-52): (pattern_type, match_count, duration_ms) per
-    stage, where match_count is the number of NEW unique values the stage
-    replaced (invariant: sum == |replacements| == ScrubOutcome.count)."""
+def scrub_text_audited(text: str):
+    """scrub_text (context stages on) + per-pattern audit entries
+    (AuditCollector.log semantics, auditCollector.ts:38-52): (pattern_type,
+    match_count, duration_ms) per stage, where match_count is the number of
+    NEW unique values the stage replaced (invariant: sum == |replacements|
+    == ScrubOutcome.count)."""
     import time
 
     st = _State(text)
     audit = []
-    for name, run in _build_stages(st, enable_context_detection):
+    for name, run in _build_stages(st, True):
         before = len(st.replacements)
         t0 = time.perf_counter()
         run()

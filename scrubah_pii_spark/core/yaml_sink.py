@@ -6,11 +6,11 @@ From-scratch port of /root/reference/services/compression/yaml.ts:
   escapeYAML (quote on special chars)      :76-82
   generateTimelineSection                  :87-109
   generateMetadataSection                  :114-136
-  generateErrorsSection                    :141-186
   generateDemographicsSection              :191-218
-  generateMedicationsSection               :223-268
-  generateLabTrendsSection                 :273-311
   generateYAML (section order + header)    :318-358
+The errors (:141-186), medications (:223-268) and lab-trends (:273-311)
+sections are not ported: the reference leaves them out when empty, and no
+query has data for them.
 
 Deterministic variant: generated_at is a parameter (the reference stamps
 new Date()); all other content is a pure function of its inputs.
@@ -79,11 +79,11 @@ def generate_yaml(
     events_included: int,
     deduplication: str,
     generated_at_iso: str,
-    medications_current: list = (),   # [(name, started_iso, reason|None)]
-    medications_discontinued: list = (),  # [(name, started_iso, stopped_iso|None, reason|None)]
-    lab_trends: list = (),            # [(name, trend, [(date_iso, value, abnormal|None, flag|None)])]
-    warnings: list = (),              # [(type, message, file|None, suggestion, recoverable, impact|None)]
 ) -> str:
+    """The timeline document: header, metadata, demographics, date range
+    and timeline sections. The reference omits its medications, lab-trend
+    and errors sections when they are empty, and the engine has no data
+    for them, so they are not built."""
     b = YAMLBuilder()
 
     # header comment block
@@ -144,78 +144,5 @@ def generate_yaml(
         b.add_line(f"confidence: {confidence}")
         b.outdent()
     b.outdent()
-
-    # medications (omitted when empty, like the reference)
-    if medications_current or medications_discontinued:
-        b.add_blank_line()
-        b.add_line("medications:")
-        b.indent()
-        if medications_current:
-            b.add_line("current:")
-            b.indent()
-            for name, started, reason in medications_current:
-                b.add_line(f"- name: {escape_yaml(name)}")
-                b.indent()
-                b.add_line(f"started: {started}")
-                if reason:
-                    b.add_line(f"reason: {escape_yaml(reason)}")
-                b.outdent()
-            b.outdent()
-        if medications_discontinued:
-            b.add_line("discontinued:")
-            b.indent()
-            for name, started, stopped, reason in medications_discontinued:
-                b.add_line(f"- name: {escape_yaml(name)}")
-                b.indent()
-                b.add_line(f"started: {started}")
-                if stopped:
-                    b.add_line(f"stopped: {stopped}")
-                if reason:
-                    b.add_line(f"reason: {escape_yaml(reason)}")
-                b.outdent()
-            b.outdent()
-        b.outdent()
-
-    # lab trends (omitted when empty)
-    if lab_trends:
-        b.add_blank_line()
-        b.add_line("labTrends:")
-        b.indent()
-        for name, trend, values in lab_trends:
-            b.add_line(f"- name: {escape_yaml(name)}")
-            b.indent()
-            b.add_line(f"trend: {trend}")
-            b.add_line("values:")
-            b.indent()
-            for date_iso, value, abnormal, flag in values:
-                b.add_line(f"- date: {date_iso}")
-                b.indent()
-                b.add_line(f"value: {value}")
-                if abnormal is not None:
-                    b.add_line(f"abnormal: {str(abnormal).lower()}")
-                if flag:
-                    b.add_line(f"flag: {flag}")
-                b.outdent()
-            b.outdent()
-            b.outdent()
-        b.outdent()
-
-    # warnings (omitted when empty)
-    if warnings:
-        b.add_blank_line()
-        b.add_line("warnings:")
-        b.indent()
-        for w_type, message, file, suggestion, recoverable, impact in warnings:
-            b.add_line(f"- type: {w_type}")
-            b.indent()
-            b.add_line(f"message: {escape_yaml(message)}")
-            if file:
-                b.add_line(f"file: {escape_yaml(file)}")
-            b.add_line(f"suggestion: {escape_yaml(suggestion)}")
-            b.add_line(f"recoverable: {str(recoverable).lower()}")
-            if impact:
-                b.add_line(f"impact: {impact}")
-            b.outdent()
-        b.outdent()
 
     return b.build()

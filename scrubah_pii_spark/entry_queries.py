@@ -149,7 +149,7 @@ def q_relevance_label(spark, sf_dir):
     from .operators.scrub_op import make_relevance_metrics_udf
 
     df = _spread(_docs(spark, sf_dir))
-    r = make_relevance_metrics_udf(generation=2)(F.col("text"))
+    r = make_relevance_metrics_udf()(F.col("text"))
     return df.select("doc_id", r.alias("r")).select(
         "doc_id",
         F.col("r.clinical_references").cast("long").alias("clinical_references"),
@@ -720,7 +720,7 @@ def q_template_lines(spark, sf_dir):
         F.col("doc_id").cast("string").alias("url"),
         F.regexp_replace("text", r"\s+", "\n").alias("text"),
     )
-    return line_frequency_templates(df, "text", "url", min_len=6).select(
+    return line_frequency_templates(df, "text", min_len=6).select(
         F.col("trimmed").alias("line"), F.col("doc_count").cast("long").alias("doc_count")
     )
 
@@ -742,9 +742,9 @@ def _framed_stripped(spark, sf_dir):
     )
     # fingerprint ONCE; corpus build and strip both consume the persisted
     # frame instead of re-running the window n-gram + hash stage twice
-    fps = _doc_ngrams(df, "text", "url").persist()
-    corpus = ngram_template_corpus(df, "text", "url", fingerprints=fps)
-    return strip_ngram_templates(df, corpus, "text", "url", fingerprints=fps)
+    fps = _doc_ngrams(df, "text").persist()
+    corpus = ngram_template_corpus(df, "text", fingerprints=fps)
+    return strip_ngram_templates(df, corpus, "text", fingerprints=fps)
 
 
 def q_template_ngram_strip(spark, sf_dir):
@@ -841,7 +841,7 @@ def q_minhash_signature(spark, sf_dir):
     hashing reproducible in ANSI SQL (md5 -> 60-bit int -> k affine mins)."""
     from .operators.dedup import _minhash_params, add_minhash_signature
 
-    df = add_minhash_signature(_spread(_docs(spark, sf_dir)), "text", "doc_id", k=4)
+    df = add_minhash_signature(_spread(_docs(spark, sf_dir)), "text", k=4)
     return df.select(
         "doc_id",
         F.col("minhash")[0].alias("mh0"),
@@ -1071,8 +1071,8 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     # flat scan (no _spread): the r7 A/B measured the pre-UDF repartition
     # +11% here — the distinct-signature group and band shuffles dominate,
     # so the extra exchange never pays for itself (BENCH/spread_ab_r7.json).
-    df = add_minhash_signature(_docs(spark, sf_dir), "text", "doc_id")
-    pairs = minhash_dedup_pairs(df.withColumnRenamed("doc_id", "url"), "url")
+    df = add_minhash_signature(_docs(spark, sf_dir), "text")
+    pairs = minhash_dedup_pairs(df.withColumnRenamed("doc_id", "url"))
     return pairs.select(
         F.col("url_a").cast("long").alias("id_a"),
         F.col("url_b").cast("long").alias("id_b"),
@@ -1092,6 +1092,11 @@ def q_lsh_ann_topk(spark, sf_dir):
     )
 
 
+# q_ivf_ann_topk and its oracle sql_ivf_ann_topk: centroids (the smallest
+# vec_ids), cells each query probes, neighbours kept per query
+IVF_CENTROIDS, IVF_PROBE, IVF_K = 16, 2, 10
+
+
 def q_ivf_ann_topk(spark, sf_dir):
     """IVF-Flat ANN (third tier next to brute-force + hyperplane LSH):
     centroid 'training' is the deterministic smallest-id sample (vec_id <
@@ -1103,11 +1108,11 @@ def q_ivf_ann_topk(spark, sf_dir):
 
     emb = _embeddings(spark, sf_dir)
     cent_rows = (
-        emb.filter(F.col("vec_id") < 16).select("vec_id", "embedding").collect()
+        emb.filter(F.col("vec_id") < IVF_CENTROIDS).select("vec_id", "embedding").collect()
     )
     centroids = [(int(r["vec_id"]), list(r["embedding"])) for r in cent_rows]
     queries = emb.filter(F.col("vec_id") < 5)
-    out = ivf_topk(emb, queries, k=10, centroids=centroids, n_probe=2)
+    out = ivf_topk(emb, queries, k=IVF_K, centroids=centroids, n_probe=IVF_PROBE)
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
@@ -1122,9 +1127,9 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
-def sql_ivf_ann_topk(n_centroids: int = 16, n_probe: int = 2, k: int = 10) -> str:
+def sql_ivf_ann_topk() -> str:
     """Mirror of q_ivf_ann_topk: same smallest-id centroids, same
-    argmax-cosine assignment (ties -> lowest centroid id), same n_probe
+    argmax-cosine assignment (ties -> lowest centroid id), same IVF_PROBE
     probing, exact ranking within probed cells on the UNROUNDED cosine
     (the Spark side ranks unrounded too), 6-decimal display rounding."""
     cos_ec = _cos_sql("e.embedding", "c.ce")
@@ -1132,7 +1137,7 @@ def sql_ivf_ann_topk(n_centroids: int = 16, n_probe: int = 2, k: int = 10) -> st
     cos_qs = _cos_sql("p.qe", "s.embedding")
     return f"""
 WITH cent AS (
-  SELECT vec_id AS j, embedding AS ce FROM embeddings WHERE vec_id < {n_centroids}
+  SELECT vec_id AS j, embedding AS ce FROM embeddings WHERE vec_id < {IVF_CENTROIDS}
 ), asg AS (
   SELECT e.vec_id, e.embedding, c.j,
     row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos_ec} DESC, c.j ASC) AS rn
@@ -1146,7 +1151,7 @@ WITH cent AS (
     row_number() OVER (PARTITION BY q.query_id ORDER BY {cos_qc} DESC, c.j ASC) AS rn
   FROM q CROSS JOIN cent c
 ), probes AS (
-  SELECT query_id, qe, j AS cell FROM qasg WHERE rn <= {n_probe}
+  SELECT query_id, qe, j AS cell FROM qasg WHERE rn <= {IVF_PROBE}
 ), cand AS (
   SELECT p.query_id, s.vec_id AS neighbor_id, {cos_qs} AS cosine
   FROM probes p JOIN cells s ON s.cell = p.cell
@@ -1158,7 +1163,7 @@ WITH cent AS (
 )
 SELECT query_id, neighbor_id, round(cosine, 6) AS cosine,
   CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {IVF_K}
 """
 
 
@@ -1195,7 +1200,7 @@ def q_multimodal_features(spark, sf_dir):
     docs = _spread(_docs(spark, sf_dir)).select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
-    out = extract_media_features(docs, "payload")
+    out = extract_media_features(docs)
     f = F.col("media.features")
     return out.select(
         "doc_id",
@@ -1283,9 +1288,7 @@ def q_media_decode(spark, sf_dir):
         return pd.Series(out)
 
     docs = _spread(_docs(spark, sf_dir)).select("doc_id")
-    out = extract_media_features(
-        docs.withColumn("payload", synth_media("doc_id")), "payload"
-    )
+    out = extract_media_features(docs.withColumn("payload", synth_media("doc_id")))
     f = F.col("media.features")
     return out.select(
         "doc_id",
@@ -1403,12 +1406,11 @@ def q_doc_embed_neardup(spark, sf_dir):
     from .operators.similarity import lsh_cosine_pairs_fast
 
     docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
-    emb = add_embeddings(docs, "text", dim=64)
+    emb = add_embeddings(docs, "text")
     # bucket-local numpy pairs with exact-fold boundary refinement — ~50x
     # the per-pair expression-fold path; cosine comes back pre-rounded
     pairs = lsh_cosine_pairs_fast(
-        emb, threshold=0.75, id_col="doc_id", vec_col="embedding",
-        n_planes=6, dim=64,
+        emb, threshold=0.75, id_col="doc_id", n_planes=6, dim=64,
     )
     return pairs.select("id_a", "id_b", "cosine", "tier")
 
@@ -1822,7 +1824,7 @@ def oracle_map() -> dict:
         "narrative": o2.sql_narrative(),
         "simhash": o2.sql_simhash(),
         "lsh_ann_topk": o2.sql_lsh_ann_topk(dim=64, n_planes=8, k=10),
-        "ivf_ann_topk": sql_ivf_ann_topk(n_centroids=16, n_probe=2, k=10),
+        "ivf_ann_topk": sql_ivf_ann_topk(),
         "minhash_lsh_pairs": o2.sql_minhash_lsh_pairs(k=32, bands=8),
         "perplexity": o2.sql_perplexity(),
         "semantic_clusters": o2.sql_semantic_clusters(dim=64, n_planes=6, threshold=0.3),

@@ -17,11 +17,10 @@ from pyspark.sql import DataFrame
 
 def lsh_semantic_clusters(
     emb: DataFrame, threshold: float = 0.3, n_planes: int = 6,
-    dim: int = 64, seed: int = 42,
-    id_col: str = "vec_id", vec_col: str = "embedding",
+    dim: int = 64,
 ) -> DataFrame:
-    """(node, cluster_id) for LSH-bucketed cosine pairs — the scale path for
-    semantic clustering.
+    """(node, cluster_id) over (vec_id, embedding) rows for LSH-bucketed
+    cosine pairs — the scale path for semantic clustering.
 
     Key structural fact: every vector has exactly ONE hyperplane signature,
     and pairs require equal signatures — so the similarity graph is a
@@ -39,7 +38,7 @@ def lsh_semantic_clusters(
     cluster_id = min node id."""
     from .similarity import _planes
 
-    planes = [[float(x) for x in p] for p in _planes(dim, n_planes, seed)]
+    planes = [[float(x) for x in p] for p in _planes(dim, n_planes)]
 
     def _fold_dot(a, b):
         s = 0.0
@@ -53,8 +52,8 @@ def lsh_semantic_clusters(
         import numpy as np
         import pandas as pd
 
-        ids = pdf[id_col].tolist()
-        vecs = [list(v) for v in pdf[vec_col]]
+        ids = pdf["vec_id"].tolist()
+        vecs = [list(v) for v in pdf["embedding"]]
         n = len(ids)
         parent = list(range(n))
 
@@ -108,7 +107,7 @@ def lsh_semantic_clusters(
 
         P = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
         for pdf in iterator:
-            vecs = [list(v) for v in pdf[vec_col]]
+            vecs = [list(v) for v in pdf["embedding"]]
             if vecs:
                 V = np.array(vecs, dtype=np.float64)
                 D = V @ P
@@ -120,12 +119,12 @@ def lsh_semantic_clusters(
                 sigs = ["".join(row) for row in np.where(D >= 0, "1", "0")]
             else:
                 sigs = []
-            pdf = pdf[[id_col, vec_col]].copy()
+            pdf = pdf[["vec_id", "embedding"]].copy()
             pdf["_sig"] = sigs
             yield pdf
 
-    sig_schema = f"{id_col} bigint, {vec_col} array<float>, _sig string"
-    with_sig = emb.select(id_col, vec_col).mapInPandas(add_sig, schema=sig_schema)
+    sig_schema = "vec_id bigint, embedding array<float>, _sig string"
+    with_sig = emb.select("vec_id", "embedding").mapInPandas(add_sig, schema=sig_schema)
     # explicit-width repartition: Python-heavy group kernel over few bytes —
     # AQE's byte-based coalescing must not serialize it (see similarity.py)
     n_parts = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))

@@ -33,11 +33,20 @@ from ..functions.hashing_expr import (
     simhash_similarity_expr,
 )
 
+# Verdict tiers of contentHasher.effect.ts:240-301: near-duplicate at
+# similarity >= 0.95; same-event at >= 0.70 with the same doc type and crawl
+# times at most 72 h apart.
+NEAR_DUP_THRESHOLD = 0.95
+SAME_EVENT_THRESHOLD = 0.70
+SAME_EVENT_HOURS = 72.0
+
+# compressionPipeline.effect.ts:189-227 word sets: words longer than 3 chars
+JACCARD_MIN_WORD_LEN = 3
+
 
 def exact_jaccard_pairs_prefix(
     df: DataFrame, text_col: str, id_col: str,
-    threshold: float = 0.85, min_word_len: int = 3,
-    expand_groups: bool = True,
+    threshold: float = 0.85, expand_groups: bool = True,
 ) -> DataFrame:
     """Production-scale exact Jaccard pairs >= threshold via PREFIX FILTERING
     (the AllPairs/PPJoin family — Bayardo et al., WWW'07; public technique):
@@ -80,7 +89,7 @@ def exact_jaccard_pairs_prefix(
             F.array_distinct(
                 F.filter(
                     F.split(F.lower(F.col(text_col)), r"\s+"),
-                    lambda w: F.length(w) > min_word_len,
+                    lambda w: F.length(w) > JACCARD_MIN_WORD_LEN,
                 )
             )
         ).alias("ws"),
@@ -90,22 +99,24 @@ def exact_jaccard_pairs_prefix(
         F.collect_list("_id").alias("members"),
         F.first("ws").alias("ws"),
         F.size(F.first("ws")).alias("sz"),
-    ).persist()
+    )
 
     # --- ADAPTIVE VERIFICATION PATH (round 8) -----------------------------
     # Prefix filtering collapses on dense small-vocabulary corpora: when the
-    # corpus' distinct >min_word_len-char vocabulary is tiny, every set is
-    # dense in it, prefixes stop being selective, and the word self-join
-    # fans out quadratically (measured at sf1.0: 24-word vocabulary, 737M
-    # raw candidates, 127M after the size filter, 2073 s of JVM CPU in
+    # corpus' distinct >3-char vocabulary is tiny, every set is dense in it,
+    # prefixes stop being selective, and the word self-join fans out
+    # quadratically (measured at sf1.0: 24-word vocabulary, 737M raw
+    # candidates, 127M after the size filter, 2073 s of JVM CPU in
     # array_intersect verification). With vocab <= 64 every DISTINCT word
     # set is exactly a 64-bit membership vector, so an exact blocked
     # all-DISTINCT-pairs comparison (float32 indicator matmul = exact
     # intersection counts, sizes <= 64) verifies every pair directly —
     # identical output, no candidate machinery. The vocabulary probe is one
-    # tiny distinct+limit job over the persisted groups; corpora with a
-    # real vocabulary (webtext at 100 TB: millions of words) fail the gate
-    # and keep the general AllPairs prefix path.
+    # small distinct+limit job that builds the groups itself; nothing is
+    # cached, and inside the returned plan every consumer of the groups
+    # reads one shared exchange. Corpora with a real vocabulary (webtext at
+    # 100 TB: millions of words) fail the gate and keep the general AllPairs
+    # prefix path.
     vocab_rows = (
         groups.select(F.explode("ws").alias("word")).distinct().limit(65).collect()
     )
@@ -228,7 +239,7 @@ def _jaccard_prefix_verified(groups: DataFrame, threshold: float) -> DataFrame:
 
 
 def _jaccard_bitmask_verified(
-    groups: DataFrame, vocab: list, threshold: float, blocks: int = 8,
+    groups: DataFrame, vocab: list, threshold: float,
 ) -> DataFrame:
     """Exact Jaccard >= threshold over DISTINCT word sets when the corpus
     vocabulary fits in 64 bits (see the adaptive gate in
@@ -236,9 +247,9 @@ def _jaccard_bitmask_verified(
     members_b) with fp_a < fp_b — the same shape the prefix path's verify
     step produces, so both expand_groups branches consume it unchanged.
 
-    Shape: each distinct set is replicated to `blocks` block-pair tasks
-    (triangle join over pmod(xxhash64(fp), blocks)); each task compares its
-    two sub-blocks with one float32 indicator matmul per row chunk —
+    Shape: each distinct set is replicated to 8 block-pair tasks (triangle
+    join over pmod(xxhash64(fp), 8)); each task compares its two sub-blocks
+    with one float32 indicator matmul per row chunk —
     intersection counts are integers <= 64, exactly representable, and
     jaccard = inter / (sz_a + sz_b - inter) is the identical int->double
     division the expression path performs. Work is O(distinct_sets^2 / P)
@@ -252,6 +263,7 @@ def _jaccard_bitmask_verified(
     bit = {w: i for i, w in enumerate(vocab)}
     nbits = max(1, len(bit))
     thr = float(threshold)
+    blocks = 8
 
     def kernel(key, pdf):
         ti, tj = int(key[0]), int(key[1])
@@ -341,17 +353,7 @@ def _jaccard_bitmask_verified(
     return pairs.join(ga, "fp_a").join(gb, "fp_b")
 
 
-def dedup_verdicts_fused(
-    slim: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    doc_type_col: str = "doc_type",
-    simhash_col: str = "simhash",
-    hash_col: str = "content_hash",
-    near_threshold: float = 0.95,
-    same_event_threshold: float = 0.70,
-    same_event_hours: float = 72.0,
-) -> DataFrame:
+def dedup_verdicts_fused(slim: DataFrame) -> DataFrame:
     """Exact-dup removal + bucket-representative near-dup verdicts in ONE
     fused chain over a slim (url, ts, doc_type, simhash, content_hash)
     projection. Returns one row per NON-exact-duplicate doc, keyed by
@@ -383,13 +385,13 @@ def dedup_verdicts_fused(
     repeat the same buckets, representatives and verdicts."""
     order_key = F.concat_ws(
         "|",
-        F.date_format(F.col(ts_col).cast("timestamp"), "yyyyMMddHHmmss"),
-        F.col(url_col),
+        F.date_format(F.col("warc_ts").cast("timestamp"), "yyyyMMddHHmmss"),
+        F.col("url"),
     )
     keyed = slim.withColumn("_order_key", order_key)
 
     # exchange 1: exact-dup window on content_hash (earliest (ts, url) wins)
-    w_hash = Window.partitionBy(hash_col).orderBy(ts_col, url_col)
+    w_hash = Window.partitionBy("content_hash").orderBy("warc_ts", "url")
     uniq = keyed.withColumn("_rn", F.row_number().over(w_hash)).filter(
         F.col("_rn") == 1
     ).drop("_rn")
@@ -398,30 +400,30 @@ def dedup_verdicts_fused(
     # survives (non-matching rows keep NULL pair fields) so the per-doc fold
     # can default to 'unique' without a join back to the corpus.
     banded = uniq.select(
-        F.col(url_col),
-        F.col(ts_col),
-        F.col(doc_type_col).alias("_dt"),
-        F.col(simhash_col).alias("_sh"),
-        F.col(hash_col),
+        F.col("url"),
+        F.col("warc_ts"),
+        F.col("doc_type").alias("_dt"),
+        F.col("simhash").alias("_sh"),
+        F.col("content_hash"),
         "_order_key",
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(b).alias("_band"),
-                    simhash_band_expr(F.col(simhash_col), b, 4).alias("_bits"),
+                    simhash_band_expr(F.col("simhash"), b, 4).alias("_bits"),
                 )
                 for b in (0, 1)  # 16-bit bands 0 and 1: the low half
             ])
         ).alias("_bk"),
     ).select(
-        url_col, ts_col, "_dt", "_sh", hash_col, "_order_key",
+        "url", "warc_ts", "_dt", "_sh", "content_hash", "_order_key",
         "_bk._band", "_bk._bits",
     )
     w_band = Window.partitionBy("_band", "_bits").orderBy("_order_key")
     sim = simhash_similarity_expr(F.col("_sh"), F.first("_sh").over(w_band))
     compared = (
-        banded.withColumn("_rep_url", F.first(url_col).over(w_band))
-        .withColumn("_rep_ts", F.first(ts_col).over(w_band))
+        banded.withColumn("_rep_url", F.first("url").over(w_band))
+        .withColumn("_rep_ts", F.first("warc_ts").over(w_band))
         .withColumn("_rep_dt", F.first("_dt").over(w_band))
         .withColumn("_rep_order", F.first("_order_key").over(w_band))
         .withColumn(
@@ -429,15 +431,15 @@ def dedup_verdicts_fused(
         )
         .withColumn(
             "_pair_type",
-            F.when(F.col("_sim") >= near_threshold, "near-duplicate").when(
-                (F.col("_sim") >= same_event_threshold)
+            F.when(F.col("_sim") >= NEAR_DUP_THRESHOLD, "near-duplicate").when(
+                (F.col("_sim") >= SAME_EVENT_THRESHOLD)
                 & (F.col("_dt") == F.col("_rep_dt"))
                 & (
                     F.abs(
-                        F.col(ts_col).cast("timestamp").cast("long")
+                        F.col("warc_ts").cast("timestamp").cast("long")
                         - F.col("_rep_ts").cast("timestamp").cast("long")
                     )
-                    <= int(same_event_hours * 3600)
+                    <= int(SAME_EVENT_HOURS * 3600)
                 ),
                 "same-event",
             ),
@@ -452,9 +454,9 @@ def dedup_verdicts_fused(
         F.col("_pair_type").isNotNull(), F.col("_rep_order")
     ).otherwise(F.lit("~"))
     return (
-        compared.groupBy(url_col, ts_col)
+        compared.groupBy("url", "warc_ts")
         .agg(
-            F.first(hash_col).alias(hash_col),
+            F.first("content_hash").alias("content_hash"),
             F.min_by(
                 F.struct(
                     F.col("_rep_url").alias("u"),
@@ -465,9 +467,9 @@ def dedup_verdicts_fused(
             ).alias("_m"),
         )
         .select(
-            url_col,
-            ts_col,
-            hash_col,
+            "url",
+            "warc_ts",
+            "content_hash",
             F.when(F.col("_m.p").isNotNull(), F.col("_m.u")).alias("near_dup_of"),
             F.when(F.col("_m.p").isNotNull(), F.col("_m.s")).alias("similarity"),
             F.coalesce(F.col("_m.p"), F.lit("unique")).alias("difference_type"),
@@ -481,6 +483,12 @@ def dedup_verdicts_fused(
 # --- MinHash LSH over word shingles --------------------------------------------
 # 2^31-1: keeps (x % P) * a + b < 2^62 — no int64 overflow under ANSI mode
 _P32 = 2147483647
+
+# Signature length, LSH bands (k/bands rows each) and word-shingle length of
+# the minhash_lsh_pairs query; oracles_sql.sql_minhash_lsh_pairs mirrors them.
+MINHASH_K = 32
+MINHASH_BANDS = 8
+MINHASH_SHINGLE_LEN = 3
 
 # shingle -> 60-bit id memo: md5 of a shingle is a pure function and shingles
 # repeat massively across documents of a real corpus; module-level so a
@@ -500,10 +508,9 @@ def _minhash_params(k: int, seed: int = 42):
 
 
 def add_minhash_signature(
-    df: DataFrame, text_col: str, url_col: str = "url",
-    k: int = 32, shingle_len: int = 3, seed: int = 42,
+    df: DataFrame, text_col: str, k: int = MINHASH_K,
 ) -> DataFrame:
-    """Adds minhash: array<long> of k signature values over word-k-shingles
+    """Adds minhash: array<long> of k signature values over word 3-shingles
     (md5-derived 60-bit shingle ids, k affine min-hashes mod 2^31-1 — exactly
     reproducible in ANSI SQL, see entry_queries._sql_minhash). Vectorized
     numpy inside a pandas UDF: per doc one (k x n_shingles) affine map + min
@@ -514,7 +521,8 @@ def add_minhash_signature(
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
 
-    params = _minhash_params(k, seed)
+    params = _minhash_params(k)
+    shingle_len = MINHASH_SHINGLE_LEN
     a_vec = [a for a, _ in params]
     b_vec = [b for _, b in params]
 
@@ -556,11 +564,10 @@ def add_minhash_signature(
     return df.withColumn("minhash", minhash_udf(F.col(text_col)))
 
 
-def minhash_dedup_pairs(
-    df: DataFrame, url_col: str = "url", bands: int = 8, k: int = 32
-) -> DataFrame:
-    """Candidate pairs whose minhash signatures collide in >=1 band of
-    k/bands rows; estimated jaccard = matching positions / k.
+def minhash_dedup_pairs(df: DataFrame) -> DataFrame:
+    """Candidate pairs among the url column whose minhash signatures collide
+    in >=1 of MINHASH_BANDS bands of MINHASH_K/MINHASH_BANDS rows; estimated
+    jaccard = matching positions / MINHASH_K.
 
     Scale design: docs are grouped by their FULL signature first — identical
     signatures (est 1.0) pair within the group directly, and the banded
@@ -568,13 +575,14 @@ def minhash_dedup_pairs(
     where thousands of docs share one signature costs O(group sizes) instead
     of O(docs^2) band-bucket blowup (same trick as
     exact_jaccard_pairs_prefix)."""
+    k, bands = MINHASH_K, MINHASH_BANDS
     rows = k // bands
     sigs = df.select(
-        F.col(url_col).alias("_url"), F.col("minhash")
+        F.col("url").alias("_url"), F.col("minhash")
     ).withColumn("fp", F.md5(F.concat_ws(",", "minhash")))
     groups = sigs.groupBy("fp").agg(
         F.collect_list("_url").alias("members"), F.first("minhash").alias("minhash")
-    ).persist()
+    )
 
     banded = groups.select(
         "fp",

@@ -23,12 +23,19 @@ _WS_RE = re.compile(r"\s+")
 
 _ST_MODEL = None
 
+# semanticDedup.ts:296-313: 512-char chunks overlapping by 50 chars
+CHUNK_SIZE = 512
+CHUNK_OVERLAP = 50
+# width of the hash encoder's vectors (all-MiniLM-L6-v2 emits 384)
+EMBED_DIM = 64
 
-def chunk_text(text: str, size: int = 512, overlap: int = 50) -> list:
+
+def chunk_text(text: str) -> list:
     """semanticDedup.ts:296-313 chunking: fixed windows with overlap."""
     if not text:
         return []
-    step = max(1, size - overlap)
+    size = CHUNK_SIZE
+    step = max(1, size - CHUNK_OVERLAP)
     return [text[i : i + size] for i in range(0, len(text), step) if text[i : i + size]]
 
 
@@ -39,9 +46,10 @@ def chunk_text(text: str, size: int = 512, overlap: int = 50) -> list:
 _WORD_BUCKET: dict = {}
 
 
-def _hash_embed(chunk: str, dim: int = 64) -> list:
+def _hash_embed(chunk: str) -> list:
     """Deterministic stand-in encoder: word feature-hashing with signed
     buckets, L2-normalized. Replace with sentence-transformers in prod."""
+    dim = EMBED_DIM
     vec = [0.0] * dim
     memo = _WORD_BUCKET
     if len(memo) > 1_000_000:
@@ -52,8 +60,6 @@ def _hash_embed(chunk: str, dim: int = 64) -> list:
         hit = memo.get(w)
         if hit is None:
             d = hashlib.md5(w.encode()).digest()
-            # store the raw byte, not byte % dim: `dim` is a parameter and
-            # the memo is shared across call sites
             hit = (d[0], 1.0 if d[1] % 2 == 0 else -1.0)
             memo[w] = hit
         vec[hit[0] % dim] += hit[1]
@@ -61,12 +67,12 @@ def _hash_embed(chunk: str, dim: int = 64) -> list:
     return [v / norm for v in vec] if norm > 0 else vec
 
 
-def embed_document(text: str, dim: int = 64, model_name: str | None = None) -> list:
+def embed_document(text: str, model_name: str | None = None) -> list:
     """Chunk -> encode -> mean-pool -> L2-normalize. With model_name set,
     uses a sentence-transformers executor singleton (gated import)."""
     chunks = chunk_text(text)
     if not chunks:
-        return [0.0] * dim
+        return [0.0] * EMBED_DIM
     if model_name:
         global _ST_MODEL
         if _ST_MODEL is None:
@@ -80,16 +86,16 @@ def embed_document(text: str, dim: int = 64, model_name: str | None = None) -> l
             _ST_MODEL = SentenceTransformer(model_name)
         vecs = _ST_MODEL.encode(chunks).tolist()
     else:
-        vecs = [_hash_embed(c, dim) for c in chunks]
+        vecs = [_hash_embed(c) for c in chunks]
     dim = len(vecs[0])
     pooled = [sum(v[i] for v in vecs) / len(vecs) for i in range(dim)]
     norm = math.sqrt(sum(v * v for v in pooled))
     return [v / norm for v in pooled] if norm > 0 else pooled
 
 
-def add_embeddings(df: DataFrame, text_col: str, dim: int = 64) -> DataFrame:
+def add_embeddings(df: DataFrame, text_col: str) -> DataFrame:
     @F.pandas_udf(ArrayType(FloatType()))
     def embed_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([embed_document(t or "", dim) for t in texts])
+        return pd.Series([embed_document(t or "") for t in texts])
 
     return df.withColumn("embedding", embed_udf(F.col(text_col)))

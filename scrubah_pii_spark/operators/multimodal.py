@@ -48,8 +48,9 @@ def _decode_stub(payload: bytes) -> list:
     return [b / 255.0 for b in d[:8]]
 
 
-def extract_media_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """mapInPandas feature extraction: partition-preserving, Arrow-batched,
+def extract_media_features(df: DataFrame) -> DataFrame:
+    """mapInPandas feature extraction over the binary payload column,
+    replacing it with the media struct: partition-preserving, Arrow-batched,
     per-executor decoder init (here a no-op), per-row try/except -> error
     column (never task failure; reference continueOnError semantics).
     WAV/PPM/PGM payloads are REALLY decoded (pure-Python codecs,
@@ -58,15 +59,15 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload") -> DataF
     from ..core.media_codecs import detect_and_decode
 
     out_schema = StructType(
-        [f for f in df.schema.fields if f.name != payload_col]
+        [f for f in df.schema.fields if f.name != "payload"]
         + [StructField("media", MEDIA_FEATURES_TYPE)]
     )
-    passthrough = [f.name for f in df.schema.fields if f.name != payload_col]
+    passthrough = [f.name for f in df.schema.fields if f.name != "payload"]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias = []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 raw = bytes(payload) if payload is not None else b""
                 base = {
                     "sha256": hashlib.sha256(raw).hexdigest(),

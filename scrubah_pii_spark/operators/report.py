@@ -11,10 +11,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def timeline_markdown(summary_row, docs_rows, max_lines_per_doc: int = 50) -> str:
+def timeline_markdown(summary_row, docs_rows) -> str:
     """Driver-side serialization of the (small) aggregated report —
-    summary header + per-doc sections + duplicate notices
-    (timelineOrganizer.effect.ts:345-452). Deterministic."""
+    summary header + per-doc sections (the first 50 lines of each) +
+    duplicate notices (timelineOrganizer.effect.ts:345-452). Deterministic."""
     lines = [
         "# Master Timeline",
         "",
@@ -28,24 +28,25 @@ def timeline_markdown(summary_row, docs_rows, max_lines_per_doc: int = 50) -> st
         lines.append(f"*Type: {r['doc_type']} | Date: {r['warc_ts']}*")
         if r.get("difference_type") == "near-duplicate":
             lines.append(f"> NOTE: near-duplicate of {r.get('near_dup_of', '?')}")
-        body = (r.get("scrubbed_text") or "").split("\n")[:max_lines_per_doc]
+        body = (r.get("scrubbed_text") or "").split("\n")[:50]
         lines.extend(body)
         lines.append("")
     return "\n".join(lines)
 
 
-def quality_routing(df: DataFrame, score_col: str = "quality_score") -> DataFrame:
-    """Routing levels + flags (ocrQualityGate.effect.ts:219-247 thresholds:
+def quality_routing(df: DataFrame) -> DataFrame:
+    """Routing levels + flags over quality_score, alpha_ratio, word_count and
+    repetition_ratio (ocrQualityGate.effect.ts:219-247 thresholds:
     HIGH >= 0.7 / MEDIUM >= 0.4 / LOW; flags LOW_CONFIDENCE,
     HIGH_GARBAGE_DENSITY->HIGH_REPETITION, LOW_ALPHA_RATIO, SPARSE_TEXT)."""
     level = (
-        F.when(F.col(score_col) >= 0.7, "HIGH")
-        .when(F.col(score_col) >= 0.4, "MEDIUM")
+        F.when(F.col("quality_score") >= 0.7, "HIGH")
+        .when(F.col("quality_score") >= 0.4, "MEDIUM")
         .otherwise("LOW")
     )
     flags = F.array_compact(
         F.array(
-            F.when(F.col(score_col) < 0.4, F.lit("LOW_CONFIDENCE")),
+            F.when(F.col("quality_score") < 0.4, F.lit("LOW_CONFIDENCE")),
             F.when(F.col("alpha_ratio") < 0.5, F.lit("LOW_ALPHA_RATIO")),
             F.when(F.col("word_count") < 10, F.lit("SPARSE_TEXT")),
             F.when(F.col("repetition_ratio") > 0.5, F.lit("HIGH_REPETITION")),

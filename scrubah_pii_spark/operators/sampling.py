@@ -64,24 +64,19 @@ def host_cap_topn(
     )
 
 
-def dup_span_strip(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    min_df: int = 5,
-) -> DataFrame:
-    """Strip every word covered by an n-gram that appears in >= min_df
-    distinct documents. Returns id_col plus cleaned_text / n_words_kept /
-    n_words_dropped; cleaned_text is NULL when every word is dropped, as in
-    the DuckDB oracle, whose array_to_string([]) is NULL. Word = split on
-    single space (corpus contract).
+def dup_span_strip(df: DataFrame, n: int = 3, min_df: int = 5) -> DataFrame:
+    """Strip every word of (doc_id, text) rows covered by an n-gram that
+    appears in >= min_df distinct documents. Returns doc_id plus
+    cleaned_text / n_words_kept / n_words_dropped; cleaned_text is NULL when
+    every word is dropped, as in the DuckDB oracle, whose
+    array_to_string([]) is NULL. Word = split on single space (corpus
+    contract).
     NULL text is treated as '' — without the coalesce, split(NULL) gives a
     NULL array whose size is -1 under legacy sizeOfNull, and
     sequence(0, -2) silently produces the DESCENDING [0,-1,-2]."""
     words = df.select(
-        id_col,
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("ws"),
+        "doc_id",
+        F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("ws"),
     )
     n_grams = F.greatest(F.size("ws") - (n - 1), F.lit(0))
     # sequence(0, -1) would produce a DESCENDING [0, -1] for docs shorter
@@ -90,7 +85,7 @@ def dup_span_strip(
         n_grams > 0, F.sequence(F.lit(0), n_grams - 1)
     ).otherwise(F.array().cast("array<int>"))
     grams = words.select(
-        id_col,
+        "doc_id",
         F.posexplode(
             F.transform(
                 start_idx,
@@ -100,16 +95,16 @@ def dup_span_strip(
     )
     frequent = (
         grams.groupBy("gram")
-        .agg(F.count_distinct(id_col).alias("df"))
+        .agg(F.count_distinct("doc_id").alias("df"))
         .filter(F.col("df") >= min_df)
         .select("gram")
     )
     starts = (
         grams.join(frequent, "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("i").alias("starts"))
     )
-    joined = words.join(starts, id_col, "left").withColumn(
+    joined = words.join(starts, "doc_id", "left").withColumn(
         "starts", F.coalesce("starts", F.array().cast("array<int>"))
     )
     # Linear coverage mask, O(words + starts): expand each start into its
@@ -123,7 +118,7 @@ def dup_span_strip(
     )
     kept = F.array_except(F.sequence(F.lit(0), F.size("ws") - 1), covered)
     out = joined.select(
-        id_col,
+        "doc_id",
         F.when(
             F.size(kept) > 0,
             F.array_join(
@@ -136,16 +131,11 @@ def dup_span_strip(
     return out
 
 
-def chunk_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_words: int = 5,
-) -> DataFrame:
-    """C4-style cross-document span dedup at fixed word-chunk granularity:
-    the corpus keeps exactly ONE occurrence of every distinct chunk — the
-    globally first one in (doc_id, chunk_pos) order — and every later
-    occurrence is dropped from its document. (C4 does this at the
+def chunk_dedup(df: DataFrame, chunk_words: int = 5) -> DataFrame:
+    """C4-style cross-document span dedup over (doc_id, text) rows at fixed
+    word-chunk granularity: the corpus keeps exactly ONE occurrence of every
+    distinct chunk — the globally first one in (doc_id, chunk_pos) order —
+    and every later occurrence is dropped from its document. (C4 does this at the
     line/3-sentence level; webtext here is single-line, so the unit is a
     fixed chunk_words-word window — the splitter is the only thing that
     would change in production.)
@@ -157,18 +147,18 @@ def chunk_dedup(
     chunk, no join back to the exploded units at all. One shuffle on the
     chunk, one on the doc id for reconstruction.
 
-    Returns id_col, cleaned_text, n_chunks_kept, n_chunks_dropped (docs
+    Returns doc_id, cleaned_text, n_chunks_kept, n_chunks_dropped (docs
     whose every chunk was dropped keep an empty cleaned_text row)."""
     n_chunks = F.ceil(F.size("ws") / F.lit(chunk_words)).cast("int")
     # NULL text -> '' so size(ws) is 1, never the legacy -1 that would feed
     # sequence(0, -2) a descending range (same guard as dup_span_strip).
     chunks = (
         df.select(
-            id_col,
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("ws"),
+            "doc_id",
+            F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("ws"),
         )
         .select(
-            id_col,
+            "doc_id",
             "ws",
             F.posexplode(
                 F.transform(
@@ -182,14 +172,14 @@ def chunk_dedup(
         .drop("ws")
     )
     first = chunks.groupBy("chunk").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("f")
+        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("f")
     )
     kept = first.select(
-        F.col(f"f.{id_col}").alias(id_col),
+        F.col("f.doc_id").alias("doc_id"),
         F.col("f.pos").alias("pos"),
         "chunk",
     )
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "chunk"))),
@@ -200,14 +190,14 @@ def chunk_dedup(
         F.count("*").alias("n_chunks_kept"),
     )
     totals = df.select(
-        id_col,
+        "doc_id",
         F.ceil(
-            F.size(F.split(F.coalesce(F.col(text_col), F.lit("")), " "))
+            F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
             / F.lit(chunk_words)
         ).cast("long").alias("n_chunks"),
     )
-    return totals.join(rebuilt, id_col, "left").select(
-        id_col,
+    return totals.join(rebuilt, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("cleaned_text", F.lit("")).alias("cleaned_text"),
         F.coalesce("n_chunks_kept", F.lit(0)).cast("long").alias("n_chunks_kept"),
         (F.col("n_chunks") - F.coalesce("n_chunks_kept", F.lit(0)))

@@ -274,12 +274,12 @@ RELEVANCE_METRICS_TYPE = StructType(
 )
 
 
-def make_relevance_metrics_udf(generation: int = 2):
+def make_relevance_metrics_udf():
     """Fused relevance scoring (medicalRelevanceFilter.ts:297-385) as one
     Arrow pass — same pure kernel as the flagship, standalone for the bench
-    queries (raw text, fixed generation, matching the expression program it
-    replaces)."""
-    gen = int(generation)
+    queries (raw text, fixed generation 2, matching the expression program
+    it replaces)."""
+    gen = 2
 
     @F.pandas_udf(RELEVANCE_METRICS_TYPE)
     def relevance_metrics_udf(texts: pd.Series) -> pd.DataFrame:

@@ -42,7 +42,14 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return F.when(d > 0, _dot(a, b) / d).otherwise(F.lit(0.0))
 
 
-def _planes(dim: int, n_planes: int, seed: int = 42) -> list:
+# Seed of the hyperplanes every LSH operator draws; the oracles in
+# oracles_sql draw the same planes from it.
+LSH_SEED = 42
+# Planes of lsh_bucketed_topk: 2^8 buckets (oracles_sql.sql_lsh_ann_topk).
+TOPK_N_PLANES = 8
+
+
+def _planes(dim: int, n_planes: int, seed: int = LSH_SEED) -> list:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
 
@@ -57,20 +64,18 @@ def hyperplane_signature(vec: Column, planes: list) -> Column:
 
 
 def lsh_bucketed_topk(
-    corpus: DataFrame, queries: DataFrame, k: int,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    n_planes: int = 8, *, dim: int, seed: int = 42,
+    corpus: DataFrame, queries: DataFrame, k: int, *, dim: int,
 ) -> DataFrame:
-    """Approximate top-k: exact ranking within the query's hyperplane bucket.
-    2^n_planes buckets; recall tunable via n_planes (fewer planes = bigger
-    buckets = higher recall & cost). `dim` is required — no driver-side data
-    probe ever runs inside an operator."""
-    planes = _planes(dim, n_planes, seed)
-    c = corpus.withColumn("_sig", hyperplane_signature(F.col(vec_col), planes)).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec"), "_sig"
+    """Approximate top-k over (vec_id, embedding) rows: exact ranking within
+    the query's hyperplane bucket, 2^TOPK_N_PLANES buckets (fewer planes =
+    bigger buckets = higher recall & cost). `dim` is required — no
+    driver-side data probe ever runs inside an operator."""
+    planes = _planes(dim, TOPK_N_PLANES)
+    c = corpus.withColumn("_sig", hyperplane_signature(F.col("embedding"), planes)).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cvec"), "_sig"
     )
-    q = queries.withColumn("_sig", hyperplane_signature(F.col(vec_col), planes)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"), "_sig"
+    q = queries.withColumn("_sig", hyperplane_signature(F.col("embedding"), planes)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec"), "_sig"
     )
     joined = c.join(F.broadcast(q), "_sig").filter(
         F.col("neighbor_id") != F.col("query_id")
@@ -84,7 +89,7 @@ def lsh_bucketed_topk(
     )
 
 
-def _centroid_assigner(centroids: list, id_col: str, vec_col: str):
+def _centroid_assigner(centroids: list):
     """Factory for the IVF assignment mapInPandas stage: per batch, one
     numpy gram matrix against the broadcast centroid block; rows whose
     selection-boundary gap is < 1e-9 are re-decided with the exact
@@ -116,7 +121,7 @@ def _centroid_assigner(centroids: list, id_col: str, vec_col: str):
             ids_sorted = [cent_ids[i] for i in jorder]
             m = len(ids_sorted)
             for pdf in batches:
-                vecs = [list(v) for v in pdf[vec_col]]
+                vecs = [list(v) for v in pdf["embedding"]]
                 V = np.array(vecs, dtype=np.float64)          # (n, d)
                 vn = np.sqrt((V * V).sum(axis=1))
                 denom = np.outer(vn, cns)
@@ -141,8 +146,8 @@ def _centroid_assigner(centroids: list, id_col: str, vec_col: str):
                     )
                 yield pd.DataFrame(
                     {
-                        "_id": pdf[id_col].astype("int64"),
-                        "_vec": pdf[vec_col],
+                        "_id": pdf["vec_id"].astype("int64"),
+                        "_vec": pdf["embedding"],
                         "_cells": cells,
                     }
                 )
@@ -154,14 +159,13 @@ def _centroid_assigner(centroids: list, id_col: str, vec_col: str):
 
 def ivf_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
     *, centroids: list, n_probe: int = 2,
 ) -> DataFrame:
-    """IVF-Flat approximate top-k (the third ANN tier next to brute-force
-    and hyperplane LSH): every corpus vector is assigned to its
-    highest-cosine centroid cell (ties -> lowest centroid id), each query
-    probes its `n_probe` best cells, and ranking is exact within probed
-    cells.
+    """IVF-Flat approximate top-k over (vec_id, embedding) rows (the third
+    ANN tier next to brute-force and hyperplane LSH): every corpus vector is
+    assigned to its highest-cosine centroid cell (ties -> lowest centroid
+    id), each query probes its `n_probe` best cells, and ranking is exact
+    within probed cells.
 
     `centroids` is a list of (cell_id, vector) trained OFFLINE in production
     (k-means over a sample — the standard IVF recipe); tests/oracles use a
@@ -179,17 +183,17 @@ def ivf_topk(
     between two cells is that close — any row whose cut-boundary gap
     (rank n vs n+1) is < 1e-9 is re-decided with the exact sequential fold
     (same refinement pattern as lsh_cosine_pairs_fast)."""
-    assign = _centroid_assigner(centroids, id_col, vec_col)
+    assign = _centroid_assigner(centroids)
     out_schema = "_id long, _vec array<float>, _cells array<int>"
 
-    c = corpus.select(id_col, vec_col).mapInPandas(
+    c = corpus.select("vec_id", "embedding").mapInPandas(
         assign(1), schema=out_schema
     ).select(
         F.col("_id").alias("neighbor_id"),
         F.col("_vec").alias("_cvec"),
         F.col("_cells")[0].alias("_cell"),
     )
-    q = queries.select(id_col, vec_col).mapInPandas(
+    q = queries.select("vec_id", "embedding").mapInPandas(
         assign(n_probe), schema=out_schema
     ).select(
         F.col("_id").alias("query_id"),
@@ -212,14 +216,13 @@ def ivf_topk(
 
 
 def lsh_cosine_pairs_fast(
-    corpus: DataFrame, threshold: float = 0.85,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    n_planes: int = 6, dim: int = 64, seed: int = 42,
+    corpus: DataFrame, threshold: float = 0.85, id_col: str = "vec_id",
+    n_planes: int = 6, dim: int = 64,
 ) -> DataFrame:
-    """cosine_pairs(exact=False) semantics at Arrow speed: one shuffle on the
-    hyperplane signature, then per-bucket numpy float64 gram matrices instead
-    of per-pair interpreted aggregate()/zip_with expression folds (~50x on
-    1M-pair workloads).
+    """cosine_pairs(exact=False) semantics over the embedding column, at
+    Arrow speed: one shuffle on the hyperplane signature, then per-bucket
+    numpy float64 gram matrices instead of per-pair interpreted
+    aggregate()/zip_with expression folds (~50x on 1M-pair workloads).
 
     Bit-parity with the expression path / DuckDB oracle: numpy and the
     sequential fold differ by ~1e-16, which only matters at decision edges —
@@ -233,7 +236,7 @@ def lsh_cosine_pairs_fast(
     import numpy as np
     import pandas as pd
 
-    planes = [[float(x) for x in p] for p in _planes(dim, n_planes, seed)]
+    planes = [[float(x) for x in p] for p in _planes(dim, n_planes)]
 
     def _fold_dot(a, b):
         s = 0.0
@@ -250,7 +253,7 @@ def lsh_cosine_pairs_fast(
 
     def add_sig(iterator):
         for pdf in iterator:
-            vecs = [list(v) for v in pdf[vec_col]]
+            vecs = [list(v) for v in pdf["embedding"]]
             if vecs:
                 V = np.array(vecs, dtype=np.float64)      # (n, dim)
                 D = V @ P                                 # (n, n_planes)
@@ -266,7 +269,7 @@ def lsh_cosine_pairs_fast(
                 sigs = ["".join(row) for row in bits]
             else:
                 sigs = []
-            out = pdf[[id_col, vec_col]].copy()
+            out = pdf[[id_col, "embedding"]].copy()
             out["_sig"] = sigs
             yield out
 
@@ -294,7 +297,7 @@ def lsh_cosine_pairs_fast(
         ti, tj = int(key[1]), int(key[2])
         ids = pdf[id_col].to_numpy()
         blks = pdf["_blk"].to_numpy()
-        vecs = [list(v) for v in pdf[vec_col]]
+        vecs = [list(v) for v in pdf["embedding"]]
         V = np.array(vecs, dtype=np.float64) if len(vecs) else np.zeros((0, 1))
         col_a, col_b, col_c, col_t = [], [], [], []
 
@@ -440,8 +443,8 @@ def lsh_cosine_pairs_fast(
         n2 = math.sqrt(d) * math.sqrt(d)
         return d / n2 if n2 > 0 else 0.0
 
-    sig_schema = f"{id_col} long, {vec_col} array<float>, _sig string"
-    with_sig = corpus.select(id_col, vec_col).mapInPandas(add_sig, schema=sig_schema)
+    sig_schema = f"{id_col} long, embedding array<float>, _sig string"
+    with_sig = corpus.select(id_col, "embedding").mapInPandas(add_sig, schema=sig_schema)
     # Explicit-width repartition on (bucket, block pair): the per-block gram
     # + pair expansion is heavy Python over few shuffled bytes (50k vectors =
     # ~5 MB but 17M output pairs at sf1.0), so AQE's byte-based coalescing

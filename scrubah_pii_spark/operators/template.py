@@ -22,36 +22,45 @@ from pyspark.sql import functions as F
 
 from .scrub_op import fnv1a64_udf
 
+# compressionPipeline.effect.ts:141-183: a line is a template iff it is in
+# at least max(2, floor(50% of docs)) docs
+LINE_TEMPLATE_FRAC = 0.5
+LINE_TEMPLATE_MIN_DOCS = 2
+# templateDetection.effect.ts:143-312: n-gram windows of 2..5 lines
+NGRAM_MIN_SIZE = 2
+NGRAM_MAX_SIZE = 5
 
-def _lines(df: DataFrame, text_col: str, url_col: str) -> DataFrame:
+
+def _lines(df: DataFrame, text_col: str) -> DataFrame:
     return df.select(
-        F.col(url_col).alias("_url"),
+        F.col("url").alias("_url"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     ).withColumn("trimmed", F.trim("line"))
 
 
 def line_frequency_templates(
-    df: DataFrame, text_col: str, url_col: str = "url",
-    min_len: int = 20, frac: float = 0.5, min_docs: int = 2,
+    df: DataFrame, text_col: str, min_len: int = 20,
 ) -> DataFrame:
-    """The template-line dimension table: (trimmed, doc_count).
+    """The template-line dimension table over (url, text_col) rows:
+    (trimmed, doc_count).
 
     The doc count rides the plan as a broadcast 1-row aggregate instead of a
     driver count() (guide §1.4/§5.2): one action fewer per consumer, and the
     corpus scan overlaps the line stages inside the same job. `int(n * frac)`
-    == floor(n * frac) for the non-negative product, so the in-plan threshold
-    is the same integer the collected one was.
+    == floor(n * frac) for the non-negative product (frac =
+    LINE_TEMPLATE_FRAC), so the in-plan threshold is the same integer the
+    collected one was.
 
     Because the doc count rides the returned lazy plan, every action on the
     result re-scans df; a consumer that runs several actions on it should
     persist it first."""
     scalars = df.agg(F.count("*").alias("_docs"))
     threshold = F.greatest(
-        F.lit(min_docs).cast("long"),
-        F.floor(F.col("_docs") * F.lit(float(frac))),
+        F.lit(LINE_TEMPLATE_MIN_DOCS).cast("long"),
+        F.floor(F.col("_docs") * F.lit(float(LINE_TEMPLATE_FRAC))),
     )
     return (
-        _lines(df, text_col, url_col)
+        _lines(df, text_col)
         .filter(F.length("trimmed") >= min_len)
         .dropDuplicates(["_url", "trimmed"])
         .groupBy("trimmed")
@@ -62,11 +71,9 @@ def line_frequency_templates(
     )
 
 
-def _doc_ngrams(
-    df: DataFrame, text_col: str, url_col: str,
-    min_size: int = 2, max_size: int = 5,
-) -> DataFrame:
-    """Per-document n-gram fingerprints: (_url, ngram_size, pos, content
+def _doc_ngrams(df: DataFrame, text_col: str) -> DataFrame:
+    """Per-document n-gram fingerprints of (url, text_col) rows, n =
+    NGRAM_MIN_SIZE..NGRAM_MAX_SIZE lines: (_url, ngram_size, pos, content
     [normalized, hash input], orig [original lines]). Mirrors
     templateDetection.ts extractNGrams :306-335 — windows whose normalized
     content has <10 non-ws chars are skipped.
@@ -74,12 +81,12 @@ def _doc_ngrams(
     Round 8: pure row-local ARRAY assembly — each doc's line array is split
     once and every n-gram is a slice of it, so there is NO shuffle at all.
     The previous shape (posexplode -> Window.partitionBy(url) with
-    2*(max_size-1) lead() columns) paid a full exchange of wide lead-rows
-    (266 MB at sf1.0) plus a per-doc sort just to reassemble adjacency that
-    the line array already encodes."""
+    2*(NGRAM_MAX_SIZE-1) lead() columns) paid a full exchange of wide
+    lead-rows (266 MB at sf1.0) plus a per-doc sort just to reassemble
+    adjacency that the line array already encodes."""
     lines_arr = F.split(F.col(text_col), "\n")
     sel = df.select(
-        F.col(url_col).alias("_url"),
+        F.col("url").alias("_url"),
         lines_arr.alias("_la"),
         F.transform(
             lines_arr,
@@ -103,7 +110,7 @@ def _doc_ngrams(
         return build
 
     gram_arrays = []
-    for size in range(min_size, max_size + 1):
+    for size in range(NGRAM_MIN_SIZE, NGRAM_MAX_SIZE + 1):
         starts = F.when(n >= size, F.sequence(F.lit(0), n - size)).otherwise(
             F.array().cast("array<int>")
         )
@@ -117,14 +124,13 @@ def _doc_ngrams(
 
 
 def ngram_template_corpus(
-    df: DataFrame, text_col: str, url_col: str = "url",
-    min_size: int = 2, max_size: int = 5,
+    df: DataFrame, text_col: str,
     threshold_frac: float = 0.3, min_docs: int = 3,
     eliminate_overlaps: bool = True, fingerprints: DataFrame | None = None,
 ) -> DataFrame:
-    """FNV-1a n-gram template corpus: (template_id, hash, ngram_size,
-    doc_count, content [original lines], sample [normalized], position,
-    template_type). Native window n-gram assembly; FNV-1a via vectorized UDF
+    """FNV-1a n-gram template corpus of (url, text_col) rows: (template_id,
+    hash, ngram_size, doc_count, content [original lines], sample
+    [normalized], position, template_type). Native window n-gram assembly; FNV-1a via vectorized UDF
     for golden parity (xxhash64 would be faster but breaks hash parity).
 
     Overlap elimination (templateDetection.effect.ts:283-312): larger
@@ -140,18 +146,14 @@ def ngram_template_corpus(
     aggregate), so every action on the result re-scans df; a consumer that
     runs several actions on it should persist it first."""
     corpus = _ngram_corpus_raw(
-        df, text_col, url_col, min_size, max_size, threshold_frac, min_docs,
-        fingerprints,
+        df, text_col, threshold_frac, min_docs, fingerprints,
     )
     if eliminate_overlaps:
         corpus = remove_overlapping_templates(corpus)
     return corpus
 
 
-def _ngram_corpus_raw(
-    df, text_col, url_col, min_size, max_size, threshold_frac, min_docs,
-    fingerprints=None,
-):
+def _ngram_corpus_raw(df, text_col, threshold_frac, min_docs, fingerprints):
     # The corpus-sized scalars (doc count + avg doc lines) ride the plan as a
     # broadcast 1-row aggregate instead of a driver collect() (guide
     # §1.4/§5.2): the corpus build is ONE action (the overlap-dedup fetch)
@@ -166,7 +168,7 @@ def _ngram_corpus_raw(
     # doc_count <= _docs, and the threshold is >= min_docs, so no row passes
     # when _docs < min_docs (the conjunct below keeps the rule explicit).
     scalars = df.filter(F.col(text_col).isNotNull()).agg(
-        F.count_distinct(F.col(url_col)).alias("_docs"),
+        F.count_distinct(F.col("url")).alias("_docs"),
         F.avg(F.size(F.split(F.col(text_col), "\n"))).alias("_avg_lines"),
     )
     threshold = F.greatest(
@@ -177,7 +179,7 @@ def _ngram_corpus_raw(
     hashed = (
         fingerprints
         if fingerprints is not None
-        else _doc_ngrams(df, text_col, url_col, min_size, max_size)
+        else _doc_ngrams(df, text_col)
     )
     # Shuffle keys and metadata, not payloads (guide §2.3): the stats
     # aggregate (distinct-doc count + mean offset) shuffles only
@@ -268,12 +270,13 @@ def remove_overlapping_templates(corpus: DataFrame) -> DataFrame:
 
 
 def strip_ngram_templates(
-    df: DataFrame, corpus: DataFrame, text_col: str, url_col: str = "url",
-    out_col: str = "stripped_text", fingerprints: DataFrame | None = None,
+    df: DataFrame, corpus: DataFrame, text_col: str,
+    fingerprints: DataFrame | None = None,
 ) -> DataFrame:
-    """Strip corpus templates from each doc (templateDetection.effect.ts:
-    317-430): re-fingerprint the doc's line n-grams, hash-join against the
-    (broadcast, dimension-sized) corpus, mark covered lines from ALL matches,
+    """Strip corpus templates from each (url, text_col) doc into
+    stripped_text (templateDetection.effect.ts:317-430): re-fingerprint the
+    doc's line n-grams, hash-join against the (broadcast, dimension-sized)
+    corpus, mark covered lines from ALL matches,
     keep non-overlapping refs (sort by line_start; on overlap keep the larger
     end — :397-430), emit unique lines + stripped text + lineage columns
     (template_refs, unique_lines).
@@ -300,7 +303,7 @@ def strip_ngram_templates(
     fps = (
         fingerprints
         if fingerprints is not None
-        else _doc_ngrams(df, text_col, url_col)
+        else _doc_ngrams(df, text_col)
     )
     tpl = corpus.select(
         "hash", F.col("ngram_size").alias("_tsz"), "template_id"
@@ -363,7 +366,7 @@ def strip_ngram_templates(
         F.coalesce(F.col("_covered"), F.array().cast("array<int>")),
     )
     out = (
-        df.join(per_url.withColumnRenamed("_url", url_col), url_col, "left")
+        df.join(per_url.withColumnRenamed("_url", "url"), "url", "left")
         # when() keeps NULL text -> NULL _n_lines -> NULL coverage (legacy
         # sizeOfNull would otherwise make size(split(NULL)) = -1).
         .withColumn(
@@ -384,7 +387,7 @@ def strip_ngram_templates(
             ),
         )
         .withColumn(
-            out_col,
+            "stripped_text",
             F.concat_ws(
                 "\n", F.transform("unique_lines", lambda s: s.getField("line"))
             ),
@@ -393,7 +396,7 @@ def strip_ngram_templates(
             F.col("template_refs"),
             F.expr("CAST(array() AS array<struct<template_id:string,line_start:int,line_end:int>>)"),
         ))
-        .withColumn("chars_removed", F.length(text_col) - F.length(out_col))
+        .withColumn("chars_removed", F.length(text_col) - F.length("stripped_text"))
         .withColumn(
             "template_coverage",
             (F.col("_n_lines") - F.size("unique_lines")).cast("double")

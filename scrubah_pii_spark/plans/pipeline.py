@@ -81,9 +81,7 @@ def generation_from_ts(warc_ts: Column, current_year: int) -> Column:
 
 
 def label_stage(
-    df: DataFrame,
-    cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
-    use_crawl_lang: bool = False,
+    df: DataFrame, cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG
 ) -> DataFrame:
     """Per-document half of the pipeline: extract -> fused scoring/scrub ->
     gates -> doc typing. Every column is a row-local function of the input
@@ -96,7 +94,9 @@ def label_stage(
     The recency generation that relevance scoring reads comes from an input
     `generation` column when there is one (streaming pins it to 2);
     otherwise it is derived from warc_ts (generation_from_ts). This is the
-    same column-presence rule as for `html` and `text`."""
+    same column-presence rule as for `html` and `text`. The language gate
+    reads the predicted language (lang_pred), never the crawl's `lang`
+    hint."""
     spark = df.sparkSession
 
     # -- extract (html -> text) is FUSED into the doc-features UDF (round 5):
@@ -170,9 +170,8 @@ def label_stage(
             "has_diagnoses", "has_procedures", "has_lab_data",
             "has_medications")}
     ).drop("_f")
-    lang_src = F.col("lang") if use_crawl_lang and "lang" in df.columns else F.col("lang_pred")
     df = (
-        df.withColumn("lang_keep", lang_src.isin(*cfg.langid.keep_langs))
+        df.withColumn("lang_keep", F.col("lang_pred").isin(*cfg.langid.keep_langs))
         .withColumn("quality_keep", F.col("quality_score") >= cfg.quality.ocr_min_quality)
         .withColumn("gates_pass", F.col("lang_keep") & F.col("quality_keep"))
     )
@@ -189,15 +188,19 @@ def label_stage(
 
 
 def run_pipeline(
-    df: DataFrame,
-    cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
-    use_crawl_lang: bool = False,
+    df: DataFrame, cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG
 ) -> PipelineResult:
-    """df: (url, warc_ts, html, text?, lang?) — the input-hint table."""
+    """df: (url, warc_ts, html, text?, lang?) — the input-hint table.
+
+    The returned `labeled` frame is persisted (the stage barrier below) and
+    stays cached until the caller releases it with
+    `result.labeled.unpersist()` once it has consumed output, labeled and
+    metrics. A later run over the same input plan re-labels the input
+    instead of reading that cache (see the barrier)."""
     # sized on the input frame: once the labeled frame is persisted its
     # optimized plan is the cached relation, which lists no input files
     eager_barrier = _input_bytes(df) >= BARRIER_MIN_INPUT_BYTES
-    df = label_stage(df, cfg, use_crawl_lang)
+    df = label_stage(df, cfg)
 
     # Stage barrier: persist the fully-labeled frame. Two reasons:
     #  (1) dedup, output and metrics all consume it — without the
@@ -208,7 +211,12 @@ def run_pipeline(
     #      barrier is the natural stage-materialization point (MEMORY_AND_DISK
     #      spills; plans.resume swaps it for a manifest-tracked parquet stage
     #      write, which is also the checkpoint-resume boundary).
-    labeled = df.persist()
+    # unpersist first: Spark's CacheManager matches a cached frame by plan,
+    # and the same input path gives the same plan, so a bare persist() would
+    # hand back a previous run's labels after the files under that path
+    # were replaced. Dropping any matching entry makes this run label its
+    # own input.
+    labeled = df.unpersist().persist()
     # Eager barrier: populate the cache BEFORE the two independent consumer
     # branches of finish_pipeline fan out. Without it, a single downstream
     # action submits the verdict-build stage and the join-probe stage

@@ -32,7 +32,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
 from ..sources.io import remaining_partitions, write_manifest
 from .pipeline import PipelineResult, finish_pipeline, label_stage
 
@@ -42,24 +41,18 @@ STAGE_TABLE = "stage1_labeled"
 def label_stage_resumable(
     input_df: DataFrame,
     warehouse: str,
-    cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
     batch_dates: int = 8,
-    fail_after_batches: int | None = None,
-    use_crawl_lang: bool = False,
     validate_keys: bool = False,
 ) -> int:
-    """Run label_stage over every crawl_date partition NOT yet in the
-    manifest, in sorted batches of `batch_dates` dates. Returns the number
-    of batches processed this invocation. fail_after_batches injects a
-    mid-job crash for the restart test.
+    """Run label_stage (default config) over every crawl_date partition NOT
+    yet in the manifest, in sorted batches of `batch_dates` dates. Returns
+    the number of batches processed this invocation.
 
     INPUT CONTRACT: (url, warc_ts) is the primary key. The restart path
     collapses exact re-appends on that key (read_stage), so two legitimate
     input rows sharing it would be collapsed too — pass validate_keys=True
     to fail fast on such input (one slim-key shuffle; off by default since
-    at 100 TB the upstream WARC reader already guarantees it).
-    use_crawl_lang forwards to label_stage so a resumed run labels with the
-    SAME flag as the run it restarts."""
+    at 100 TB the upstream WARC reader already guarantees it)."""
     spark = input_df.sparkSession
     if validate_keys:
         dup = (
@@ -82,13 +75,9 @@ def label_stage_resumable(
         dates[i : i + batch_dates] for i in range(0, len(dates), batch_dates)
     ]
     stage_path = os.path.join(warehouse, STAGE_TABLE)
-    for bi, batch in enumerate(batches):
-        if fail_after_batches is not None and bi >= fail_after_batches:
-            raise RuntimeError(
-                f"injected failure before batch {bi} ({len(batches) - bi} left)"
-            )
+    for batch in batches:
         sub = part_in.filter(F.col("crawl_date").isin(batch)).drop("crawl_date")
-        labeled = label_stage(sub, cfg, use_crawl_lang).withColumn(
+        labeled = label_stage(sub).withColumn(
             "crawl_date", F.to_date("warc_ts")
         )
         labeled.write.mode("append").partitionBy("crawl_date").parquet(stage_path)
@@ -127,20 +116,13 @@ def read_stage(spark: SparkSession, warehouse: str) -> DataFrame:
 
 
 def resume_pipeline(
-    input_df: DataFrame,
-    warehouse: str,
-    cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
-    batch_dates: int = 8,
-    use_crawl_lang: bool = False,
+    input_df: DataFrame, warehouse: str, batch_dates: int = 8,
 ) -> PipelineResult:
-    """Complete (or restart) the flagship run: finish any unfinished label
-    partitions, then run the corpus-global half over the checkpointed stage
-    table. Idempotent — calling again after success is a no-op label pass
-    plus a deterministic re-finish. use_crawl_lang forwards to label_stage
-    so a resumed run reproduces the run_pipeline(use_crawl_lang=...) it
-    restarts."""
-    label_stage_resumable(
-        input_df, warehouse, cfg, batch_dates, use_crawl_lang=use_crawl_lang
-    )
+    """Complete (or restart) the flagship run with the default config:
+    finish any unfinished label partitions, then run the corpus-global half
+    over the checkpointed stage table. Idempotent — calling again after
+    success is a no-op label pass plus a deterministic re-finish. It
+    reproduces run_pipeline(input_df)."""
+    label_stage_resumable(input_df, warehouse, batch_dates)
     labeled = read_stage(input_df.sparkSession, warehouse)
-    return finish_pipeline(labeled, cfg)
+    return finish_pipeline(labeled)

@@ -28,7 +28,9 @@ Scale posture (100 TB / 1000 executors) is set here once:
     as stock. The stock LocalFileSystem stays where the class may not load:
     no javac, a master whose executors may run on other machines (only local
     and local-cluster use it), or a driver JVM that started without that
-    directory on its class path, as spark-submit's does (local_fs_conf).
+    directory on its class path, as spark-submit's does (local_fs_conf). For
+    a local or local-cluster master that fallback is a warning that names
+    its reason.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ import re
 import shutil
 import subprocess
 import tempfile
+import warnings
 
 from pyspark import SparkConf, SparkContext
 from pyspark.find_spark_home import _find_spark_home
@@ -66,42 +69,58 @@ _LOCAL_FS_SOURCE = os.path.join(_ENGINE_ROOT, "scrubah_pii_spark", "jvm", "Posix
 _JVM_CLASSES_DIR = os.path.join(_ENGINE_ROOT, ".jvm_classes")
 
 
-def _local_fs_classes() -> str | None:
-    """The directory that holds LOCAL_FS_CLASS, compiled on first use; None
-    when there is no javac or the source cannot be read or compiled. The
-    directory is named by the source's hash and renamed into place whole, so
-    concurrent sessions never load a half-written class."""
+def _local_fs_classes() -> tuple[str | None, str]:
+    """(the directory that holds LOCAL_FS_CLASS, compiled on first use, "")
+    or (None, why it is missing): no javac, or a source that cannot be read
+    or compiled. The directory is named by the source's hash and renamed
+    into place whole, so concurrent sessions never load a half-written
+    class."""
     try:
         with open(_LOCAL_FS_SOURCE, "rb") as f:
             digest = hashlib.sha256(f.read()).hexdigest()[:16]
-    except OSError:
-        return None
+    except OSError as e:
+        return None, f"cannot read {_LOCAL_FS_SOURCE}: {e}"
     target = os.path.join(_JVM_CLASSES_DIR, digest)
     if os.path.isdir(target):
-        return target
+        return target, ""
     java_home = os.environ.get("JAVA_HOME")
     javac = shutil.which("javac", path=os.pathsep.join(
         p for p in (java_home and os.path.join(java_home, "bin"), os.environ.get("PATH")) if p))
     if javac is None:
-        return None
+        return None, "no javac in $JAVA_HOME/bin or on PATH"
     try:
         os.makedirs(_JVM_CLASSES_DIR, exist_ok=True)
         tmp = tempfile.mkdtemp(prefix=".", dir=_JVM_CLASSES_DIR)
-    except OSError:
-        return None
+    except OSError as e:
+        return None, f"cannot write {_JVM_CLASSES_DIR}: {e}"
+    failure = ""
     try:
         built = subprocess.run(
             [javac, "--release", "17", "-cp", os.path.join(_find_spark_home(), "jars", "*"),
              "-d", tmp, _LOCAL_FS_SOURCE],
-            capture_output=True, timeout=_JAVAC_TIMEOUT_S,
-        ).returncode == 0
-        if built:
+            capture_output=True, text=True, timeout=_JAVAC_TIMEOUT_S,
+        )
+        if built.returncode == 0:
             os.rename(tmp, target)
-    except (OSError, subprocess.TimeoutExpired):
-        pass  # javac would not start or finish, or another session renamed its copy in first
+        else:
+            failure = built.stderr.strip()[-500:]
+    except subprocess.TimeoutExpired:
+        failure = f"no result within {_JAVAC_TIMEOUT_S} s"
+    except OSError as e:
+        failure = str(e)  # javac would not start, or another session renamed its copy in first
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return target if os.path.isdir(target) else None
+    if os.path.isdir(target):
+        return target, ""
+    return None, f"javac failed on {_LOCAL_FS_SOURCE}: {failure}"
+
+
+def _stock_filesystem(conf: dict, reason: str) -> dict:
+    warnings.warn(
+        f"{conf['spark.master']}: keeping Hadoop's stock local filesystem, so "
+        f"every file:// write forks a chmod per file ({reason})",
+        stacklevel=3)
+    return conf
 
 
 # Masters whose executors run on this machine and so find the class directory
@@ -137,14 +156,15 @@ def local_fs_conf(conf: dict) -> dict:
     The driver's class path is fixed when its JVM starts, so this starts the
     gateway JVM with those class paths, or joins the one already running (a
     session built earlier in this process, or spark-submit's JVM), and reads
-    its class path. conf comes back unchanged when the class cannot load: no
-    javac, a master other than local or local-cluster, or a running JVM
-    without the directory."""
+    its class path. conf comes back unchanged when the class cannot load: a
+    master other than local or local-cluster; or, with a warning that names
+    the reason, no javac, a failed compile or a running JVM without the
+    directory."""
     if not _LOCAL_MASTER.fullmatch(conf.get("spark.master", "")):
         return conf
-    classes = _local_fs_classes()
+    classes, missing = _local_fs_classes()
     if classes is None:
-        return conf
+        return _stock_filesystem(conf, missing)
     fresh = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
     if fresh:
         given = _spark_defaults()
@@ -162,7 +182,10 @@ def local_fs_conf(conf: dict) -> dict:
         SparkContext._ensure_initialized(conf=SparkConf(loadDefaults=False).setAll(out.items()))
     class_path = SparkContext._jvm.java.lang.System.getProperty("java.class.path")
     if classes not in {os.path.normpath(p) for p in class_path.split(os.pathsep)}:
-        return conf
+        return _stock_filesystem(
+            conf, f"the running driver JVM's class path lacks {classes}; it "
+                  "started before this session (spark-submit, or an earlier "
+                  "SparkSession), so pass --driver-class-path with it")
     out.setdefault("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
     return out
 

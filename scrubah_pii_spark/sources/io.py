@@ -19,15 +19,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def with_partition_cols(df: DataFrame, ts_col: str = "warc_ts", url_buckets: int = 64) -> DataFrame:
-    return df.withColumn("crawl_date", F.to_date(ts_col)).withColumn(
-        "url_bucket", F.pmod(F.xxhash64("url"), F.lit(url_buckets)).cast("int")
+def with_partition_cols(df: DataFrame) -> DataFrame:
+    """crawl_date = days(warc_ts); url_bucket = one of 64 url-hash buckets."""
+    return df.withColumn("crawl_date", F.to_date("warc_ts")).withColumn(
+        "url_bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
     )
 
 
-def write_output(df: DataFrame, warehouse: str, table: str, mode: str = "overwrite") -> None:
+def write_output(df: DataFrame, warehouse: str, table: str) -> None:
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .partitionBy("crawl_date")
         .parquet(os.path.join(warehouse, table))
     )

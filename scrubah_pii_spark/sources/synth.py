@@ -69,8 +69,8 @@ FILLER_SENTENCES = [
 ]
 
 
-def _filler(rng, n_min=2, n_max=5):
-    n = rng.randrange(n_min, n_max + 1)
+def _filler(rng):
+    n = rng.randrange(2, 6)  # 2..5 sentences
     return " ".join(_pick(rng, FILLER_SENTENCES) for _ in range(n))
 
 
@@ -329,9 +329,9 @@ def generate_rows(n: int, seed: int = SEED) -> list:
     return rows
 
 
-def write_parquet(rows: list, path: str, row_group_size: int = 8192) -> None:
+def write_parquet(rows: list, path: str) -> None:
     """Write rows as a single parquet file (pyarrow; no Spark needed).
-    Small row groups keep the file splittable — Spark parallelizes a single
+    Small row groups (8192 rows) keep the file splittable — Spark parallelizes a single
     parquet file at row-group boundaries."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -346,4 +346,4 @@ def write_parquet(rows: list, path: str, row_group_size: int = 8192) -> None:
             "doc_class": [r["doc_class"] for r in rows],
         }
     )
-    pq.write_table(table, path, row_group_size=row_group_size)
+    pq.write_table(table, path, row_group_size=8192)

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
 from ..operators.scrub_op import leak_check_expr
 from ..plans.pipeline import label_stage
 
@@ -43,20 +42,16 @@ def read_webpage_stream(
     )
 
 
-def streaming_transform(
-    stream: DataFrame,
-    cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked url dedup, then the batch label_stage with every row
-    scored as recency generation 2, then the leak flag and the crawl_date
-    partition column. Returns a streaming DataFrame ready for
-    writeStream."""
+def streaming_transform(stream: DataFrame) -> DataFrame:
+    """Url dedup under a 1-hour watermark on warc_ts, then the batch
+    label_stage (default config) with every row scored as recency
+    generation 2, then the leak flag and the crawl_date partition column.
+    Returns a streaming DataFrame ready for writeStream."""
     df = (
-        stream.withWatermark("warc_ts", watermark)
+        stream.withWatermark("warc_ts", "1 hour")
         .dropDuplicates(["url"])
         .withColumn("generation", F.lit(2))
     )
-    return label_stage(df, cfg).withColumn(
+    return label_stage(df).withColumn(
         "pii_leak", F.coalesce(leak_check_expr(F.col("scrubbed_text")), F.lit(False))
     ).withColumn("crawl_date", F.to_date("warc_ts"))

@@ -3,9 +3,10 @@ the JVM. Without libhadoop, stock RawLocalFileSystem forks a chmod for every
 file, .crc file and directory a write creates. The engine's filesystem must
 leave the same modes and .crc files as stock Hadoop, fork nothing, and stay
 a LocalFileSystem. Where it cannot load, the session keeps the stock
-filesystem."""
+filesystem and, for a local master, warns with the reason."""
 
 import os
+import re
 import shutil
 import stat
 import subprocess
@@ -146,11 +147,18 @@ def _write_script(tmp_path, prefix="", report="''"):
 
 
 def _run(cmd, cwd, env=None):
+    """(the last stdout line's fields, stdout + stderr). spark-submit hands
+    the Python job's stderr to its own stdout."""
     env = {**os.environ, **(env or {})}
     env.pop("PYSPARK_GATEWAY_PORT", None)
     proc = subprocess.run(cmd, cwd=cwd, env=env, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
-    return proc.stdout.strip().splitlines()[-1].split()
+    return proc.stdout.strip().splitlines()[-1].split(), proc.stdout + proc.stderr
+
+
+# local_fs_conf's fallback warning: the running JVM lacks the class
+# directory (or, on a host without a JDK, there is no javac)
+_STOCK_FS_WARNING = r"keeping Hadoop's stock local filesystem.*(class path lacks|no javac)"
 
 
 # A gateway JVM started before build_session has a fixed class path without
@@ -167,7 +175,9 @@ assert local_fs_conf({"spark.master": "local[1]"}) == {"spark.master": "local[1]
 
 def test_gateway_started_first_keeps_stock_filesystem(tmp_path):
     script = _write_script(tmp_path, prefix=_GATEWAY_FIRST)
-    assert _run([sys.executable, "-c", script], tmp_path) == ["None", "False", "4"]
+    out, err = _run([sys.executable, "-c", script], tmp_path)
+    assert out == ["None", "False", "4"]
+    assert re.search(_STOCK_FS_WARNING, err), err[-3000:]
 
 
 def test_spark_submit_keeps_stock_filesystem(tmp_path):
@@ -176,9 +186,10 @@ def test_spark_submit_keeps_stock_filesystem(tmp_path):
     job = tmp_path / "job.py"
     job.write_text(_write_script(tmp_path))
     submit = os.path.join(_find_spark_home(), "bin", "spark-submit")
-    out = _run([submit, "--master", "local[1]", "--driver-memory", "1g", str(job)], tmp_path,
-               {"PYSPARK_PYTHON": sys.executable, "PYSPARK_DRIVER_PYTHON": sys.executable})
+    out, err = _run([submit, "--master", "local[1]", "--driver-memory", "1g", str(job)], tmp_path,
+                    {"PYSPARK_PYTHON": sys.executable, "PYSPARK_DRIVER_PYTHON": sys.executable})
     assert out == ["None", "False", "4"]
+    assert re.search(_STOCK_FS_WARNING, err), err[-3000:]
 
 
 _CLASS_PATHS = """(spark._jvm.java.lang.System.getProperty("java.class.path"),
@@ -199,7 +210,7 @@ def test_default_class_paths_are_kept(tmp_path):
         f"spark.driver.extraClassPath  {driver_dir}\n"
         f"spark.executor.extraClassPath={executor_dir}\n")
     script = _write_script(tmp_path, report=f"*{_CLASS_PATHS}")
-    impl, is_engine_fs, rows, driver_path, executor_path = _run(
+    (impl, is_engine_fs, rows, driver_path, executor_path), _ = _run(
         [sys.executable, "-c", script], tmp_path, {"SPARK_CONF_DIR": str(conf_dir)})
     assert (impl, is_engine_fs, rows) == (LOCAL_FS_CLASS, "True", "4")
     # the launcher writes directory entries with a trailing separator
@@ -211,9 +222,36 @@ def test_default_class_paths_are_kept(tmp_path):
     assert os.path.basename(os.path.dirname(executor_path[1])) == ".jvm_classes"
 
 
-def test_only_local_masters_use_engine_filesystem():
-    # executors of any other master may run where the class directory is not
+def test_only_local_masters_use_engine_filesystem(recwarn):
+    # executors of any other master may run where the class directory is not;
+    # that is their normal path, not a fallback, so it warns of nothing
     from scrubah_pii_spark.session import local_fs_conf
 
     for master in ("yarn", "spark://host:7077", "k8s://https://host:443", "local-clusterx"):
         assert local_fs_conf({"spark.master": master}) == {"spark.master": master}
+    assert not [w for w in recwarn if "stock local filesystem" in str(w.message)]
+
+
+def test_no_javac_warns_and_keeps_stock_filesystem(tmp_path, monkeypatch):
+    from scrubah_pii_spark import session
+
+    monkeypatch.setattr(session, "_JVM_CLASSES_DIR", str(tmp_path / "classes"))
+    monkeypatch.setenv("JAVA_HOME", str(tmp_path / "no_jdk"))
+    monkeypatch.setenv("PATH", str(tmp_path / "no_bin"))
+    conf = {"spark.master": "local[2]"}
+    with pytest.warns(UserWarning, match="stock local filesystem.*no javac"):
+        assert session.local_fs_conf(conf) == conf
+
+
+@needs_javac
+def test_failed_compile_warns_and_keeps_stock_filesystem(tmp_path, monkeypatch):
+    from scrubah_pii_spark import session
+
+    broken = tmp_path / "PosixLocalFileSystem.java"
+    broken.write_text("class PosixLocalFileSystem {")
+    monkeypatch.setattr(session, "_LOCAL_FS_SOURCE", str(broken))
+    monkeypatch.setattr(session, "_JVM_CLASSES_DIR", str(tmp_path / "classes"))
+    conf = {"spark.master": "local-cluster[1,1,1024]"}
+    with pytest.warns(UserWarning, match="stock local filesystem.*javac failed"):
+        assert session.local_fs_conf(conf) == conf
+    assert os.listdir(tmp_path / "classes") == []

@@ -141,7 +141,7 @@ class TestOperatorRealDecode:
             "id int, payload binary",
         )
         rows = {r["id"]: r["media"].asDict()
-                for r in extract_media_features(df, "payload").collect()}
+                for r in extract_media_features(df).collect()}
         assert rows[1]["codec"] == "wav"
         assert rows[1]["duration_ms"] == 4 * 1000 // 1000
         assert rows[2]["codec"] == "ppm" and rows[2]["width"] == 2

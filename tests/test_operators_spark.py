@@ -218,9 +218,9 @@ class TestMinHash:
              (3, "entirely different words compose this second document body")],
             "url int, text string",
         )
-        sig = add_minhash_signature(df, "text", "url")
+        sig = add_minhash_signature(df, "text")
         pairs = {(r["url_a"], r["url_b"]): r["est_jaccard"]
-                 for r in minhash_dedup_pairs(sig, "url").collect()}
+                 for r in minhash_dedup_pairs(sig).collect()}
         assert pairs.get((1, 2)) == 1.0
         assert (1, 3) not in pairs
 
@@ -236,7 +236,7 @@ class TestTemplateOps:
             [(str(i), f"{header}\nbody text number {i}\nmore content {i}") for i in range(6)],
             "url string, text string",
         )
-        tpl = line_frequency_templates(df, "text", "url")
+        tpl = line_frequency_templates(df, "text")
         assert [r["trimmed"] for r in tpl.collect()] == [header]
 
     def test_ngram_corpus_fnv_parity(self, spark):
@@ -248,7 +248,7 @@ class TestTemplateOps:
             [(str(i), f"{block}\nunique body {i} with more words") for i in range(4)],
             "url string, text string",
         )
-        corpus = ngram_template_corpus(df, "text", "url")
+        corpus = ngram_template_corpus(df, "text")
         hashes = {r["hash"] for r in corpus.collect()}
         # the 2-line shared block must be in the corpus with FNV-1a parity
         expected = extract_ngrams(

@@ -61,3 +61,23 @@ def test_query_matches_oracle(spark, duck, name):
     assert len(srows) == len(orows)
     assert sorted(scols) == sorted(ocols)
     assert cc.table_hash(scols, srows) == cc.table_hash(ocols, orows)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="sf0.001 test data absent")
+@pytest.mark.parametrize(
+    "name", ("jaccard_pairs", "jaccard_group_edges", "minhash_lsh_pairs"))
+def test_dedup_query_leaves_nothing_cached(spark, name):
+    """The dedup queries share their grouped frame through one plan: running
+    one caches no relation and leaves no persisted RDD behind. A cached
+    relation would also serve the next run over the same input path after
+    its files were replaced."""
+    from scrubah_pii_spark.entry_queries import QUERIES as ALL
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    sdf = ALL[name](spark, SF_DIR)
+    sdf.collect()
+    assert persisted() - before == set()
+    assert "InMemoryRelation" not in sdf._jdf.queryExecution().optimizedPlan().toString()

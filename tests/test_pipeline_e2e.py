@@ -2,6 +2,8 @@
 scrub per url (vs the pure-Python oracle, itself JS-parity-proven), keep/drop
 F1 >= 0.99, zero PII leaks past the gate, dedup verdicts, resume manifest."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +27,27 @@ def oracle_label(row) -> str:
     scrubbed = scrub_text_production(text).text
     gen = max(0, CURRENT_YEAR - row["warc_ts"].year)
     return relevance_score(scrubbed, "", generation=gen).recommendation
+
+
+@contextlib.contextmanager
+def _crash_before_batch(monkeypatch, n):
+    """Kill label_stage_resumable before its batch n (0-based): the
+    resume module's label_stage raises on its (n+1)-th call, after n batches
+    were written and committed. Expects that crash and undoes the patch."""
+    from scrubah_pii_spark.plans import resume
+
+    real, calls = resume.label_stage, []
+
+    def crashing(df):
+        calls.append(1)
+        if len(calls) > n:
+            raise RuntimeError(f"injected failure before batch {n}")
+        return real(df)
+
+    with monkeypatch.context() as m:
+        m.setattr(resume, "label_stage", crashing)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            yield
 
 
 @pytest.fixture(scope="module")
@@ -219,7 +242,7 @@ class TestDedupAndLeaks:
         res.labeled.unpersist()
 
     def test_checkpoint_resume_restart_byte_identical(
-        self, spark, webpages, result, tmp_path_factory
+        self, spark, webpages, result, tmp_path_factory, monkeypatch
     ):
         """Kill the job mid-label-stage, restart against the same warehouse:
         the restart must (a) re-process ONLY unfinished crawl_date
@@ -238,10 +261,8 @@ class TestDedupAndLeaks:
         n_batches = -(-n_dates // batch)
         assert n_batches >= 3, "corpus must span enough dates to interrupt"
 
-        with pytest.raises(RuntimeError, match="injected failure"):
-            label_stage_resumable(
-                webpages, wh, batch_dates=batch, fail_after_batches=2
-            )
+        with _crash_before_batch(monkeypatch, 2):
+            label_stage_resumable(webpages, wh, batch_dates=batch)
         manifest = spark.read.parquet(wh + "/_manifest")
         assert manifest.count() == 2 * batch  # exactly two committed batches
 
@@ -264,7 +285,7 @@ class TestDedupAndLeaks:
         assert canon(res.output) == canon(result.output)
 
     def test_checkpoint_resume_uncommitted_batch_reprocessed(
-        self, spark, webpages, result, tmp_path_factory
+        self, spark, webpages, result, tmp_path_factory, monkeypatch
     ):
         """A kill BETWEEN the stage-parquet append and the manifest commit
         leaves orphan rows for that batch; the restart re-processes the
@@ -283,10 +304,8 @@ class TestDedupAndLeaks:
             F.to_date("warc_ts").alias("d")
         ).distinct().count()
         batch = max(1, n_dates // 4)
-        with pytest.raises(RuntimeError, match="injected failure"):
-            label_stage_resumable(
-                webpages, wh, batch_dates=batch, fail_after_batches=1
-            )
+        with _crash_before_batch(monkeypatch, 1):
+            label_stage_resumable(webpages, wh, batch_dates=batch)
         # simulate data-written-but-uncommitted: copy one committed date's
         # stage rows back in WITHOUT a manifest entry for a new date region
         stage = spark.read.parquet(os.path.join(wh, STAGE_TABLE))
@@ -357,37 +376,8 @@ class TestDedupAndLeaks:
 
 
 class TestResumeContract:
-    """Round-4 ADVICE items: flag plumbing, (url, warc_ts) primary-key
-    contract, and the empty-warehouse guard in plans/resume.py."""
-
-    def test_resume_forwards_label_flags(
-        self, spark, webpages, tmp_path_factory
-    ):
-        """resume_pipeline(use_crawl_lang=...) must reproduce run_pipeline
-        with the SAME flag — previously the resume path silently labeled
-        with defaults."""
-        from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
-        from scrubah_pii_spark.plans.resume import resume_pipeline
-
-        wh = str(tmp_path_factory.mktemp("warehouse_flags"))
-        res = resume_pipeline(webpages, wh, use_crawl_lang=True)
-        ref = run_pipeline(webpages, use_crawl_lang=True)
-        a = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
-             for r in res.output.collect()}
-        b = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
-             for r in ref.output.collect()}
-        assert a == b
-        # the flag must actually reach label_stage: the language gate reads
-        # the crawl's lang column, not the predicted one. The corpus must
-        # hold docs where the two disagree, or this proves nothing.
-        keep_langs = DEFAULT_PIPELINE_CONFIG.langid.keep_langs
-        rows = res.labeled.select("lang", "lang_pred", "lang_keep").collect()
-        assert all(r["lang_keep"] == (r["lang"] in keep_langs) for r in rows)
-        assert any(
-            (r["lang"] in keep_langs) != (r["lang_pred"] in keep_langs)
-            for r in rows
-        )
-        ref.labeled.unpersist()
+    """The (url, warc_ts) primary-key contract and the empty-warehouse guard
+    in plans/resume.py."""
 
     def test_validate_keys_rejects_duplicate_pk(
         self, spark, webpages, tmp_path_factory
@@ -442,3 +432,34 @@ class TestBarrierSizeGate:
         )
         assert _input_bytes(back) == real
         assert 0 < real < (1 << 62)
+
+
+class TestReplacedInput:
+    def test_rerun_after_input_replaced_labels_new_files(self, spark, tmp_path):
+        """Replace the parquet files under one input path and run again in
+        the same session: the second run labels the new corpus. A cache
+        keyed on the (unchanged) plan would hand back the first run's
+        labels."""
+        import os
+        import shutil
+
+        from scrubah_pii_spark.sources.synth import generate_rows, write_parquet
+
+        d = str(tmp_path / "webpages")
+
+        def run(seed):
+            shutil.rmtree(d, ignore_errors=True)
+            os.makedirs(d)
+            rows = generate_rows(100, seed=seed)
+            write_parquet(rows, os.path.join(d, "part-0.parquet"))
+            res = run_pipeline(spark.read.parquet(d))
+            got = {r["url"] for r in res.labeled.select("url").collect()}
+            return res, got, {r["url"] for r in rows}
+
+        first, got1, want1 = run(1)
+        second, got7, want7 = run(7)
+        assert want1 != want7
+        assert got1 == want1
+        assert got7 == want7
+        first.labeled.unpersist()
+        second.labeled.unpersist()

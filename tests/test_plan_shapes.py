@@ -340,9 +340,7 @@ class TestTemplateCorpusLazy:
         built = {}
 
         def construct():
-            built["corpus"] = _ngram_corpus_raw(
-                df, "text", "url", 2, 5, 0.3, 3, None
-            )
+            built["corpus"] = _ngram_corpus_raw(df, "text", 0.3, 3, None)
 
         assert self._jobs_run(spark, construct) == 0
         # self-check: the counter sees the action's jobs, so the zero above
@@ -366,7 +364,7 @@ class TestTemplateCorpusLazy:
         built = {}
 
         def construct():
-            built["t"] = line_frequency_templates(df, "text", "url")
+            built["t"] = line_frequency_templates(df, "text")
 
         assert self._jobs_run(spark, construct) == 0
         # self-check: the counter sees the action's jobs

@@ -11,7 +11,7 @@ from scrubah_pii_spark.operators.embed_op import chunk_text, embed_document
 class TestChunkEmbed:
     def test_chunking_windows(self):
         text = "x" * 1200
-        chunks = chunk_text(text, size=512, overlap=50)
+        chunks = chunk_text(text)
         assert chunks[0] == "x" * 512
         assert all(len(c) <= 512 for c in chunks)
         # overlap: window step is 462

@@ -38,7 +38,7 @@ def framed(spark):
 
 class TestNgramCorpus:
     def test_overlap_elimination_keeps_largest(self, framed):
-        corpus = ngram_template_corpus(framed, "text", "url")
+        corpus = ngram_template_corpus(framed, "text")
         rows = corpus.collect()
         # only the two 3-line chrome blocks survive; their 2-line sub-n-grams
         # are substrings of kept templates and must be eliminated
@@ -48,12 +48,12 @@ class TestNgramCorpus:
 
     def test_no_elimination_keeps_subgrams(self, framed):
         corpus = ngram_template_corpus(
-            framed, "text", "url", eliminate_overlaps=False
+            framed, "text", eliminate_overlaps=False
         )
         assert corpus.count() > 2  # 2-line sub-windows of the chrome remain
 
     def test_classification(self, framed):
-        corpus = ngram_template_corpus(framed, "text", "url")
+        corpus = ngram_template_corpus(framed, "text")
         by_content = {r["content"]: r for r in corpus.collect()}
         assert by_content[HEADER]["position"] == "START"
         assert by_content[HEADER]["template_type"] == "HEADER"
@@ -63,7 +63,7 @@ class TestNgramCorpus:
         df = spark.createDataFrame(
             [("1", "just one\ndocument here")], "url string, text string"
         )
-        assert ngram_template_corpus(df, "text", "url").count() == 0
+        assert ngram_template_corpus(df, "text").count() == 0
 
     def test_remove_overlapping_same_size_substring(self, spark):
         # equal line-count templates: higher doc_count processed first wins
@@ -85,8 +85,8 @@ class TestNgramCorpus:
 
 class TestStripReconstruct:
     def test_strip_removes_chrome_only(self, framed):
-        corpus = ngram_template_corpus(framed, "text", "url")
-        stripped = strip_ngram_templates(framed, corpus, "text", "url")
+        corpus = ngram_template_corpus(framed, "text")
+        stripped = strip_ngram_templates(framed, corpus, "text")
         for r in stripped.collect():
             i = r["url"]
             assert r["stripped_text"] == f"body line alpha {i}\nbody line beta {i}"
@@ -95,18 +95,18 @@ class TestStripReconstruct:
             assert r["chars_removed"] > 0
 
     def test_roundtrip_identity(self, framed):
-        corpus = ngram_template_corpus(framed, "text", "url")
-        stripped = strip_ngram_templates(framed, corpus, "text", "url")
+        corpus = ngram_template_corpus(framed, "text")
+        stripped = strip_ngram_templates(framed, corpus, "text")
         rec = reconstruct_ngram_documents(stripped, corpus, "url")
         assert rec.filter(F.col("reconstructed") != F.col("text")).count() == 0
 
     def test_doc_without_templates_untouched(self, spark, framed):
-        corpus = ngram_template_corpus(framed, "text", "url")
+        corpus = ngram_template_corpus(framed, "text")
         other = spark.createDataFrame(
             [("x", "totally unrelated content\nwith two lines of text")],
             "url string, text string",
         )
-        stripped = strip_ngram_templates(other, corpus, "text", "url")
+        stripped = strip_ngram_templates(other, corpus, "text")
         r = stripped.collect()[0]
         assert r["stripped_text"] == r["text"]
         assert r["template_refs"] == []
@@ -134,7 +134,7 @@ class TestOverlapReplacementLossy:
         df = spark.createDataFrame([("u1", "\n".join(lines))], "url string, text string")
         fps = {
             (r["ngram_size"], r["pos"]): r["hash"]
-            for r in _doc_ngrams(df, "text", "url").collect()
+            for r in _doc_ngrams(df, "text").collect()
         }
         corpus = spark.createDataFrame(
             [
@@ -143,7 +143,7 @@ class TestOverlapReplacementLossy:
             ],
             "hash string, ngram_size int, template_id string, content string",
         )
-        stripped = strip_ngram_templates(df, corpus, "text", "url")
+        stripped = strip_ngram_templates(df, corpus, "text")
         row = stripped.collect()[0]
         # all 5 lines covered by the union of matches -> nothing unique
         assert row["stripped_text"] == ""
@@ -163,11 +163,11 @@ class TestNullTextSemantics:
     aggregate; duplicate urls collapse to one doc in the corpus stats."""
 
     def test_strip_null_text_row(self, spark, framed):
-        corpus = ngram_template_corpus(framed, "text", "url")
+        corpus = ngram_template_corpus(framed, "text")
         with_null = framed.unionByName(
             spark.createDataFrame([("nulldoc", None)], "url string, text string")
         )
-        stripped = strip_ngram_templates(with_null, corpus, "text", "url")
+        stripped = strip_ngram_templates(with_null, corpus, "text")
         row = stripped.filter(F.col("url") == "nulldoc").collect()[0]
         assert row["template_coverage"] is None
         assert row["stripped_text"] == ""
@@ -183,7 +183,7 @@ class TestNullTextSemantics:
         rows.append(("0", rows[0][1]))  # duplicate url
         df = spark.createDataFrame(rows, "url string, text string")
         corpus = ngram_template_corpus(
-            df, "text", "url", min_docs=5, threshold_frac=0.5
+            df, "text", min_docs=5, threshold_frac=0.5
         )
         # threshold = max(5, int(7 * 0.5)) = 5 -- NOT int(9 * 0.5) = 4;
         # the header appears in 7 distinct urls so it must survive, and

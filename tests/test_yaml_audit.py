@@ -1,6 +1,6 @@
 """YAML compression sink (services/compression/yaml.ts) and audit collector
-(services/auditCollector.ts) parity tests — layout, optional sections,
-escaping, and the summary invariants the reference's own suites assert
+(services/auditCollector.ts) parity tests — layout, escaping, and the
+summary invariants the reference's own suites assert
 (test/compression.test.ts; matchCount == |replacements|)."""
 
 from __future__ import annotations
@@ -9,8 +9,8 @@ from scrubah_pii_spark.core.scrub import scrub_text, scrub_text_audited
 from scrubah_pii_spark.core.yaml_sink import YAMLBuilder, escape_yaml, generate_yaml
 
 
-def _minimal_yaml(**over):
-    kw = dict(
+def _minimal_yaml():
+    return generate_yaml(
         patient_id=7,
         age_at_first_visit=41,
         date_start_iso="2024-01-01",
@@ -30,8 +30,6 @@ def _minimal_yaml(**over):
         deduplication="exact",
         generated_at_iso="2026-01-01T00:00:00.000Z",
     )
-    kw.update(over)
-    return generate_yaml(**kw)
 
 
 class TestYamlBuilder:
@@ -68,35 +66,8 @@ class TestGenerateYaml:
         # compression numbers use toFixed(2) / percent with one decimal
         assert "    originalSizeKb: 0.40" in lines
         assert "    ratio: 50.0%" in lines
-        # empty optional sections are omitted entirely
+        # the reference's sections without data are absent
         assert "medications:" not in y and "labTrends:" not in y and "warnings:" not in y
-
-    def test_medications_section(self):
-        y = _minimal_yaml(
-            medications_current=[("aspirin", "2024-01-02", "cardiac")],
-            medications_discontinued=[("metformin", "2023-01-01", "2024-01-01", None)],
-        )
-        assert "medications:" in y
-        assert "  current:" in y
-        assert "    - name: aspirin" in y
-        assert "      reason: cardiac" in y
-        assert "  discontinued:" in y
-        assert "      stopped: 2024-01-01" in y
-        assert "reason: None" not in y  # None fields omitted
-
-    def test_lab_trends_and_warnings(self):
-        y = _minimal_yaml(
-            lab_trends=[("HGB", "STABLE", [("2024-01-01", 13.5, False, None)])],
-            warnings=[("parse", "bad page", "f.pdf", "re-scan", True, "minor")],
-        )
-        assert "labTrends:" in y
-        assert "  - name: HGB" in y
-        assert "      - date: 2024-01-01" in y
-        assert "        value: 13.5" in y
-        assert "        abnormal: false" in y
-        assert "warnings:" in y
-        assert "  - type: parse" in y
-        assert "    recoverable: true" in y
 
 
 class TestScrubAudit:

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -44,13 +45,9 @@ def main():
     # side is scan/shuffle/serialize only.
     mode = sys.argv[4] if len(sys.argv) > 4 else "cluster"
 
-    from pyspark.sql import SparkSession
+    from pyspark.find_spark_home import _find_spark_home
 
-    from scrubah_pii_spark.session import (
-        CODEGEN_CACHE_ENTRIES,
-        PYTHON_DAEMON_MODULE,
-        local_fs_conf,
-    )
+    from scrubah_pii_spark.session import build_session
     from tools.make_pyfiles_zip import build_zip
 
     corpus = f"/tmp/scaling_corpus_{n_docs}.parquet"
@@ -71,7 +68,7 @@ def main():
         f"local[{total_cores}]" if mode == "local"
         else f"local-cluster[{executors},{cores_each},{mem_mb}]"
     )
-    conf = {"spark.app.name": f"scaling-{executors}x{cores_each}", "spark.master": master}
+    conf = {}
     if mode == "local":
         # single-JVM: the driver IS the executor — give it the executor heap
         # (scaled with cores; default 1g OOMs 32 concurrent tasks + persist).
@@ -103,14 +100,8 @@ def main():
             f"-XX:ParallelGCThreads={cores_each} -XX:ConcGCThreads=2 "
             f"-XX:CICompilerCount=2 -XX:ActiveProcessorCount={cores_each}"),
         "spark.submit.pyFiles": zip_path,
+        # the executors import the engine's worker daemon from the zip
         "spark.executorEnv.PYTHONPATH": zip_path,
-        "spark.sql.shuffle.partitions": str(total_cores * 2),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
-        # the executors import the daemon from the zip on PYTHONPATH above
-        "spark.python.daemon.module": PYTHON_DAEMON_MODULE,
         # round-5 lever: smaller Arrow batches shrink each python worker's
         # resident working set (batch in + features out held concurrently),
         # cutting peak memory-bandwidth demand when 32 workers share a host
@@ -126,7 +117,6 @@ def main():
         "spark.sql.files.maxPartitionBytes":
             str(int(os.environ.get("SCRUBAH_MAX_PART_MB", "8")) * 1024 * 1024),
         "spark.local.dir": "/dev/shm/spark-local",
-        "spark.ui.enabled": "false",
         # r7: rep0 1x8 at 8M died ~38 min in with a driver-side RPC failure
         # while the host bw-probe read 30-50x throttled — a stalled executor
         # (GC pause / frozen memory path) can exceed the default 120 s
@@ -145,10 +135,14 @@ def main():
         # executors and the tail stage has more tasks than local slots.
         "spark.locality.wait": os.environ.get("SCRUBAH_LOCALITY_WAIT", "15s"),
     })
-    # file:// writes set modes in the driver and executor JVMs instead of
-    # forking a chmod per file; local_fs_conf starts the driver JVM with conf
-    spark = SparkSession.builder.config(map=local_fs_conf(conf)).getOrCreate()
+    # the engine's session (AQE, Arrow, codegen cache, worker daemon, the
+    # local filesystem that forks no chmod) with this run's settings on top
+    spark = build_session(
+        app_name=f"scaling-{executors}x{cores_each}", master=master,
+        shuffle_partitions=total_cores * 2, extra_conf=conf,
+    )
     spark.sparkContext.setLogLevel("ERROR")
+    app_id = spark.sparkContext.applicationId
 
     import dataclasses
 
@@ -204,6 +198,10 @@ def main():
         t_label_probe = None
     res.labeled.unpersist()
     spark.stop()
+    # a local-cluster Worker keeps each application's executor logs under
+    # its work dir; drop this run's (a no-op in local mode)
+    work = os.environ.get("SPARK_WORKER_DIR") or os.path.join(_find_spark_home(), "work")
+    shutil.rmtree(os.path.join(work, app_id), ignore_errors=True)
 
     print(json.dumps({
         "mode": mode,
