@@ -12,7 +12,7 @@ scrubah_pii_spark/oracles_sql.py); pipeline_flagship (the composition
 embedding the sequential scrub cascade) uses an expected-output oracle — the
 committed full-row golden at the driver's correctness sf
 (tests/golden/flagship_oracle_sf001.json, regenerated only for deliberate
-semantic changes via tools/gen_flagship_oracle.py), itself gated by the
+semantic changes via tools/gen_flagship_oracle_pure.py), itself gated by the
 JS-parity harness + url-keyed sf0.01/sf0.1 hash goldens + fuzz suites +
 per-stage oracles.
 """

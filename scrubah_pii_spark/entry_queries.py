@@ -510,7 +510,7 @@ WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.85
 # --------------------------------------------------------------------------
 
 def q_ann_topk(spark, sf_dir):
-    from .operators.similarity import cosine_expr
+    from .operators.similarity import cosine_expr, rank_top_k
 
     emb = _spread(_embeddings(spark, sf_dir))
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -519,19 +519,15 @@ def q_ann_topk(spark, sf_dir):
     joined = emb.crossJoin(F.broadcast(queries)).filter(
         F.col("vec_id") != F.col("query_id")
     )
+    # the oracle ranks the rounded cosine, so the rank window reads it too
     scored = joined.withColumn(
         "cosine", F.round(cosine_expr(F.col("_q"), F.col("embedding")), 6)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return rank_top_k(scored, 10, "vec_id").select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        "cosine",
+        F.col("rank").cast("long").alias("rank"),
     )
 
 
@@ -1844,6 +1840,6 @@ def oracle_map() -> dict:
         "chunk_dedup": o2.sql_chunk_dedup(chunk_words=5),
         "stratified_sample": o2.sql_stratified_sample(cap=100),
         # expected-output oracle: committed full-row golden at the driver's
-        # correctness sf (0.01); see tools/gen_flagship_oracle.py
+        # correctness sf (0.01); see tools/gen_flagship_oracle_pure.py
         "pipeline_flagship": o2.sql_pipeline_flagship(),
     }

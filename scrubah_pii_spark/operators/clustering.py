@@ -7,12 +7,16 @@ Spark-first how: pairs require equal hyperplane signatures, so components
 never span buckets and Union-Find runs per bucket after one shuffle
 (lsh_semantic_clusters). The generic iterative star-contraction
 (connected_components in tests/engine_reference.py) is the reference it is
-checked against.
+checked against. The signature stage, the numpy cosine block and the exact
+fold that keeps it bit-identical to the oracle are similarity.py's
+(signature_stage, gram_cos, fold_cos).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from .similarity import fold_cos, gram_cos, signature_stage
 
 
 def lsh_semantic_clusters(
@@ -36,19 +40,8 @@ def lsh_semantic_clusters(
     matches connected_components() over cosine_pairs(exact=False), both in
     tests/engine_reference.py, exactly: only nodes with >= 1 edge appear;
     cluster_id = min node id."""
-    from .similarity import _planes
-
-    planes = [[float(x) for x in p] for p in _planes(dim, n_planes)]
-
-    def _fold_dot(a, b):
-        s = 0.0
-        for k in range(len(a)):
-            s += float(a[k]) * float(b[k])
-        return s
 
     def cluster_bucket(pdf):
-        import math
-
         import numpy as np
         import pandas as pd
 
@@ -63,29 +56,21 @@ def lsh_semantic_clusters(
                 i = parent[i]
             return i
 
-        def _exact_cos(a, b):
-            na, nb = math.sqrt(_fold_dot(a, a)), math.sqrt(_fold_dot(b, b))
-            d = na * nb
-            return _fold_dot(a, b) / d if d > 0 else 0.0
-
         # numpy gram matrix for the O(n^2) candidate scan (a hot bucket of
         # 10k vectors is ~50M pure-Python folds otherwise — a multi-minute
         # straggler); pairs within 1e-9 of the threshold are re-decided with
-        # the exact sequential fold, keeping bit-parity with the expression
-        # path / DuckDB oracle (same pattern as lsh_cosine_pairs_fast).
+        # fold_cos, keeping bit-parity with the expression path / DuckDB
+        # oracle.
         has_edge = [False] * n
         if n >= 2:
             V = np.array(vecs, dtype=np.float64)
-            norms_v = np.sqrt((V * V).sum(axis=1))
-            denom = np.outer(norms_v, norms_v)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = np.where(denom > 0, (V @ V.T) / denom, 0.0)
+            C = gram_cos(V, V)
             iu, ju = np.triu_indices(n, k=1)
             cos = C[iu, ju]
             cand = cos >= threshold - 1e-9
             for i, j, c in zip(iu[cand], ju[cand], cos[cand]):
                 if abs(c - threshold) < 1e-9:
-                    c = _exact_cos(vecs[i], vecs[j])
+                    c = fold_cos(vecs[i], vecs[j])
                 if c < threshold:
                     continue
                 has_edge[i] = has_edge[j] = True
@@ -102,31 +87,10 @@ def lsh_semantic_clusters(
         ]
         return pd.DataFrame(rows, columns=["node", "cluster_id"])
 
-    def add_sig(iterator):
-        import numpy as np
-
-        P = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
-        for pdf in iterator:
-            vecs = [list(v) for v in pdf["embedding"]]
-            if vecs:
-                V = np.array(vecs, dtype=np.float64)
-                D = V @ P
-                # numpy dot vs sequential fold differ ~1e-16: re-decide the
-                # rare sign-boundary entries with the exact fold (same
-                # refinement as lsh_cosine_pairs_fast.add_sig)
-                for r, c in np.argwhere(np.abs(D) < 1e-9):
-                    D[r, c] = _fold_dot(vecs[r], planes[c])
-                sigs = ["".join(row) for row in np.where(D >= 0, "1", "0")]
-            else:
-                sigs = []
-            pdf = pdf[["vec_id", "embedding"]].copy()
-            pdf["_sig"] = sigs
-            yield pdf
-
-    sig_schema = "vec_id bigint, embedding array<float>, _sig string"
-    with_sig = emb.select("vec_id", "embedding").mapInPandas(add_sig, schema=sig_schema)
+    with_sig = signature_stage(emb, "vec_id", dim, n_planes)
     # explicit-width repartition: Python-heavy group kernel over few bytes —
-    # AQE's byte-based coalescing must not serialize it (see similarity.py)
+    # AQE's byte-based coalescing must not serialize it (see
+    # similarity.block_pairs)
     n_parts = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return with_sig.repartition(n_parts, "_sig").groupBy("_sig").applyInPandas(
         cluster_bucket, schema="node bigint, cluster_id bigint"

@@ -32,6 +32,7 @@ from ..functions.hashing_expr import (
     simhash_band_expr,
     simhash_similarity_expr,
 )
+from .similarity import block_pairs
 
 # Verdict tiers of contentHasher.effect.ts:240-301: near-duplicate at
 # similarity >= 0.95; same-event at >= 0.70 with the same doc type and crawl
@@ -247,9 +248,9 @@ def _jaccard_bitmask_verified(
     members_b) with fp_a < fp_b — the same shape the prefix path's verify
     step produces, so both expand_groups branches consume it unchanged.
 
-    Shape: each distinct set is replicated to 8 block-pair tasks (triangle
-    join over pmod(xxhash64(fp), 8)); each task compares its two sub-blocks
-    with one float32 indicator matmul per row chunk —
+    Shape: each distinct set is replicated to 8 block-pair tasks
+    (similarity.block_pairs over 8 blocks of fp); each task compares its two
+    sub-blocks with one float32 indicator matmul per row chunk —
     intersection counts are integers <= 64, exactly representable, and
     jaccard = inter / (sz_a + sz_b - inter) is the identical int->double
     division the expression path performs. Work is O(distinct_sets^2 / P)
@@ -263,12 +264,9 @@ def _jaccard_bitmask_verified(
     bit = {w: i for i, w in enumerate(vocab)}
     nbits = max(1, len(bit))
     thr = float(threshold)
-    blocks = 8
 
-    def kernel(key, pdf):
-        ti, tj = int(key[0]), int(key[1])
+    def kernel(pdf, ii, jj):
         fps = pdf["fp"].to_numpy()
-        blks = pdf["blk"].to_numpy()
         szs = pdf["sz"].to_numpy().astype(np.int64)
         M = np.zeros((len(pdf), nbits), dtype=np.float32)
         for r, ws in enumerate(pdf["ws"]):
@@ -276,8 +274,8 @@ def _jaccard_bitmask_verified(
             for w in ws:
                 row[bit[w]] = 1.0
         out_a, out_b, out_j = [], [], []
-
-        def compare(ii, jj, within):
+        within = ii is jj
+        if len(ii) and len(jj):
             fi, fj = fps[ii], fps[jj]
             sa = szs[ii]
             sb = szs[jj]
@@ -304,14 +302,6 @@ def _jaccard_bitmask_verified(
                 out_b.append(np.where(swap, fa, fb))
                 out_j.append(jac[mask])
 
-        ii = np.nonzero(blks == ti)[0]
-        if ti == tj:
-            if len(ii) >= 2:
-                compare(ii, ii, within=True)
-        else:
-            jj = np.nonzero(blks == tj)[0]
-            if len(ii) and len(jj):
-                compare(ii, jj, within=False)
         if not out_a:
             return pd.DataFrame({
                 "fp_a": pd.Series([], dtype=str),
@@ -324,25 +314,9 @@ def _jaccard_bitmask_verified(
             "jaccard": np.concatenate(out_j),
         })
 
-    spark = groups.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    sets = groups.filter(F.col("sz") > 0).select("fp", "ws", "sz").withColumn(
-        "blk", F.pmod(F.xxhash64("fp"), F.lit(blocks)).cast("int")
-    )
-    tasks = (
-        sets.withColumn(
-            "other", F.explode(F.array(*[F.lit(x) for x in range(blocks)]))
-        )
-        .withColumn("ti", F.least("blk", "other"))
-        .withColumn("tj", F.greatest("blk", "other"))
-        .drop("other")
-    )
-    pairs = (
-        # explicit-width repartition: the block-pair kernel is heavy Python
-        # over few bytes — AQE's byte-based coalescing must not serialize it
-        tasks.repartition(n_parts, "ti", "tj")
-        .groupBy("ti", "tj")
-        .applyInPandas(kernel, "fp_a string, fp_b string, jaccard double")
+    sets = groups.filter(F.col("sz") > 0).select("fp", "ws", "sz")
+    pairs = block_pairs(
+        sets, "fp", 8, [], kernel, "fp_a string, fp_b string, jaccard double"
     )
     ga = groups.select(
         F.col("fp").alias("fp_a"), F.col("members").alias("members_a")

@@ -9,11 +9,21 @@ DUPLICATE >= 0.95 / SIMILAR >= 0.85 / RELATED >= 0.5. That is impossible at
   * ivf_topk — centroid cells, exact ranking inside the probed cells.
   * lsh_cosine_pairs_fast — all-pairs >= threshold within LSH buckets
     (semantic dedup), numpy kernels per bucket block.
+The pair kernels these share with clustering.lsh_semantic_clusters and
+dedup's Jaccard bitmask are written once, here: the exact fold (fold_dot,
+fold_cos), the numpy signature stage (signature_stage), the numpy cosine
+block (gram_cos), the block-pair fan-out (block_pairs) and the per-query
+ranking (rank_top_k). numpy float64 and the sequential fold of the Spark
+expressions / DuckDB oracles differ by ~1e-16, so every numpy kernel
+re-decides the few results that close to a decision edge with the fold;
+that keeps them bit-identical to the oracles.
 The exact baselines these are checked against (brute_force_topk, the
 expression-fold cosine_pairs) live in tests/engine_reference.py.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -54,6 +64,119 @@ def _planes(dim: int, n_planes: int, seed: int = LSH_SEED) -> list:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
+def fold_dot(a, b) -> float:
+    """dot(a, b) as _dot computes it: one double product per element, added
+    left to right."""
+    s = 0.0
+    for i in range(len(a)):
+        s += float(a[i]) * float(b[i])
+    return s
+
+
+def fold_cos(a, b) -> float:
+    """cosine_expr's arithmetic: fold_dot over the product of the fold norms,
+    0.0 when a norm is 0."""
+    d = math.sqrt(fold_dot(a, a)) * math.sqrt(fold_dot(b, b))
+    return fold_dot(a, b) / d if d > 0 else 0.0
+
+
+def gram_cos(A, B):
+    """Cosine of every row of A with every row of B (float64 blocks): one
+    matmul over the outer product of the norms, 0.0 where a norm is 0."""
+    na = np.sqrt((A * A).sum(axis=1))
+    nb = np.sqrt((B * B).sum(axis=1))
+    denom = np.outer(na, nb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, (A @ B.T) / denom, 0.0)
+
+
+def signature_stage(df: DataFrame, id_col: str, dim: int, n_planes: int) -> DataFrame:
+    """(id_col, embedding, _sig) rows: each vector's hyperplane signature over
+    _planes(dim, n_planes) in one numpy mapInPandas stage. A sign can only
+    differ from the sequential fold's when |dot| is ~1e-16, so entries under
+    1e-9 are re-decided with fold_dot: the buckets stay those of the
+    expression / DuckDB signature."""
+    planes = [[float(x) for x in p] for p in _planes(dim, n_planes)]
+
+    def add_sig(iterator):
+        P = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
+        for pdf in iterator:
+            vecs = [list(v) for v in pdf["embedding"]]
+            if vecs:
+                D = np.array(vecs, dtype=np.float64) @ P  # (n, n_planes)
+                for r, c in np.argwhere(np.abs(D) < 1e-9):
+                    D[r, c] = fold_dot(vecs[r], planes[c])
+                sigs = ["".join(row) for row in np.where(D >= 0, "1", "0")]
+            else:
+                sigs = []
+            out = pdf[[id_col, "embedding"]].copy()
+            out["_sig"] = sigs
+            yield out
+
+    schema = f"{id_col} long, embedding array<float>, _sig string"
+    return df.select(id_col, "embedding").mapInPandas(add_sig, schema=schema)
+
+
+def block_pairs(
+    df: DataFrame, id_col: str, blocks: int, keys: list, kernel, schema: str,
+) -> DataFrame:
+    """All-pairs work within each `keys` group, split into block pairs: rows
+    hash into `blocks` blocks on xxhash64(id_col), and every unordered block
+    pair is its own applyInPandas group — B(B+1)/2 tasks per key group, each
+    pair of rows met in exactly one. A skewed group (the largest LSH bucket
+    held 45% of all pairs at sf1.0) is no longer a single task.
+
+    kernel(pdf, ii, jj) returns the task's rows of `schema`; ii and jj are the
+    positions in pdf of its two blocks' rows. For a block paired with itself
+    they are the same array, and the kernel pairs each row only with the
+    rows after it.
+
+    Explicit-width repartition on (keys, block pair): the kernels are heavy
+    Python over few shuffled bytes (50k vectors = ~5 MB but 17M output pairs
+    at sf1.0), so AQE's byte-based coalescing collapsed the stage to 5 tasks
+    (measured 15.7 s/task). REPARTITION_BY_NUM is AQE-exempt and satisfies
+    applyInPandas' clustering requirement."""
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    tasks = (
+        df.withColumn(
+            "_blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).cast("int")
+        )
+        .withColumn("_other", F.explode(F.array(*[F.lit(x) for x in range(blocks)])))
+        .withColumn("_ti", F.least("_blk", "_other"))
+        .withColumn("_tj", F.greatest("_blk", "_other"))
+        .drop("_other")
+    )
+
+    def run(key, pdf):
+        ti, tj = int(key[-2]), int(key[-1])
+        blks = pdf["_blk"].to_numpy()
+        ii = np.nonzero(blks == ti)[0]
+        return kernel(pdf, ii, ii if ti == tj else np.nonzero(blks == tj)[0])
+
+    group = [*keys, "_ti", "_tj"]
+    return tasks.repartition(n_parts, *group).groupBy(*group).applyInPandas(run, schema)
+
+
+def rank_top_k(scored: DataFrame, k: int, neighbor_col: str) -> DataFrame:
+    """The k best rows of each query_id by cosine desc, then neighbor_col
+    asc, numbered 1..k in `rank`."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(neighbor_col))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _probe_top_k(c: DataFrame, q: DataFrame, key: str, k: int) -> DataFrame:
+    """Exact top-k of each query among the corpus rows that share its `key`
+    (bucket or cell): c holds (neighbor_id, _cvec, key), the broadcast q
+    (query_id, _qvec, key); a query never matches itself."""
+    joined = c.join(F.broadcast(q), key).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+    scored = joined.withColumn("cosine", cosine_expr(F.col("_qvec"), F.col("_cvec")))
+    return rank_top_k(scored, k, "neighbor_id").select(
+        "query_id", "neighbor_id", "cosine", "rank"
+    )
+
+
 def hyperplane_signature(vec: Column, planes: list) -> Column:
     """Bit-signature: sign of dot(vec, plane_i) per plane — native exprs."""
     bits = []
@@ -77,56 +200,28 @@ def lsh_bucketed_topk(
     q = queries.withColumn("_sig", hyperplane_signature(F.col("embedding"), planes)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec"), "_sig"
     )
-    joined = c.join(F.broadcast(q), "_sig").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = joined.withColumn("cosine", cosine_expr(F.col("_qvec"), F.col("_cvec")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _probe_top_k(c, q, "_sig", k)
 
 
 def _centroid_assigner(centroids: list):
     """Factory for the IVF assignment mapInPandas stage: per batch, one
-    numpy gram matrix against the broadcast centroid block; rows whose
-    selection-boundary gap is < 1e-9 are re-decided with the exact
-    sequential fold (bit-parity with the expression/DuckDB arithmetic)."""
-    import math
-
-    import numpy as np
+    gram_cos block against the broadcast centroid block; rows whose
+    selection-boundary gap is < 1e-9 are re-decided with fold_cos."""
     import pandas as pd
 
     cent_ids = [int(j) for j, _ in centroids]
     cent_vecs = [[float(x) for x in v] for _, v in centroids]
 
-    def _fold_dot(a, b):
-        s = 0.0
-        for i in range(len(a)):
-            s += float(a[i]) * float(b[i])
-        return s
-
-    def _fold_cos(a, b):
-        d = math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
-        return _fold_dot(a, b) / d if d > 0 else 0.0
-
     def make(n_best: int):
         def run(batches):
             C = np.array(cent_vecs, dtype=np.float64)         # (m, d)
-            cn = np.sqrt((C * C).sum(axis=1))                 # (m,)
             jorder = np.argsort(np.array(cent_ids), kind="stable")
-            Cs, cns = C[jorder], cn[jorder]                   # j-ascending
+            Cs = C[jorder]                                    # j-ascending
             ids_sorted = [cent_ids[i] for i in jorder]
             m = len(ids_sorted)
             for pdf in batches:
                 vecs = [list(v) for v in pdf["embedding"]]
-                V = np.array(vecs, dtype=np.float64)          # (n, d)
-                vn = np.sqrt((V * V).sum(axis=1))
-                denom = np.outer(vn, cns)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, (V @ Cs.T) / denom, 0.0)
+                cos = gram_cos(np.array(vecs, dtype=np.float64), Cs)
                 cells = []
                 for r in range(len(vecs)):
                     # stable argsort of -cos: ties keep j-ascending order
@@ -135,7 +230,7 @@ def _centroid_assigner(centroids: list):
                         gap = cos[r][order[n_best - 1]] - cos[r][order[n_best]]
                         if gap < 1e-9:
                             exact = [
-                                _fold_cos(vecs[r], Cs[i].tolist())
+                                fold_cos(vecs[r], Cs[i].tolist())
                                 for i in range(m)
                             ]
                             order = sorted(
@@ -181,8 +276,7 @@ def ivf_topk(
     Oracle bit-parity: numpy float64 dot differs from the sequential
     expression/DuckDB fold by ~1e-16, which only matters when the choice
     between two cells is that close — any row whose cut-boundary gap
-    (rank n vs n+1) is < 1e-9 is re-decided with the exact sequential fold
-    (same refinement pattern as lsh_cosine_pairs_fast)."""
+    (rank n vs n+1) is < 1e-9 is re-decided with fold_cos."""
     assign = _centroid_assigner(centroids)
     out_schema = "_id long, _vec array<float>, _cells array<int>"
 
@@ -201,18 +295,7 @@ def ivf_topk(
         F.explode("_cells").alias("_cell"),
     )
 
-    joined = c.join(F.broadcast(q), "_cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = joined.withColumn(
-        "cosine", cosine_expr(F.col("_qvec"), F.col("_cvec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _probe_top_k(c, q, "_cell", k)
 
 
 def lsh_cosine_pairs_fast(
@@ -227,51 +310,11 @@ def lsh_cosine_pairs_fast(
     Bit-parity with the expression path / DuckDB oracle: numpy and the
     sequential fold differ by ~1e-16, which only matters at decision edges —
     any pair within 1e-9 of a threshold/tier boundary or within 1e-12 (cosine
-    units) of a half-up 6-decimal rounding edge is RECOMPUTED with the exact
-    sequential fold before deciding. Output cosine is pre-rounded half-up to
-    6 decimals (what F.round would produce).
+    units) of a half-up 6-decimal rounding edge is RECOMPUTED with fold_cos
+    before deciding. Output cosine is pre-rounded half-up to 6 decimals (what
+    F.round would produce).
     """
-    import math
-
-    import numpy as np
     import pandas as pd
-
-    planes = [[float(x) for x in p] for p in _planes(dim, n_planes)]
-
-    def _fold_dot(a, b):
-        s = 0.0
-        for k in range(len(a)):
-            s += float(a[k]) * float(b[k])
-        return s
-
-    def _exact_cos(a, b):
-        na, nb = math.sqrt(_fold_dot(a, a)), math.sqrt(_fold_dot(b, b))
-        d = na * nb
-        return _fold_dot(a, b) / d if d > 0 else 0.0
-
-    P = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
-
-    def add_sig(iterator):
-        for pdf in iterator:
-            vecs = [list(v) for v in pdf["embedding"]]
-            if vecs:
-                V = np.array(vecs, dtype=np.float64)      # (n, dim)
-                D = V @ P                                 # (n, n_planes)
-                # numpy dot vs the sequential fold differ ~1e-16; the sign
-                # only flips when |dot| is at that scale — re-decide those
-                # few entries with the exact fold (same refinement pattern
-                # as decide() below), keeping bit-parity with the
-                # expression/DuckDB arithmetic at ~50x less Python work.
-                risky = np.argwhere(np.abs(D) < 1e-9)
-                for r, c in risky:
-                    D[r, c] = _fold_dot(vecs[r], planes[c])
-                bits = np.where(D >= 0, "1", "0")
-                sigs = ["".join(row) for row in bits]
-            else:
-                sigs = []
-            out = pdf[[id_col, "embedding"]].copy()
-            out["_sig"] = sigs
-            yield out
 
     boundaries = sorted({threshold, 0.85, 0.95})
 
@@ -282,21 +325,14 @@ def lsh_cosine_pairs_fast(
             else "related"
         )
 
-    # Block split (r8): one LSH bucket's pair work is otherwise a single
-    # task, and real buckets are skewed (largest bucket = 45% of all pairs
-    # at sf1.0; 5.6 s max task vs ~1 s median measured). Each bucket's rows
-    # are hashed into `block_split` blocks and every unordered block pair
-    # becomes its own applyInPandas group — B(B+1)/2 tasks per bucket, each
-    # pair of vectors compared in exactly one task. Gram entries are the
-    # same float64 dot/norm arithmetic regardless of which sub-matrix they
-    # land in, and every decision-edge entry is re-decided with the exact
-    # sequential fold, so the block decomposition cannot change output.
-    block_split = 4
+    # Each bucket's pair work is split over 4 x 4 block pairs (block_pairs):
+    # real buckets are skewed (5.6 s max task vs ~1 s median measured at
+    # sf1.0). Gram entries are the same float64 dot/norm arithmetic whichever
+    # sub-matrix they land in, and every decision-edge entry is re-decided
+    # with fold_cos, so the block decomposition cannot change output.
 
-    def pair_block(key, pdf):
-        ti, tj = int(key[1]), int(key[2])
+    def pair_block(pdf, ii, jj):
         ids = pdf[id_col].to_numpy()
-        blks = pdf["_blk"].to_numpy()
         vecs = [list(v) for v in pdf["embedding"]]
         V = np.array(vecs, dtype=np.float64) if len(vecs) else np.zeros((0, 1))
         col_a, col_b, col_c, col_t = [], [], [], []
@@ -323,7 +359,7 @@ def lsh_cosine_pairs_fast(
             frac = (c * 1e6) % 1.0
             near_round_edge = abs(frac - 0.5) < 1e-6
             if near_boundary or near_round_edge:
-                c = _exact_cos(vecs[ri], vecs[rj])  # exact fold decides
+                c = fold_cos(vecs[ri], vecs[rj])  # exact fold decides
             if c < threshold:
                 return None
             return math.floor(c * 1e6 + 0.5) / 1e6
@@ -340,12 +376,7 @@ def lsh_cosine_pairs_fast(
             ga, gb = len(reps_a), len(reps_b)
             if ga == 0 or gb == 0:
                 return
-            Ra, Rb = V[reps_a], V[reps_b]
-            na = np.sqrt((Ra * Ra).sum(axis=1))
-            nb = np.sqrt((Rb * Rb).sum(axis=1))
-            denom = np.outer(na, nb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = np.where(denom > 0, (Ra @ Rb.T) / denom, 0.0)
+            C = gram_cos(V[reps_a], V[reps_b])
             if upper_only:
                 iu, ju = np.triu_indices(ga, k=1)
                 cos = C[iu, ju]
@@ -366,7 +397,7 @@ def lsh_cosine_pairs_fast(
             risky |= np.abs(frac - 0.5) < 1e-6
             for k in np.nonzero(risky)[0]:
                 cos[k] = (
-                    _exact_cos(vecs[reps_a[iu[k]]], vecs[reps_b[ju[k]]])
+                    fold_cos(vecs[reps_a[iu[k]]], vecs[reps_b[ju[k]]])
                     if math.isfinite(cos[k]) else np.nan
                 )
             keep = np.isfinite(cos) & (cos >= threshold)
@@ -400,15 +431,15 @@ def lsh_cosine_pairs_fast(
                 col_c.append(np.full(len(aa), rounded[k]))
                 col_t.append(np.full(len(aa), tiers[k], dtype=object))
 
-        if ti == tj:
-            side = np.nonzero(blks == ti)[0]
-            reps, members = collapse(side)
+        reps_a, members_a = collapse(ii)
+        if ii is jj:
+            reps_b, members_b = reps_a, members_a
             # within-group pairs: one decision per group (multi-member
             # groups are rare on real corpora — loop is fine)
-            for gi, mem in enumerate(members):
+            for gi, mem in enumerate(members_a):
                 if len(mem) < 2:
                     continue
-                c = decide(_self_cos(V[reps[gi]]), reps[gi], reps[gi])
+                c = decide(_self_cos(V[reps_a[gi]]), reps_a[gi], reps_a[gi])
                 if c is None:
                     continue
                 m_arr = np.array(mem, dtype=np.int64)  # sorted -> a < b
@@ -417,15 +448,9 @@ def lsh_cosine_pairs_fast(
                 col_b.append(m_arr[ju])
                 col_c.append(np.full(len(iu), c))
                 col_t.append(np.full(len(iu), _tier(c), dtype=object))
-            emit_cross(reps, members, reps, members, upper_only=True)
         else:
-            side_a = np.nonzero(blks == ti)[0]
-            side_b = np.nonzero(blks == tj)[0]
-            if len(side_a) and len(side_b):
-                reps_a, members_a = collapse(side_a)
-                reps_b, members_b = collapse(side_b)
-                emit_cross(reps_a, members_a, reps_b, members_b,
-                           upper_only=False)
+            reps_b, members_b = collapse(jj)
+        emit_cross(reps_a, members_a, reps_b, members_b, upper_only=ii is jj)
 
         if not col_a:
             return pd.DataFrame(columns=["id_a", "id_b", "cosine", "tier"])
@@ -443,30 +468,7 @@ def lsh_cosine_pairs_fast(
         n2 = math.sqrt(d) * math.sqrt(d)
         return d / n2 if n2 > 0 else 0.0
 
-    sig_schema = f"{id_col} long, embedding array<float>, _sig string"
-    with_sig = corpus.select(id_col, "embedding").mapInPandas(add_sig, schema=sig_schema)
-    # Explicit-width repartition on (bucket, block pair): the per-block gram
-    # + pair expansion is heavy Python over few shuffled bytes (50k vectors =
-    # ~5 MB but 17M output pairs at sf1.0), so AQE's byte-based coalescing
-    # collapsed the stage to 5 tasks (measured 15.7 s/task). REPARTITION_BY_NUM
-    # is AQE-exempt and satisfies applyInPandas' clustering requirement.
-    spark = corpus.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tasks = (
-        with_sig.withColumn(
-            "_blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(block_split)).cast("int")
-        )
-        .withColumn(
-            "_other", F.explode(F.array(*[F.lit(x) for x in range(block_split)]))
-        )
-        .withColumn("_ti", F.least("_blk", "_other"))
-        .withColumn("_tj", F.greatest("_blk", "_other"))
-        .drop("_other")
-    )
-    return (
-        tasks.repartition(n_parts, "_sig", "_ti", "_tj")
-        .groupBy("_sig", "_ti", "_tj")
-        .applyInPandas(
-            pair_block, schema="id_a long, id_b long, cosine double, tier string"
-        )
+    return block_pairs(
+        signature_stage(corpus, id_col, dim, n_planes), id_col, 4, ["_sig"],
+        pair_block, "id_a long, id_b long, cosine double, tier string",
     )

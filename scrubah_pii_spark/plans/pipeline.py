@@ -38,6 +38,7 @@ from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
 from ..functions.hashing_expr import doc_type_expr
 from ..operators.dedup import dedup_verdicts_fused
 from ..operators.scrub_op import (
+    DOC_FEATURES_TYPE,
     leak_check_expr,
     make_doc_features_extract_udf,
 )
@@ -160,15 +161,7 @@ def label_stage(
         "_f", feats(F.col("_text_in"), F.col("_html_in"), F.col("generation"))
     )
     df = df.withColumns(
-        {name: F.col(f"_f.{name}") for name in (
-            "lang_pred", "lang_score", "lang_margin", "log_ppl",
-            "repetition_ratio", "quality_score", "alpha_ratio", "space_ratio",
-            "word_count", "avg_word_len", "scrubbed_text", "replacements",
-            "pii_count", "simhash", "relevance_score", "recommendation",
-            "clinical_references", "placeholder_density",
-            "medical_content_density", "is_garbage_doc", "has_outcomes",
-            "has_diagnoses", "has_procedures", "has_lab_data",
-            "has_medications")}
+        {name: F.col(f"_f.{name}") for name in DOC_FEATURES_TYPE.fieldNames()}
     ).drop("_f")
     df = (
         df.withColumn("lang_keep", F.col("lang_pred").isin(*cfg.langid.keep_langs))

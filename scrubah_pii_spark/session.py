@@ -74,7 +74,7 @@ def _local_fs_classes() -> tuple[str | None, str]:
     or (None, why it is missing): no javac, or a source that cannot be read
     or compiled. The directory is named by the source's hash and renamed
     into place whole, so concurrent sessions never load a half-written
-    class."""
+    class; a compile deletes the directories of earlier sources."""
     try:
         with open(_LOCAL_FS_SOURCE, "rb") as f:
             digest = hashlib.sha256(f.read()).hexdigest()[:16]
@@ -102,6 +102,11 @@ def _local_fs_classes() -> tuple[str | None, str]:
         )
         if built.returncode == 0:
             os.rename(tmp, target)
+            # classes of an earlier source are never loaded again; dot-named
+            # directories are compiles still in flight
+            for name in os.listdir(_JVM_CLASSES_DIR):
+                if name != digest and re.fullmatch(r"[0-9a-f]{16}", name):
+                    shutil.rmtree(os.path.join(_JVM_CLASSES_DIR, name), ignore_errors=True)
         else:
             failure = built.stderr.strip()[-500:]
     except subprocess.TimeoutExpired:

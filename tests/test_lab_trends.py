@@ -4,8 +4,6 @@ INSUFFICIENT_DATA over time-ordered lab values."""
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 
 def _mk(spark, series):
     """series: {test: [(day, value), ...]} -> docs df with `labs` arrays."""

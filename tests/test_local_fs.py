@@ -255,3 +255,19 @@ def test_failed_compile_warns_and_keeps_stock_filesystem(tmp_path, monkeypatch):
     with pytest.warns(UserWarning, match="stock local filesystem.*javac failed"):
         assert session.local_fs_conf(conf) == conf
     assert os.listdir(tmp_path / "classes") == []
+
+
+@needs_javac
+def test_compile_removes_classes_of_earlier_sources(tmp_path, monkeypatch):
+    # a changed Java source compiles into a new hash directory; the old one
+    # is never loaded again. A name that is not a source hash stays, and so
+    # do dot-named directories: another session's compile in flight.
+    from scrubah_pii_spark import session
+
+    classes = tmp_path / "classes"
+    for name in ("0123456789abcdef", "keep", ".inflight"):
+        (classes / name).mkdir(parents=True)
+    monkeypatch.setattr(session, "_JVM_CLASSES_DIR", str(classes))
+    target, reason = session._local_fs_classes()
+    assert reason == ""
+    assert sorted(os.listdir(classes)) == sorted([".inflight", "keep", os.path.basename(target)])

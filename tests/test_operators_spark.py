@@ -4,7 +4,6 @@ clustering, extraction, multimodal plumbing, streaming."""
 import pytest
 from pyspark.sql import functions as F
 
-from scrubah_pii_spark.core.hashing import simhash_int
 from dedup_reference import jaccard, word_set
 
 

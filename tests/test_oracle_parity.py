@@ -21,6 +21,11 @@ QUERIES = (
     "jaccard_group_edges",
     "minhash_lsh_pairs",
     "dup_span_strip",
+    "ann_cosine_topk",
+    "lsh_ann_topk",
+    "ivf_ann_topk",
+    "semantic_clusters",
+    "doc_embed_neardup",
 )
 
 

@@ -7,8 +7,6 @@ constants (services/testConstants.ts)."""
 
 import re
 
-import pytest
-
 from engine_reference import might_contain_pii
 from scrubah_pii_spark.core.scrub import (
     PII_PATTERNS,

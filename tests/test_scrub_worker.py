@@ -8,12 +8,7 @@ from pathlib import Path
 
 import pytest
 
-from scrubah_pii_spark.core.scrub_worker import (
-    PATTERNS,
-    US_STATES,
-    WHITELIST_ACRONYMS,
-    scrub_text_worker,
-)
+from scrubah_pii_spark.core.scrub_worker import scrub_text_worker
 from scrubah_pii_spark.sources.synth import generate_rows
 
 HARNESS = Path(__file__).resolve().parent.parent / "tools" / "scrub_worker_harness.mjs"
