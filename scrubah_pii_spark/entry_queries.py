@@ -30,6 +30,7 @@ from .functions.hashing_expr import (
     extract_dates_expr,
     normalize_for_hashing_expr,
 )
+from .operators.row_udf import row_udf
 from .oracles_sql import DOT, NRM, SQL_NORM
 
 
@@ -142,14 +143,14 @@ FROM sc
 # --------------------------------------------------------------------------
 
 def q_relevance_label(spark, sf_dir):
-    # Fused Arrow kernel (operators/scrub_op.py:make_relevance_metrics_udf) —
+    # Fused Arrow kernel (operators/scrub_op.py:relevance_metrics_udf) —
     # same pure function as the flagship/oracle; replaces a ~125-term native
     # contains-expression program, the measured anti-scaling path
     # (plans/pipeline.py:10-16).
-    from .operators.scrub_op import make_relevance_metrics_udf
+    from .operators.scrub_op import relevance_metrics_udf
 
     df = _spread(_docs(spark, sf_dir))
-    r = make_relevance_metrics_udf()(F.col("text"))
+    r = relevance_metrics_udf(F.col("text"))
     return df.select("doc_id", r.alias("r")).select(
         "doc_id",
         F.col("r.clinical_references").cast("long").alias("clinical_references"),
@@ -835,7 +836,7 @@ FROM sc
 def q_minhash_signature(spark, sf_dir):
     """First 4 minhash signature values per doc — deterministic md5-based
     hashing reproducible in ANSI SQL (md5 -> 60-bit int -> k affine mins)."""
-    from .operators.dedup import _minhash_params, add_minhash_signature
+    from .operators.dedup import add_minhash_signature
 
     df = add_minhash_signature(_spread(_docs(spark, sf_dir)), "text", k=4)
     return df.select(
@@ -900,25 +901,21 @@ def q_scrub_worker(spark, sf_dir):
     the probe is restricted; FULL worker semantics stay gated by the 500-doc
     goldens + adversarial fuzz vs the native-JS harness
     (tests/test_goldens.py)."""
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType, StringType, StructField, StructType,
     )
+
+    from .core.scrub_worker import scrub_text_worker
 
     out_type = StructType([
         StructField("scrubbed_text", StringType()),
         StructField("pii_count", IntegerType()),
     ])
 
-    @F.pandas_udf(out_type)
-    def worker_udf(texts):
-        from .core.scrub_worker import scrub_text_worker
-
-        outs = [scrub_text_worker(t or "") for t in texts]
-        return pd.DataFrame({
-            "scrubbed_text": [o.text for o in outs],
-            "pii_count": [o.count for o in outs],
-        })
+    @row_udf(out_type)
+    def worker_udf(text):
+        out = scrub_text_worker(text or "")
+        return out.text, out.count
 
     from .oracles_sql import worker_probe_expr
 
@@ -931,21 +928,17 @@ def q_scrub_worker(spark, sf_dir):
 
 def q_markdown_sink(spark, sf_dir):
     """Markdown formatting (byte-exact reference layout)."""
-    import pandas as pd
     from pyspark.sql.types import StringType
 
-    @F.pandas_udf(StringType())
-    def md_udf(texts, ids):
-        from .core.markdown import format_to_markdown
+    from .core.markdown import format_to_markdown
 
-        return pd.Series([
-            format_to_markdown(
-                source_file=f"doc-{i}.txt", file_size_bytes=len(t or ""),
-                file_type="text/plain", scrubbed_text=t or "", pii_count=0,
-                processed_date_iso="2026-01-01T00:00:00.000Z",
-            )
-            for t, i in zip(texts, ids)
-        ])
+    @row_udf(StringType())
+    def md_udf(text, doc_id):
+        return format_to_markdown(
+            source_file=f"doc-{doc_id}.txt", file_size_bytes=len(text or ""),
+            file_type="text/plain", scrubbed_text=text or "", pii_count=0,
+            processed_date_iso="2026-01-01T00:00:00.000Z",
+        )
 
     df = _spread(_docs(spark, sf_dir))
     return df.select("doc_id", md_udf(F.col("text"), F.col("doc_id")).alias("markdown"))
@@ -982,24 +975,19 @@ def q_extraction(spark, sf_dir):
 def q_narrative(spark, sf_dir):
     """Deterministic narrative summaries composed from structured extraction
     (narrativeGeneration.ts template semantics, STANDARD verbosity)."""
-    import pandas as pd
     from pyspark.sql.types import StringType
 
+    from .core.narrative import narrative_for_extraction
     from .operators.extraction_op import add_extraction
 
-    @F.pandas_udf(StringType())
+    @row_udf(StringType())
     def narrative_udf(labs, vitals, icd):
-        from .core.narrative import narrative_for_extraction
-
-        return pd.Series([
-            narrative_for_extraction(
-                [(l["test"], l["value"], l["unit"], l["status"])
-                 for l in (ls if ls is not None else [])],
-                [(v["vital"], v["value"]) for v in (vs if vs is not None else [])],
-                list(ic if ic is not None else []),
-            )
-            for ls, vs, ic in zip(labs, vitals, icd)
-        ])
+        return narrative_for_extraction(
+            [(l["test"], l["value"], l["unit"], l["status"])
+             for l in (labs if labs is not None else [])],
+            [(v["vital"], v["value"]) for v in (vitals if vitals is not None else [])],
+            list(icd if icd is not None else []),
+        )
 
     from .oracles_sql import probe_expr
 
@@ -1227,61 +1215,46 @@ def q_media_decode(spark, sf_dir):
     Features are exact integer sums + one division, so the DuckDB oracle
     reproduces them in closed form — an end-to-end
     encode->decode->feature proof."""
-    import pandas as pd
+    import numpy as np
     from pyspark.sql.types import BinaryType
 
+    from .core.gif_codec import encode_gif
+    from .core.jpeg_codec import encode_jpeg
+    from .core.media_codecs import encode_ppm, encode_wav
+    from .core.png_codec import encode_png
     from .operators.multimodal import extract_media_features
 
-    # no type hints: 'pd.Series' annotations are unresolvable when pandas is
-    # imported function-locally (round-3 trap note)
-    @F.pandas_udf(BinaryType())
-    def synth_media(doc_ids):
-        # absolute import: resolves on executors under --py-files too
-        import numpy as np
-
-        from scrubah_pii_spark.core.gif_codec import encode_gif
-        from scrubah_pii_spark.core.jpeg_codec import encode_jpeg
-        from scrubah_pii_spark.core.media_codecs import encode_ppm, encode_wav
-        from scrubah_pii_spark.core.png_codec import encode_png
-
-        out = []
-        for did in doc_ids:
-            did = int(did)
-            if did % 5 == 0:
-                n = 64 + did % 32
-                samples = [(i * (did + 3) + 7) % 256 for i in range(n)]
-                out.append(encode_wav(samples, rate=8000, bits=8))
-            elif did % 5 == 1:
-                w = 2 + did % 6
-                raster = bytes((j + did) % 256 for j in range(w * 3 * 3))
-                out.append(encode_ppm(raster, w, 3))
-            elif did % 5 == 2:
-                img = np.empty((16, 16), dtype=np.uint8)
-                for b in range(4):
-                    v = (did * 17 + b * 29) % 256
-                    img[(b // 2) * 8 : (b // 2) * 8 + 8,
-                        (b % 2) * 8 : (b % 2) * 8 + 8] = v
-                out.append(encode_jpeg(img.tobytes(), 16, 16, quant_val=1))
-            elif did % 5 == 3:
-                raster = bytes((7 * j + did) % 256 for j in range(5 * 4 * 3))
-                # odd doc_ids Adam7-interlaced: lossless either way, same oracle
-                out.append(
-                    encode_png(raster, 5, 4, channels=3,
-                               interlace=bool(did % 2))
-                )
-            else:
-                w = 3 + did % 4
-                nc = 4 + did % 5
-                pal = bytes(
-                    (k * (11 + 2 * c) + did) % 256
-                    for k in range(nc)
-                    for c in range(3)
-                )
-                idx = bytes((j + did) % nc for j in range(w * 3))
-                out.append(
-                    encode_gif(idx, w, 3, pal, interlace=bool(did % 2))
-                )
-        return pd.Series(out)
+    @row_udf(BinaryType())
+    def synth_media(did):
+        did = int(did)
+        if did % 5 == 0:
+            n = 64 + did % 32
+            samples = [(i * (did + 3) + 7) % 256 for i in range(n)]
+            return encode_wav(samples, rate=8000, bits=8)
+        if did % 5 == 1:
+            w = 2 + did % 6
+            raster = bytes((j + did) % 256 for j in range(w * 3 * 3))
+            return encode_ppm(raster, w, 3)
+        if did % 5 == 2:
+            img = np.empty((16, 16), dtype=np.uint8)
+            for b in range(4):
+                v = (did * 17 + b * 29) % 256
+                img[(b // 2) * 8 : (b // 2) * 8 + 8,
+                    (b % 2) * 8 : (b % 2) * 8 + 8] = v
+            return encode_jpeg(img.tobytes(), 16, 16, quant_val=1)
+        if did % 5 == 3:
+            raster = bytes((7 * j + did) % 256 for j in range(5 * 4 * 3))
+            # odd doc_ids Adam7-interlaced: lossless either way, same oracle
+            return encode_png(raster, 5, 4, channels=3, interlace=bool(did % 2))
+        w = 3 + did % 4
+        nc = 4 + did % 5
+        pal = bytes(
+            (k * (11 + 2 * c) + did) % 256
+            for k in range(nc)
+            for c in range(3)
+        )
+        idx = bytes((j + did) % nc for j in range(w * 3))
+        return encode_gif(idx, w, 3, pal, interlace=bool(did % 2))
 
     docs = _spread(_docs(spark, sf_dir)).select("doc_id")
     out = extract_media_features(docs.withColumn("payload", synth_media("doc_id")))
@@ -1445,7 +1418,6 @@ def q_yaml_sink(spark, sf_dir):
     CompressedTimeline YAML document per user over the events table, exact
     builder layout; metadata derived deterministically from the event count,
     generatedAt fixed (the reference stamps new Date())."""
-    import pandas as pd
     from pyspark.sql.types import StringType
 
     from .core.yaml_sink import generate_yaml
@@ -1468,34 +1440,30 @@ def q_yaml_sink(spark, sf_dir):
         F.max("ts").alias("mx"),
     )
 
-    @F.pandas_udf(StringType())
-    def yaml_udf(uids, evss, ns, mns, mxs):
-        outs = []
-        for uid, evs, n, mn, mx in zip(uids, evss, ns, mns, mxs):
-            events = [
-                (e["event_id"], str(e["ts"])[:10], e["event_type"],
-                 f"doc-{e['event_id']}", 1)
-                for e in evs
-            ]
-            duration = int((mx - mn).total_seconds() // 86400)
-            outs.append(generate_yaml(
-                patient_id=uid,
-                age_at_first_visit=int(20 + uid % 60),
-                date_start_iso=str(mn)[:10],
-                date_end_iso=str(mx)[:10],
-                duration_days=duration,
-                total_documents=int(n),
-                total_events=int(n),
-                events=events,
-                original_size_kb=n * 0.2,
-                compressed_size_kb=n * 0.1,
-                ratio=0.5,
-                events_total=int(n),
-                events_included=int(n),
-                deduplication="exact",
-                generated_at_iso=YAML_GENERATED_AT,
-            ))
-        return pd.Series(outs)
+    @row_udf(StringType())
+    def yaml_udf(uid, evs, n, mn, mx):
+        events = [
+            (e["event_id"], str(e["ts"])[:10], e["event_type"],
+             f"doc-{e['event_id']}", 1)
+            for e in evs
+        ]
+        return generate_yaml(
+            patient_id=uid,
+            age_at_first_visit=int(20 + uid % 60),
+            date_start_iso=str(mn)[:10],
+            date_end_iso=str(mx)[:10],
+            duration_days=int((mx - mn).total_seconds() // 86400),
+            total_documents=int(n),
+            total_events=int(n),
+            events=events,
+            original_size_kb=n * 0.2,
+            compressed_size_kb=n * 0.1,
+            ratio=0.5,
+            events_total=int(n),
+            events_included=int(n),
+            deduplication="exact",
+            generated_at_iso=YAML_GENERATED_AT,
+        )
 
     return agg.select(
         "user_id", yaml_udf("user_id", "evs", "n", "mn", "mx").alias("yaml")
@@ -1507,7 +1475,6 @@ def q_timeline_report(spark, sf_dir):
     user over events — the reference's flagship corpus output. The per-user
     report string is built by operators.report.timeline_markdown inside an
     Arrow-grouped UDF."""
-    import pandas as pd
     from pyspark.sql.types import StringType
 
     from .operators.report import timeline_markdown
@@ -1526,28 +1493,25 @@ def q_timeline_report(spark, sf_dir):
 
     FMT = "%Y-%m-%d %H:%M:%S.%f"
 
-    @F.pandas_udf(StringType())
-    def report_udf(ns, mns, mxs, evss):
-        outs = []
-        for n, mn, mx, evs in zip(ns, mns, mxs, evss):
-            summary = {
-                "total_documents": int(n),
-                "duplicates": 0,
-                "date_start": mn.strftime(FMT),
-                "date_end": mx.strftime(FMT),
+    @row_udf(StringType())
+    def report_udf(n, mn, mx, evs):
+        summary = {
+            "total_documents": int(n),
+            "duplicates": 0,
+            "date_start": mn.strftime(FMT),
+            "date_end": mx.strftime(FMT),
+        }
+        docs = [
+            {
+                "document_number": i + 1,
+                "url": f"doc-{e['event_id']}",
+                "doc_type": e["event_type"],
+                "warc_ts": e["ts"].strftime(FMT),
+                "scrubbed_text": f"value: {e['value']}",
             }
-            docs = [
-                {
-                    "document_number": i + 1,
-                    "url": f"doc-{e['event_id']}",
-                    "doc_type": e["event_type"],
-                    "warc_ts": e["ts"].strftime(FMT),
-                    "scrubbed_text": f"value: {e['value']}",
-                }
-                for i, e in enumerate(evs)
-            ]
-            outs.append(timeline_markdown(summary, docs))
-        return pd.Series(outs)
+            for i, e in enumerate(evs)
+        ]
+        return timeline_markdown(summary, docs)
 
     return agg.select(
         "user_id", report_udf("n", "mn", "mx", "evs").alias("report")

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -28,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.scrub import scrub_text_audited
+from .row_udf import row_udf
 
 AUDIT_TYPE = StructType([
     StructField("entries", ArrayType(StructType([
@@ -50,40 +50,29 @@ def _js_round(x: float, decimals: int) -> float:
     return math.floor(x * k + 0.5) / k
 
 
-@F.pandas_udf(AUDIT_TYPE)
-def scrub_audit_udf(texts):  # no annotations: future-annotations trap
-    rows = {k: [] for k in (
-        "entries", "total_detections", "pii_chars_removed",
-        "pii_density_percent", "size_change_bytes", "avg_pii_length",
-        "original_size", "scrubbed_size",
-    )}
-    for t in texts:
-        text = t if t is not None else ""
-        out, audit = scrub_text_audited(text)
-        pii_chars = sum(len(orig) for orig in out.replacements)
-        total = out.count
-        orig_size, scrub_size = len(text), len(out.text)
-        rows["entries"].append([
-            {"pattern_type": n, "match_count": c, "duration_ms": ms}
-            for n, c, ms in audit
-        ])
-        rows["total_detections"].append(total)
-        rows["pii_chars_removed"].append(pii_chars)
-        rows["pii_density_percent"].append(
-            _js_round(pii_chars / orig_size * 100, 2) if orig_size > 0 else 0.0
-        )
-        rows["size_change_bytes"].append(scrub_size - orig_size)
-        rows["avg_pii_length"].append(
-            _js_round(pii_chars / total, 1) if total > 0 else 0.0
-        )
-        rows["original_size"].append(orig_size)
-        rows["scrubbed_size"].append(scrub_size)
-    return pd.DataFrame(rows)
+@row_udf(AUDIT_TYPE)
+def scrub_audit_udf(text):
+    text = text if text is not None else ""
+    out, audit = scrub_text_audited(text)
+    pii_chars = sum(len(orig) for orig in out.replacements)
+    total = out.count
+    orig_size, scrub_size = len(text), len(out.text)
+    return (
+        [{"pattern_type": n, "match_count": c, "duration_ms": ms} for n, c, ms in audit],
+        total,
+        pii_chars,
+        _js_round(pii_chars / orig_size * 100, 2) if orig_size > 0 else 0.0,
+        scrub_size - orig_size,
+        _js_round(pii_chars / total, 1) if total > 0 else 0.0,
+        orig_size,
+        scrub_size,
+    )
 
 
 def scrub_audit(df: DataFrame, text_col: str) -> DataFrame:
     """Adds the audit struct columns to df."""
-    out = df.withColumn("_a", scrub_audit_udf(F.col(text_col)))
-    for f in AUDIT_TYPE.fields:
-        out = out.withColumn(f.name, F.col(f"_a.{f.name}"))
-    return out.drop("_a")
+    return (
+        df.withColumn("_a", scrub_audit_udf(F.col(text_col)))
+        .withColumns({name: F.col(f"_a.{name}") for name in AUDIT_TYPE.fieldNames()})
+        .drop("_a")
+    )

@@ -32,6 +32,7 @@ from ..functions.hashing_expr import (
     simhash_band_expr,
     simhash_similarity_expr,
 )
+from .row_udf import row_udf
 from .similarity import block_pairs
 
 # Verdict tiers of contentHasher.effect.ts:240-301: near-duplicate at
@@ -467,7 +468,7 @@ MINHASH_SHINGLE_LEN = 3
 # shingle -> 60-bit id memo: md5 of a shingle is a pure function and shingles
 # repeat massively across documents of a real corpus; module-level so a
 # reused Python worker keeps it across batches and tasks (cleared past ~1M
-# entries inside the UDF loop)
+# entries inside the UDF)
 _shingle_memo: dict = {}
 
 
@@ -490,50 +491,41 @@ def add_minhash_signature(
     numpy inside a pandas UDF: per doc one (k x n_shingles) affine map + min
     reduction — ~50x faster than the equivalent aggregate() expression tree."""
     import hashlib as _hashlib
+    import re as _re
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
 
     params = _minhash_params(k)
     shingle_len = MINHASH_SHINGLE_LEN
-    a_vec = [a for a, _ in params]
-    b_vec = [b for _, b in params]
+    a_arr = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    b_arr = np.array([b for _, b in params], dtype=np.int64)[:, None]
+    ws = _re.compile(r"\s+")
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_udf(texts):
-        import re as _re
-
-        a_arr = np.array(a_vec, dtype=np.int64)[:, None]
-        b_arr = np.array(b_vec, dtype=np.int64)[:, None]
-        ws = _re.compile(r"\s+")
-        memo = _shingle_memo  # per-batch alias of the worker-level dict
-        out = []
-        for t in texts:
-            words = [w for w in ws.split((t or "").lower()) if w]
-            if len(words) >= shingle_len:
-                shingles = {
-                    " ".join(words[i : i + shingle_len])
-                    for i in range(len(words) - shingle_len + 1)
-                }
-            elif words:
-                shingles = {" ".join(words)}
-            else:
-                out.append([_P32] * k)
-                continue
-            if len(memo) > 1_000_000:
-                memo.clear()
-            ids = []
-            for s in shingles:
-                h = memo.get(s)
-                if h is None:
-                    h = int(_hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                    memo[s] = h
-                ids.append(h)
-            x = np.array(ids, dtype=np.int64)[None, :]
-            sig = ((x % _P32) * a_arr + b_arr) % _P32
-            out.append(sig.min(axis=1).tolist())
-        return pd.Series(out)
+    @row_udf(ArrayType(LongType()))
+    def minhash_udf(text):
+        words = [w for w in ws.split((text or "").lower()) if w]
+        if len(words) >= shingle_len:
+            shingles = {
+                " ".join(words[i : i + shingle_len])
+                for i in range(len(words) - shingle_len + 1)
+            }
+        elif words:
+            shingles = {" ".join(words)}
+        else:
+            return [_P32] * k
+        if len(_shingle_memo) > 1_000_000:
+            _shingle_memo.clear()
+        ids = []
+        for s in shingles:
+            h = _shingle_memo.get(s)
+            if h is None:
+                h = int(_hashlib.md5(s.encode()).hexdigest()[:15], 16)
+                _shingle_memo[s] = h
+            ids.append(h)
+        x = np.array(ids, dtype=np.int64)[None, :]
+        sig = ((x % _P32) * a_arr + b_arr) % _P32
+        return sig.min(axis=1).tolist()
 
     return df.withColumn("minhash", minhash_udf(F.col(text_col)))
 

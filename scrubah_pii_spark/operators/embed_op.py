@@ -14,10 +14,11 @@ import hashlib
 import math
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
+
+from .row_udf import row_udf
 
 _WS_RE = re.compile(r"\s+")
 
@@ -94,8 +95,8 @@ def embed_document(text: str, model_name: str | None = None) -> list:
 
 
 def add_embeddings(df: DataFrame, text_col: str) -> DataFrame:
-    @F.pandas_udf(ArrayType(FloatType()))
-    def embed_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([embed_document(t or "") for t in texts])
+    @row_udf(ArrayType(FloatType()))
+    def embed_udf(text):
+        return embed_document(text or "")
 
     return df.withColumn("embedding", embed_udf(F.col(text_col)))

@@ -4,7 +4,6 @@ structuredExtraction.ts semantics via core.extraction)."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -16,15 +15,18 @@ from pyspark.sql.types import (
 )
 
 from ..core.extraction import extract_labs, extract_record
+from .row_udf import row_udf
+
+LABS_TYPE = ArrayType(StructType([
+    StructField("test", StringType()),
+    StructField("value", DoubleType()),
+    StructField("unit", StringType()),
+    StructField("status", StringType()),
+]))
 
 EXTRACTION_TYPE = StructType(
     [
-        StructField("labs", ArrayType(StructType([
-            StructField("test", StringType()),
-            StructField("value", DoubleType()),
-            StructField("unit", StringType()),
-            StructField("status", StringType()),
-        ]))),
+        StructField("labs", LABS_TYPE),
         StructField("vitals", ArrayType(StructType([
             StructField("vital", StringType()),
             StructField("value", DoubleType()),
@@ -36,46 +38,29 @@ EXTRACTION_TYPE = StructType(
 )
 
 
-@F.pandas_udf(EXTRACTION_TYPE)
-def extract_record_udf(texts: pd.Series) -> pd.DataFrame:
-    outs = [extract_record(t or "") for t in texts]
-    return pd.DataFrame(
-        {
-            "labs": [
-                [{"test": t, "value": v, "unit": u, "status": s} for t, v, u, s in o.labs]
-                for o in outs
-            ],
-            "vitals": [
-                [{"vital": n, "value": v} for n, v in o.vitals] for o in outs
-            ],
-            "icd10_codes": [o.icd10_codes for o in outs],
-            "modalities": [o.modalities for o in outs],
-            "abnormal_flags": [o.abnormal_flags for o in outs],
-        }
+def _lab_rows(labs):
+    return [{"test": t, "value": v, "unit": u, "status": s} for t, v, u, s in labs]
+
+
+@row_udf(EXTRACTION_TYPE)
+def extract_record_udf(text):
+    o = extract_record(text or "")
+    return (
+        _lab_rows(o.labs),
+        [{"vital": n, "value": v} for n, v in o.vitals],
+        o.icd10_codes,
+        o.modalities,
+        o.abnormal_flags,
     )
 
 
-LABS_TYPE = ArrayType(StructType([
-    StructField("test", StringType()),
-    StructField("value", DoubleType()),
-    StructField("unit", StringType()),
-    StructField("status", StringType()),
-]))
-
-
-@F.pandas_udf(LABS_TYPE)
-def _extract_labs_udf_det(texts: pd.Series) -> pd.Series:
+@row_udf(LABS_TYPE)
+def _extract_labs_udf_det(text):
     """Labs-only kernel (UDF-level column pruning): lab consumers skip the
     vitals/ICD-10/modality/abnormal regex passes AND their Arrow transfer —
     Catalyst prunes columns, not work inside a Python kernel. Same patterns
     and tuples as extract_record (core/extraction.py extract_labs)."""
-    return pd.Series([
-        [
-            {"test": t, "value": v, "unit": u, "status": s}
-            for t, v, u, s in extract_labs(txt or "")
-        ]
-        for txt in texts
-    ])
+    return _lab_rows(extract_labs(text or ""))
 
 
 # Non-deterministic marking (guide §4.4): the explode() downstream of this
@@ -91,11 +76,7 @@ extract_labs_udf = _extract_labs_udf_det.asNondeterministic()
 def add_extraction(df: DataFrame, text_col: str) -> DataFrame:
     return (
         df.withColumn("_ex", extract_record_udf(F.col(text_col)))
-        .withColumn("labs", F.col("_ex.labs"))
-        .withColumn("vitals", F.col("_ex.vitals"))
-        .withColumn("icd10_codes", F.col("_ex.icd10_codes"))
-        .withColumn("modalities", F.col("_ex.modalities"))
-        .withColumn("abnormal_flags", F.col("_ex.abnormal_flags"))
+        .withColumns({name: F.col(f"_ex.{name}") for name in EXTRACTION_TYPE.fieldNames()})
         .drop("_ex")
     )
 

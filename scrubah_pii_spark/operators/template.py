@@ -19,7 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from ..core.hashing import classify_template_type
+from .row_udf import row_udf
 from .scrub_op import fnv1a64_udf
 
 # compressionPipeline.effect.ts:141-183: a line is a template iff it is in
@@ -231,7 +234,7 @@ def _ngram_corpus_raw(df, text_col, threshold_frac, min_docs, fingerprints):
     )
     return (
         corpus.withColumn("position", pos_expr)
-        .withColumn("template_type", _classify_type_udf()("sample", "position"))
+        .withColumn("template_type", classify_udf("sample", "position"))
         .drop("_avg_lines")
     )
 
@@ -295,10 +298,7 @@ def strip_ngram_templates(
     covered-line bitmap, one anti-join for unique lines — no pair joins, no
     driver loops; the per-doc ref dedup is a sequential scan over each doc's
     tiny match list inside an Arrow-batched UDF."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, IntegerType, StringType, StructField, StructType,
-    )
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
     fps = (
         fingerprints
@@ -321,29 +321,26 @@ def strip_ngram_templates(
         StructField("line_end", IntegerType()),
     ]))
 
-    @F.pandas_udf(ref_type)
-    def dedup_refs_udf(ref_lists):  # no annotations: future-annotations trap
-        out = []
-        for refs in ref_lists:
-            # deterministic stand-in for the reference's input-order tie
-            # break: line_start asc, larger span first, template_id
-            rs = sorted(
-                refs,
-                key=lambda r: (r["line_start"], -r["line_end"], r["template_id"]),
-            )
-            kept = []
-            for r in rs:
-                if kept and r["line_start"] <= kept[-1]["line_end"]:
-                    if r["line_end"] > kept[-1]["line_end"]:
-                        kept[-1] = r
-                else:
-                    kept.append(r)
-            out.append([
-                {"template_id": r["template_id"],
-                 "line_start": int(r["line_start"]),
-                 "line_end": int(r["line_end"])} for r in kept
-            ])
-        return pd.Series(out)
+    @row_udf(ref_type)
+    def dedup_refs_udf(refs):
+        # deterministic stand-in for the reference's input-order tie
+        # break: line_start asc, larger span first, template_id
+        rs = sorted(
+            refs,
+            key=lambda r: (r["line_start"], -r["line_end"], r["template_id"]),
+        )
+        kept = []
+        for r in rs:
+            if kept and r["line_start"] <= kept[-1]["line_end"]:
+                if r["line_end"] > kept[-1]["line_end"]:
+                    kept[-1] = r
+            else:
+                kept.append(r)
+        return [
+            {"template_id": r["template_id"],
+             "line_start": int(r["line_start"]),
+             "line_end": int(r["line_end"])} for r in kept
+        ]
 
     # ONE per-url fold produces BOTH the overlap-deduped refs and the
     # covered-line set (round 8): the previous shape spent three exchanges —
@@ -407,19 +404,8 @@ def strip_ngram_templates(
     return out
 
 
-def _classify_type_udf():
-    """Arrow UDF for the template-type classifier (templateDetection.ts:
-    188-249) used by the in-plan corpus build."""
-    import pandas as pd
-    from pyspark.sql.types import StringType
-
-    from ..core.hashing import classify_template_type
-
-    @F.pandas_udf(StringType())
-    def classify_udf(samples, positions):
-        return pd.Series([
-            classify_template_type(s or "", p or "MIDDLE")
-            for s, p in zip(samples, positions)
-        ])
-
-    return classify_udf
+@row_udf(StringType())
+def classify_udf(sample, position):
+    """The template-type classifier (templateDetection.ts:188-249) used by
+    the in-plan corpus build."""
+    return classify_template_type(sample or "", position or "MIDDLE")

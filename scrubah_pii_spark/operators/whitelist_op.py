@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .row_udf import row_udf
+
 _LAB_RESULT = StructType([
     StructField("test_name", StringType()),
     StructField("value", StringType()),
@@ -85,48 +87,26 @@ RECORD_SCHEMA = StructType([
 ])
 
 
-def make_whitelist_udf(as_of_date: str = "2026-01-01"):
-    """Arrow-batched (text, filename) -> ExtractedMedicalRecord struct."""
-    import pandas as pd
-
-    @F.pandas_udf(RECORD_SCHEMA)
-    def whitelist_udf(texts, filenames):
-        from ..core.whitelist import extract_medical_data, simple_hash_hex
-
-        rows = []
-        for text, filename in zip(texts, filenames):
-            t = text or ""
-            rec = extract_medical_data(
-                t, filename or "", simple_hash_hex(t), as_of_date
-            )
-            rows.append({
-                "source_document_hash": rec.source_document_hash,
-                "document_type": rec.document_type,
-                "document_date": rec.document_date,
-                "extraction_confidence": rec.extraction_confidence,
-                "diagnoses": rec.diagnoses,
-                "lab_panels": rec.lab_panels,
-                "medications": rec.medications,
-                "imaging_findings": rec.imaging_findings,
-                "vital_signs": rec.vital_signs,
-                "pathology": rec.pathology,
-                "warnings": rec.warnings,
-            })
-        return pd.DataFrame(rows)
-
-    return whitelist_udf
-
-
 def add_whitelist_extraction(
     df: DataFrame,
     text_col: str = "text",
     filename_col: str | None = None,
     as_of_date: str = "2026-01-01",
 ) -> DataFrame:
-    """Adds a `medical_record` nested-struct column (whitelist extraction)."""
+    """Adds a `medical_record` nested-struct column (whitelist extraction):
+    an Arrow-batched (text, filename) -> ExtractedMedicalRecord struct."""
+    from ..core.whitelist import extract_medical_data, simple_hash_hex
+
+    names = RECORD_SCHEMA.fieldNames()
+
+    @row_udf(RECORD_SCHEMA)
+    def whitelist_udf(text, filename):
+        t = text or ""
+        rec = extract_medical_data(t, filename or "", simple_hash_hex(t), as_of_date)
+        return tuple(getattr(rec, name) for name in names)
+
     fn = F.col(filename_col) if filename_col else F.lit("")
-    udf = make_whitelist_udf(as_of_date)
-    return df.withColumn("medical_record", udf(F.col(text_col), fn))
+    return df.withColumn("medical_record", whitelist_udf(F.col(text_col), fn))
 
 
 def whitelist_timeline_v2(

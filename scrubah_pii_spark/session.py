@@ -25,12 +25,13 @@ Scale posture (100 TB / 1000 executors) is set here once:
     once with the JDK's javac into a directory named by its content hash,
     under .jvm_classes/ in the engine's root, and added to the driver and
     executor class paths. Checksums, .crc files and FileSystem.getLocal stay
-    as stock. The stock LocalFileSystem stays where the class may not load:
-    no javac, a master whose executors may run on other machines (only local
+    as stock. The stock filesystem stays where the class may not load: no
+    javac, a master whose executors may run on other machines (only local
     and local-cluster use it), or a driver JVM that started without that
     directory on its class path, as spark-submit's does (local_fs_conf). For
     a local or local-cluster master that fallback is a warning that names
-    its reason.
+    its reason, and Hadoop's LocalFileSystem (HADOOP_LOCAL_FS_CLASS), so
+    rename has the same POSIX semantics on both paths.
 """
 
 from __future__ import annotations
@@ -61,6 +62,11 @@ PYTHON_DAEMON_MODULE = "scrubah_pii_spark.pyworker"
 # spark.hadoop.fs.file.impl: LocalFileSystem over a RawLocalFileSystem whose
 # setPermission calls Files.setPosixFilePermissions instead of forking chmod.
 LOCAL_FS_CLASS = "scrubah_pii_spark.jvm.PosixLocalFileSystem"
+# The fallback for a local master. Left unset, the "file" scheme is whichever
+# class its service entries name first: in a Spark build with Hive, Hive's
+# ProxyLocalFileSystem, whose rename onto an existing file returns false
+# where LocalFileSystem (and LOCAL_FS_CLASS) replaces it.
+HADOOP_LOCAL_FS_CLASS = "org.apache.hadoop.fs.LocalFileSystem"
 # A javac that has not finished by then (~2.5 s is usual) leaves the session
 # on the stock filesystem instead of holding up its start.
 _JAVAC_TIMEOUT_S = 60
@@ -122,10 +128,11 @@ def _local_fs_classes() -> tuple[str | None, str]:
 
 def _stock_filesystem(conf: dict, reason: str) -> dict:
     warnings.warn(
-        f"{conf['spark.master']}: keeping Hadoop's stock local filesystem, so "
-        f"every file:// write forks a chmod per file ({reason})",
+        f"{conf['spark.master']}: keeping Hadoop's stock local filesystem "
+        f"({HADOOP_LOCAL_FS_CLASS}), so every file:// write forks a chmod per "
+        f"file ({reason})",
         stacklevel=3)
-    return conf
+    return {"spark.hadoop.fs.file.impl": HADOOP_LOCAL_FS_CLASS, **conf}
 
 
 # Masters whose executors run on this machine and so find the class directory
@@ -161,10 +168,11 @@ def local_fs_conf(conf: dict) -> dict:
     The driver's class path is fixed when its JVM starts, so this starts the
     gateway JVM with those class paths, or joins the one already running (a
     session built earlier in this process, or spark-submit's JVM), and reads
-    its class path. conf comes back unchanged when the class cannot load: a
-    master other than local or local-cluster; or, with a warning that names
-    the reason, no javac, a failed compile or a running JVM without the
-    directory."""
+    its class path. conf comes back unchanged for a master other than local
+    or local-cluster. When the class cannot load for a local master (no
+    javac, a failed compile or a running JVM without the directory), it
+    warns with the reason and sets spark.hadoop.fs.file.impl to
+    HADOOP_LOCAL_FS_CLASS (a caller's value still wins)."""
     if not _LOCAL_MASTER.fullmatch(conf.get("spark.master", "")):
         return conf
     classes, missing = _local_fs_classes()

@@ -3,7 +3,9 @@ the JVM. Without libhadoop, stock RawLocalFileSystem forks a chmod for every
 file, .crc file and directory a write creates. The engine's filesystem must
 leave the same modes and .crc files as stock Hadoop, fork nothing, and stay
 a LocalFileSystem. Where it cannot load, the session keeps the stock
-filesystem and, for a local master, warns with the reason."""
+filesystem and, for a local master, warns with the reason and names Hadoop's
+LocalFileSystem, whose rename replaces an existing file as the engine's
+does."""
 
 import os
 import re
@@ -159,24 +161,39 @@ def _run(cmd, cwd, env=None):
 # local_fs_conf's fallback warning: the running JVM lacks the class
 # directory (or, on a host without a JDK, there is no javac)
 _STOCK_FS_WARNING = r"keeping Hadoop's stock local filesystem.*(class path lacks|no javac)"
+HADOOP_LOCAL_FS = "org.apache.hadoop.fs.LocalFileSystem"
+
+
+def _rename_report(tmp_path):
+    """A report expression for _WRITE_SCRIPT: the session's local
+    filesystem renames file 'src' onto the existing file 'dst'; it prints
+    rename's result."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.write_text("new")
+    dst.write_text("old")
+    path = "spark._jvm.org.apache.hadoop.fs.Path"
+    return f"local.rename({path}({str(src)!r}), {path}({str(dst)!r}))"
 
 
 # A gateway JVM started before build_session has a fixed class path without
-# the engine's class directory: the session must keep the stock filesystem,
-# which is whichever LocalFileSystem the "file" scheme's service entries name
-# (in a Spark build with Hive, Hive's ProxyLocalFileSystem).
+# the engine's class directory: the session must fall back to Hadoop's
+# LocalFileSystem, not to whichever class the "file" scheme's service entries
+# name first (in a Spark build with Hive, Hive's ProxyLocalFileSystem, whose
+# rename onto an existing file returns false).
 _GATEWAY_FIRST = """
 from pyspark.sql import SparkSession
 SparkSession.builder.master("local[1]").config("spark.driver.memory", "1g").getOrCreate().stop()
 from scrubah_pii_spark.session import local_fs_conf
-assert local_fs_conf({"spark.master": "local[1]"}) == {"spark.master": "local[1]"}
-"""
+assert local_fs_conf({"spark.master": "local[1]"}) == {
+    "spark.master": "local[1]", "spark.hadoop.fs.file.impl": %r}
+""" % HADOOP_LOCAL_FS
 
 
 def test_gateway_started_first_keeps_stock_filesystem(tmp_path):
-    script = _write_script(tmp_path, prefix=_GATEWAY_FIRST)
+    script = _write_script(tmp_path, prefix=_GATEWAY_FIRST, report=_rename_report(tmp_path))
     out, err = _run([sys.executable, "-c", script], tmp_path)
-    assert out == ["None", "False", "4"]
+    assert out == [HADOOP_LOCAL_FS, "False", "4", "True"]
+    assert (tmp_path / "dst").read_text() == "new"
     assert re.search(_STOCK_FS_WARNING, err), err[-3000:]
 
 
@@ -184,11 +201,12 @@ def test_spark_submit_keeps_stock_filesystem(tmp_path):
     # spark-submit starts the driver JVM, without the class directory, before
     # the job's Python code runs, and hands it over through PYSPARK_GATEWAY_PORT
     job = tmp_path / "job.py"
-    job.write_text(_write_script(tmp_path))
+    job.write_text(_write_script(tmp_path, report=_rename_report(tmp_path)))
     submit = os.path.join(_find_spark_home(), "bin", "spark-submit")
     out, err = _run([submit, "--master", "local[1]", "--driver-memory", "1g", str(job)], tmp_path,
                     {"PYSPARK_PYTHON": sys.executable, "PYSPARK_DRIVER_PYTHON": sys.executable})
-    assert out == ["None", "False", "4"]
+    assert out == [HADOOP_LOCAL_FS, "False", "4", "True"]
+    assert (tmp_path / "dst").read_text() == "new"
     assert re.search(_STOCK_FS_WARNING, err), err[-3000:]
 
 
@@ -232,7 +250,7 @@ def test_only_local_masters_use_engine_filesystem(recwarn):
     assert not [w for w in recwarn if "stock local filesystem" in str(w.message)]
 
 
-def test_no_javac_warns_and_keeps_stock_filesystem(tmp_path, monkeypatch):
+def test_no_javac_warns_and_keeps_stock_filesystem(spark, tmp_path, monkeypatch):
     from scrubah_pii_spark import session
 
     monkeypatch.setattr(session, "_JVM_CLASSES_DIR", str(tmp_path / "classes"))
@@ -240,7 +258,30 @@ def test_no_javac_warns_and_keeps_stock_filesystem(tmp_path, monkeypatch):
     monkeypatch.setenv("PATH", str(tmp_path / "no_bin"))
     conf = {"spark.master": "local[2]"}
     with pytest.warns(UserWarning, match="stock local filesystem.*no javac"):
-        assert session.local_fs_conf(conf) == conf
+        fallback = session.local_fs_conf(conf)
+    assert fallback == {**conf, "spark.hadoop.fs.file.impl": HADOOP_LOCAL_FS}
+    # a caller's class still wins
+    mine = {**conf, "spark.hadoop.fs.file.impl": "my.FileSystem"}
+    with pytest.warns(UserWarning, match="stock local filesystem.*no javac"):
+        assert session.local_fs_conf(mine) == mine
+
+    # the fallback class renames onto an existing file by replacing it
+    jvm = spark._jvm
+    hadoop_conf = jvm.org.apache.hadoop.conf.Configuration(
+        spark.sparkContext._jsc.hadoopConfiguration())
+    hadoop_conf.set("fs.file.impl", fallback["spark.hadoop.fs.file.impl"])
+    fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(jvm.java.net.URI("file:///"), hadoop_conf)
+    try:
+        assert fs.getClass().getName() == HADOOP_LOCAL_FS
+        src, dst = tmp_path / "src", tmp_path / "dst"
+        src.write_text("new")
+        dst.write_text("old")
+        path = jvm.org.apache.hadoop.fs.Path
+        assert fs.rename(path(str(src)), path(str(dst)))
+    finally:
+        fs.close()
+    assert dst.read_text() == "new"
+    assert not src.exists()
 
 
 @needs_javac
@@ -253,7 +294,7 @@ def test_failed_compile_warns_and_keeps_stock_filesystem(tmp_path, monkeypatch):
     monkeypatch.setattr(session, "_JVM_CLASSES_DIR", str(tmp_path / "classes"))
     conf = {"spark.master": "local-cluster[1,1,1024]"}
     with pytest.warns(UserWarning, match="stock local filesystem.*javac failed"):
-        assert session.local_fs_conf(conf) == conf
+        assert session.local_fs_conf(conf) == {**conf, "spark.hadoop.fs.file.impl": HADOOP_LOCAL_FS}
     assert os.listdir(tmp_path / "classes") == []
 
 

@@ -74,8 +74,9 @@ def spark_round(x: float | None, scale: int = 6) -> float | None:
 
 def label_docs(rows):
     """Per-doc half: langid -> quality -> gated scrub -> simhash ->
-    relevance (_doc_features_batch semantics, restated from the stage spec;
-    kernels are the shared byte-gated cores)."""
+    relevance (operators/scrub_op.make_doc_features_extract_udf semantics,
+    restated from the stage spec; kernels are the shared byte-gated
+    cores)."""
     out = []
     for doc_id, text, _lang in rows:
         url = f"doc://{doc_id}"
