@@ -466,9 +466,9 @@ MINHASH_BANDS = 8
 MINHASH_SHINGLE_LEN = 3
 
 # shingle -> 60-bit id memo: md5 of a shingle is a pure function and shingles
-# repeat massively across documents of a real corpus; module-level so a
-# reused Python worker keeps it across batches and tasks (cleared past ~1M
-# entries inside the UDF)
+# repeat massively across documents of a real corpus (cleared past ~1M
+# entries inside the UDF). The UDF is pickled by value and carries its own
+# copy of this dict, so a memo lasts one task, not the Python worker.
 _shingle_memo: dict = {}
 
 
